@@ -188,16 +188,18 @@ object Sources {
 
   private def manifestPath(versionDir: Path) = new Path(versionDir, "_MANIFEST.json")
 
+  /** One open per manifest (no exists/getFileStatus probes first: on an
+    * object store each is a round trip); a missing file is a pre-manifest
+    * legacy version, whose data sits at the dir root. */
   private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
       versionDir: Path): Option[Manifest] = {
-    val p = manifestPath(versionDir)
-    if (!fs.exists(p)) None // pre-manifest legacy version: data at dir root
-    else {
-      val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(0L, bytes) finally in.close()
-      Some(org.json4s.jackson.Serialization.read[Manifest](
-        new String(bytes, java.nio.charset.StandardCharsets.UTF_8)))
+    val opened =
+      try Some(fs.open(manifestPath(versionDir)))
+      catch { case _: java.io.FileNotFoundException => None }
+    opened.map { in =>
+      val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
+      org.json4s.jackson.Serialization.read[Manifest](
+        new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
     }
   }
 
@@ -363,13 +365,13 @@ object Sources {
     case (_, other) => other.toString
   }
 
-  /** Min/max per (bucket, eligible column) of a just-written version data
-    * dir, derived from the PARQUET FOOTERS the write already produced —
-    * driver-side metadata reads only, no second pass over the data (the
-    * same place Iceberg/Delta manifests get their file stats). Bounded by
-    * touched buckets × files per bucket; a compaction over thousands of
-    * buckets would parallelize the footer loop, a micro-batch touches a
-    * handful.
+  /** Min/max per (bucket, eligible column) of a just-written version's
+    * bucket dirs (as [[writeBuckets]] listed them), derived from the
+    * PARQUET FOOTERS the write already produced — driver-side metadata
+    * reads only, no second pass over the data (the same place
+    * Iceberg/Delta manifests get their file stats). One footer per written
+    * bucket; a compaction over thousands of buckets would parallelize the
+    * footer loop, a micro-batch touches a handful.
     *
     * Soundness rules (pruning must never skip a matching row; "unknown"
     * — no entry — is always safe):
@@ -383,26 +385,25 @@ object Sources {
     *    planes are involved (also covers truncated-bound increments that
     *    decode to replacement chars). */
   private def bucketStats(fs: org.apache.hadoop.fs.FileSystem,
-      conf: org.apache.hadoop.conf.Configuration, dataDir: Path,
+      conf: org.apache.hadoop.conf.Configuration,
+      bucketDirs: Seq[org.apache.hadoop.fs.FileStatus],
       schema: StructType): Map[String, Map[String, ColStat]] = {
     val fields = schema.fields.filter(f => statsEligible(f.dataType)).toSeq
     if (fields.isEmpty) return Map.empty
     val byLower = fields.map(f => f.name.toLowerCase -> f).toMap
-    fs.listStatus(dataDir)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gb="))
-      .map { bdir =>
-        val acc = scala.collection.mutable.Map[String, StatAcc](
-          fields.map(f => f.name.toLowerCase -> (Some((None, None)): StatAcc)): _*)
-        fs.listStatus(bdir.getPath)
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .foreach { st =>
-            footerColStats(st, conf, fields).foreach { case (k, fileAcc) =>
-              acc(k) = mergeStatAcc(byLower(k).dataType, acc(k), fileAcc)
-            }
+    bucketDirs.map { bdir =>
+      val acc = scala.collection.mutable.Map[String, StatAcc](
+        fields.map(f => f.name.toLowerCase -> (Some((None, None)): StatAcc)): _*)
+      fs.listStatus(bdir.getPath)
+        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+        .foreach { st =>
+          footerColStats(st, conf, fields).foreach { case (k, fileAcc) =>
+            acc(k) = mergeStatAcc(byLower(k).dataType, acc(k), fileAcc)
           }
-        bdir.getPath.getName.stripPrefix("gb=") ->
-          acc.toMap.collect { case (k, Some((mn, mx))) => k -> ColStat(mn, mx) }
-      }.toMap
+        }
+      bdir.getPath.getName.stripPrefix("gb=") ->
+        acc.toMap.collect { case (k, Some((mn, mx))) => k -> ColStat(mn, mx) }
+    }.toMap
   }
 
   /** Per-column footer-stats accumulator, three-state: `None` = unknown
@@ -628,11 +629,22 @@ object Sources {
     // the documented writer slot (upsert XOR compact), ENFORCED: version
     // allocation has no CAS, so two concurrent writers would both take vN
     Lease.withLease(batch.sparkSession, path, "upsert") {
-      upsertBody(batch, keys, path, numBuckets)
+      upsertBody(batch, keys, path, numBuckets, skipEmpty = false)
+    }
+
+  /** [[upsert]] for a sink whose idle micro-batches must commit nothing
+    * ([[graft.streaming.Correlate.serve]]): a batch with no rows leaves the
+    * table at its current version. Emptiness is read off the touched-bucket
+    * set upsert computes anyway, so the batch is still evaluated exactly
+    * once (no separate emptiness job, no cache). */
+  private[graft] def upsertUnlessEmpty(batch: DataFrame, keys: Seq[String],
+      path: String): Unit =
+    Lease.withLease(batch.sparkSession, path, "upsert") {
+      upsertBody(batch, keys, path, DefaultBuckets, skipEmpty = true)
     }
 
   private def upsertBody(batch: DataFrame, keys: Seq[String], path: String,
-      numBuckets: Int): Unit = {
+      numBuckets: Int, skipEmpty: Boolean): Unit = {
     val s = batch.sparkSession
     val root = new Path(path)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -657,6 +669,7 @@ object Sources {
     // the buckets this batch touches — bounded by min(batch keys, B)
     val touched: Set[Int] = deduped.select(bucketOf.as("gb")).distinct()
       .collect().map(_.getInt(0)).toSet
+    if (skipEmpty && touched.isEmpty) return
     // Monotone schema evolution (the reference's document grows fields as
     // steps append, aprocess.js:57,177-179): the table schema is
     // prev ∪ batch BY NAME — new batch columns append and old rows read
@@ -711,16 +724,10 @@ object Sources {
     // crashed vN must not collide with the next write
     val nextN = listing.allVersionNums.maxOption.getOrElse(0L) + 1
     val versionDir = new Path(root, s"v$nextN")
-    writeMicros(s) {
-      merged.withColumn("gb", bucketOf)
-        .write.partitionBy("gb").parquet(new Path(versionDir, "data").toString)
-    }
+    val writtenDirs = writeBuckets(merged.withColumn("gb", bucketOf), versionDir, fs)
     // the buckets ACTUALLY written (derived from the output, so a legacy
     // migration — where "touched" is everything present — is also exact)
-    val dataDir = new Path(versionDir, "data")
-    val written: Set[Int] = fs.listStatus(dataDir)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gb="))
-      .map(_.getPath.getName.stripPrefix("gb=").toInt).toSet
+    val written: Set[Int] = writtenDirs.map(bucketNum).toSet
     // invariant check BEFORE the commit marker: a bucket written outside
     // the touched set means its prior rows were not carried — fail with
     // the version uncommitted (table intact) rather than commit data loss.
@@ -742,7 +749,7 @@ object Sources {
         Map.empty[String, Map[String, ColStat]])
         .filter { case (bk, _) =>
           newBuckets.contains(bk) && !written.contains(bk.toInt) } ++
-        bucketStats(fs, s.sparkContext.hadoopConfiguration, dataDir, tableSchema)
+        bucketStats(fs, s.sparkContext.hadoopConfiguration, writtenDirs, tableSchema)
     // record the UNION schema even when no bucket was carried (an empty or
     // narrow batch must never shrink the table's recorded shape).
     // Retention: keep every version the NEW manifest references (carried
@@ -853,6 +860,27 @@ object Sources {
     }
   }
 
+  /** Write a version's data — `df` carries each row's key bucket in `gb` —
+    * as `data/gb=<b>` dirs holding ONE file each: the shuffle on `gb` hands
+    * every bucket to a single task. Written straight from the input's
+    * partitions, each input task would leave its own file in every bucket
+    * it holds rows of, and each file costs again in task commits, footer
+    * reads, retention deletes and reader opens. Returns the written bucket
+    * dirs: the one listing both the written⊆touched guard and the footer
+    * stats read. */
+  private def writeBuckets(df: DataFrame, versionDir: Path,
+      fs: org.apache.hadoop.fs.FileSystem): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val dataDir = new Path(versionDir, "data")
+    writeMicros(df.sparkSession) {
+      df.repartition(col("gb")).write.partitionBy("gb").parquet(dataDir.toString)
+    }
+    fs.listStatus(dataDir).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gb="))
+  }
+
+  private def bucketNum(dir: org.apache.hadoop.fs.FileStatus): Int =
+    dir.getPath.getName.stripPrefix("gb=").toInt
+
   /** The shared commit tail of every table writer (upsert, compact):
     * manifest JSON, then the `_SUCCESS` marker as the commit point, then
     * the retention sweep of everything outside `keep` — one copy, so the
@@ -872,12 +900,13 @@ object Sources {
 
   /** Maintenance compaction (the OPTIMIZE of the poor-man's table format):
     * rewrite the CURRENT snapshot as one fresh version whose manifest
-    * references only itself. A long-running `foreachBatch` deployment
-    * accumulates one small parquet job per touched bucket per batch and a
-    * version-dir lineage as long as the oldest still-referenced bucket;
-    * compaction collapses both — each bucket becomes one freshly-written
-    * dir, and after the NEXT upsert the whole pre-compaction lineage ages
-    * out of retention. Readers are never disturbed: the rewrite commits
+    * references only itself. Each upsert rewrites a touched bucket whole,
+    * as one file, but a long-running `foreachBatch` deployment spreads the
+    * snapshot's buckets over a version-dir lineage as long as the oldest
+    * still-referenced bucket; compaction collapses it — every bucket
+    * becomes one freshly-written file in one dir, and after the NEXT
+    * upsert the whole pre-compaction lineage ages out of retention.
+    * Readers are never disturbed: the rewrite commits
     * through the same manifest + `_SUCCESS` protocol, so a concurrent
     * reader resolves either the old snapshot or the compacted one.
     *
@@ -912,22 +941,15 @@ object Sources {
     val schemaWithGb = manifestSchema(m)
       .add("gb", org.apache.spark.sql.types.IntegerType)
     val byVersion = m.buckets.groupBy(_._2).toSeq.sortBy(_._1)
-    locally {
-      val compacted = byVersion.map { case (v, bs) =>
-        val dataDir = new Path(root, s"v$v/data")
-        s.read.option("basePath", dataDir.toString)
-          .schema(schemaWithGb)
-          .parquet(bs.keys.toSeq.sortBy(_.toInt)
-            .map(b => new Path(dataDir, s"gb=$b").toString): _*)
-      }.reduce(_.unionByName(_))
-      writeMicros(s) {
-        compacted.write.partitionBy("gb")
-          .parquet(new Path(versionDir, "data").toString)
-      }
-    }
-    val written: Set[Int] = fs.listStatus(new Path(versionDir, "data"))
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gb="))
-      .map(_.getPath.getName.stripPrefix("gb=").toInt).toSet
+    val compacted = byVersion.map { case (v, bs) =>
+      val dataDir = new Path(root, s"v$v/data")
+      s.read.option("basePath", dataDir.toString)
+        .schema(schemaWithGb)
+        .parquet(bs.keys.toSeq.sortBy(_.toInt)
+          .map(b => new Path(dataDir, s"gb=$b").toString): _*)
+    }.reduce(_.unionByName(_))
+    val writtenDirs = writeBuckets(compacted, versionDir, fs)
+    val written: Set[Int] = writtenDirs.map(bucketNum).toSet
     require(written == m.buckets.keySet.map(_.toInt),
       s"compaction wrote buckets $written but the manifest references " +
         s"${m.buckets.keySet} — aborting uncommitted (table intact)")
@@ -942,7 +964,7 @@ object Sources {
       Manifest(m.numBuckets, m.schemaDdl,
         written.map(b => b.toString -> nextN).toMap,
         Some(bucketStats(fs, s.sparkContext.hadoopConfiguration,
-          new Path(versionDir, "data"), manifestSchema(m)))),
+          writtenDirs, manifestSchema(m)))),
       listing, nextN,
       keep = Set(nextN, prevN) ++ m.buckets.values)
   }

@@ -161,14 +161,11 @@ object Correlate {
         .queryName("correlate_serve")
         .outputMode(OutputMode.Append)
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          // persist: the un-cached micro-batch plan (stateful correlator)
-          // would otherwise re-execute for each of upsert's two actions
-          // plus the emptiness probe — 3× state-store loads per trigger
-          batch.persist()
-          try {
-            if (!batch.isEmpty)
-              graft.sources.Sources.upsert(batch, Seq("txnId"), tablePath)
-          } finally batch.unpersist()
+          // upsert materializes the batch exactly once (its dedup
+          // checkpoint), so the stateful plan runs once per trigger with no
+          // cache, and an idle batch (RUNNING-only, duplicate terminals) is
+          // detected from that same materialization, with no extra job
+          graft.sources.Sources.upsertUnlessEmpty(batch, Seq("txnId"), tablePath)
         }
         .option("checkpointLocation", checkpoint)
         .trigger(Trigger.ProcessingTime(s"$intervalMs milliseconds"))

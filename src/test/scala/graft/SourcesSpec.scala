@@ -213,6 +213,57 @@ class SourcesSpec extends SparkSpec {
       (k, if (k == 7L) "updated" else s"v$k")).toSet)
   }
 
+  test("a version holds ONE parquet file per written bucket, from a multi-partition batch") {
+    val path = tmp("graft-upsert-onefile")
+    // parquet files per written bucket dir, over every version dir present
+    def filesPerBucket(): Map[String, Int] =
+      new java.io.File(path).listFiles().filter(_.isDirectory).flatMap { v =>
+        Option(new java.io.File(v, "data").listFiles()).toSeq.flatten
+          .filter(d => d.isDirectory && d.getName.startsWith("gb="))
+          .map(d => s"${v.getName}/${d.getName}" ->
+            d.listFiles().count(_.getName.endsWith(".parquet")))
+      }.toMap
+    // 8 input partitions, each holding keys of every bucket
+    val base = (1L to 200L).map(k => (k, s"a$k")).toDF("k", "v").repartition(8)
+    // planted positive: written straight from its 8 partitions, this batch
+    // leaves several files in a bucket dir — the layout the count rejects
+    val plain = tmp("graft-upsert-plainwrite")
+    base.withColumn("gb", org.apache.spark.sql.functions.pmod(
+        org.apache.spark.sql.functions.hash($"k"), org.apache.spark.sql.functions.lit(16)))
+      .write.partitionBy("gb").parquet(plain)
+    assert(new java.io.File(plain).listFiles().filter(_.isDirectory)
+      .exists(_.listFiles().count(_.getName.endsWith(".parquet")) > 1))
+
+    Sources.upsert(base, Seq("k"), path) // v1: every bucket
+    val batch2 = ((1L to 200L by 3).map(k => (k, s"b$k")) ++
+      (201L to 260L).map(k => (k, s"n$k"))).toDF("k", "v").repartition(8)
+    Sources.upsert(batch2, Seq("k"), path) // v2: carried + new rows
+    val layout = filesPerBucket()
+    assert(layout.keySet.exists(_.startsWith("v1/")) &&
+      layout.keySet.exists(_.startsWith("v2/")), s"got ${layout.keySet}")
+    assert(layout.values.forall(_ == 1), s"files per bucket dir: $layout")
+
+    // results are the last-write-wins fold, on every read path
+    val expected = (1L to 200L).map(k => k -> s"a$k").toMap ++
+      (1L to 200L by 3).map(k => k -> s"b$k") ++ (201L to 260L).map(k => k -> s"n$k")
+    assert(Sources.readTable(spark, path).as[(Long, String)].collect().toMap
+      == expected)
+    val probe = Seq(1L, 2L, 250L)
+    assert(Sources.readTableKeyed(spark, path, Seq("k"), probe.map(Seq(_)))
+      .as[(Long, String)].collect().toMap == probe.map(k => k -> expected(k)).toMap)
+    assert(Sources.readChanges(spark, path, 1L, 2L, Seq("k"))
+      .select($"k", $"v", $"_change").as[(Long, String, String)].collect().toSet
+      == ((1L to 200L by 3).map(k => (k, s"b$k", "update")) ++
+        (201L to 260L).map(k => (k, s"n$k", "insert"))).toSet)
+    Sources.compact(spark, path)
+    val compactedV = Sources.committedVersions(spark, path).max
+    val compactedLayout = filesPerBucket().filter(_._1.startsWith(s"v$compactedV/"))
+    assert(compactedLayout.size == 16 && compactedLayout.values.forall(_ == 1),
+      s"compacted files per bucket dir: $compactedLayout")
+    assert(Sources.readTable(spark, path).as[(Long, String)].collect().toMap
+      == expected)
+  }
+
   test("an empty micro-batch upserts as a carry-only version; empty first write reads empty") {
     // idle micro-batches are routine in a foreachBatch deployment
     val path = tmp("graft-upsert-empty")

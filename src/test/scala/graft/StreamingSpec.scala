@@ -903,6 +903,22 @@ class StreamingSpec extends SparkSpec {
     assert(a.got.toSet == delta, s"A delta: ${a.got.sorted}")
   }
 
+  /** `{txnId, status, sec}` JSON records on a graft-shards layout, read as
+    * the correlator's typed status stream (the serve tests' source). */
+  private def shardStatusStream(dir: String) = {
+    import org.apache.spark.sql.functions._
+    spark.readStream.format("graft-shards")
+      .option("startingPosition", "TRIM_HORIZON").load(dir)
+      .select(from_json(col("data"), org.apache.spark.sql.types.StructType.fromDDL(
+        "txnId STRING, status STRING, sec LONG")).as("e"))
+      .select(col("e.txnId").as("txnId"), col("e.status").as("status"),
+        timestamp_seconds(col("e.sec")).as("ts"))
+      .as[Correlate.StatusEvent]
+  }
+
+  private def ev(txn: String, st: String, sec: Long) =
+    s"""{"txnId":"$txn","status":"$st","sec":$sec}"""
+
   test("serve: continuous correlate→upsert lands completions across batches and a restart") {
     // the reference's live loop (svckinesis.js:250-256) end to end:
     // Kinesis-shaped source → stateful correlator → versioned upsert table
@@ -910,15 +926,7 @@ class StreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-serve").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-serve-ck").toString
     val table = java.nio.file.Files.createTempDirectory("graft-serve-tbl").toString
-    def statusStream = spark.readStream.format("graft-shards")
-      .option("startingPosition", "TRIM_HORIZON").load(dir)
-      .select(from_json(col("data"), org.apache.spark.sql.types.StructType.fromDDL(
-        "txnId STRING, status STRING, sec LONG")).as("e"))
-      .select(col("e.txnId").as("txnId"), col("e.status").as("status"),
-        timestamp_seconds(col("e.sec")).as("ts"))
-      .as[Correlate.StatusEvent]
-    def ev(txn: String, st: String, sec: Long) =
-      s"""{"txnId":"$txn","status":"$st","sec":$sec}"""
+    def statusStream = shardStatusStream(dir)
     def tableRows(): Map[String, String] =
       graft.sources.Sources.readTable(spark, table)
         .select(col("txnId"), col("finalStatus")).as[(String, String)]
@@ -961,6 +969,67 @@ class StreamingSpec extends SparkSpec {
     } finally q2.stop()
     assert(tableRows() ==
       Map("t1" -> "SUCCEEDED", "t2" -> "SUCCEEDED", "t3" -> "SUCCEEDED"))
+  }
+
+  test("serve: one evaluation per data-bearing trigger (≤ 3 jobs); an idle batch commits no version") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val dir = java.nio.file.Files.createTempDirectory("graft-serve1").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-serve1-ck").toString
+    val table = java.nio.file.Files.createTempDirectory("graft-serve1-tbl").toString
+    // jobs per (streaming query id, batch id), from the properties every
+    // job of a trigger carries — upsert's jobs inside foreachBatch included
+    val barrierKey = "graft.test.barrier"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long), Int]()
+    @volatile var barrierDone = false
+    val listener = new SparkListener {
+      private val barrierJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        def prop(k: String) = p.flatMap(x => Option(x.getProperty(k)))
+        if (prop(barrierKey).isDefined) barrierJobs.add(e.jobId)
+        for (q <- prop("sql.streaming.queryId"); b <- prop("streaming.sql.batchId"))
+          jobs.merge((q, b.toLong), 1, (a: Int, c: Int) => a + c)
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (barrierJobs.contains(e.jobId)) barrierDone = true
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = Correlate.serve(shardStatusStream(dir), table, ckpt, intervalMs = 100)
+      val dataBatches = scala.collection.mutable.ArrayBuffer.empty[Long]
+      def step(records: String*): Unit = {
+        val seen = q.recentProgress.length
+        graft.sources.GraftShards.append(dir, 0, records)
+        q.processAllAvailable()
+        dataBatches ++= q.recentProgress.drop(seen).filter(_.numInputRows > 0).map(_.batchId)
+      }
+      try {
+        step(ev("t1", "SUCCEEDED", 1), ev("t2", "RUNNING", 2), ev("t3", "FAILED", 3))
+        val v1 = graft.sources.Sources.committedVersions(spark, table)
+        assert(v1.nonEmpty)
+        // RUNNING-only and already-completed events complete nothing: the
+        // trigger runs (state advances) but commits no table version
+        step(ev("t2", "RUNNING", 4), ev("t1", "SUCCEEDED", 5))
+        assert(graft.sources.Sources.committedVersions(spark, table) == v1,
+          "an idle micro-batch committed a table version")
+        step(ev("t2", "SUCCEEDED", 6))
+        assert(graft.sources.Sources.committedVersions(spark, table).max > v1.max)
+      } finally q.stop()
+      assert(dataBatches.size == 3, s"data-bearing batches: $dataBatches")
+      assert(graft.sources.Sources.readTable(spark, table).as[(String, String)].collect().toMap ==
+        Map("t1" -> "SUCCEEDED", "t2" -> "SUCCEEDED", "t3" -> "FAILED"))
+      // barrier: once this job's end is seen, every earlier job start is too
+      spark.sparkContext.setLocalProperty(barrierKey, "1")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty(barrierKey, null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!barrierDone && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(barrierDone, "listener never saw the barrier job")
+      val perBatch = dataBatches.map(b => b -> jobs.getOrDefault((q.id.toString, b), 0))
+      // non-vacuous: the listener attributes the trigger's jobs to it
+      assert(perBatch.forall(_._2 >= 1), s"jobs per data batch: $perBatch")
+      assert(perBatch.forall(_._2 <= 3), s"jobs per data batch: $perBatch")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   // ---- graft-zcdf: the z-store change-feed streaming source (r10) --------
