@@ -94,17 +94,22 @@ object GraftShardsSource {
         c
     }
 
+  /** One vanilla `Configuration` per JVM: building one parses the default
+    * XML resources, too slow for every micro-batch and query. Hadoop
+    * reloads it when a default resource is added later. */
+  private lazy val vanillaConf = new Configuration()
+
   /** The driver-side hadoop conf entries that differ from a vanilla
     * `Configuration` — the serializable slice (`spark.hadoop.*` overrides
     * and site-file settings) an executor needs to reconstruct the
-    * driver's view. */
-  def confOverrides(s: SparkSession): Map[String, String] = {
-    val defaults = new Configuration()
+    * driver's view. Raw values are compared (executors substitute
+    * `${var}`s themselves); computed from the live conf on every call, so
+    * a key set at runtime still ships. */
+  def confOverrides(s: SparkSession): Map[String, String] =
     s.sparkContext.hadoopConfiguration.asScala
       .map(e => e.getKey -> e.getValue)
-      .filter { case (k, v) => defaults.get(k) != v }
+      .filter { case (k, v) => vanillaConf.getRaw(k) != v }
       .toMap
-  }
 
   def fs(p: Path): FileSystem = p.getFileSystem(hadoopConf())
   def fs(p: Path, conf: Configuration): FileSystem = p.getFileSystem(conf)

@@ -397,7 +397,7 @@ object Sources {
       fs.listStatus(bdir.getPath)
         .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
         .foreach { st =>
-          footerColStats(st, conf, fields).foreach { case (k, fileAcc) =>
+          footerColStats(readFooter(st, conf), fields).foreach { case (k, fileAcc) =>
             acc(k) = mergeStatAcc(byLower(k).dataType, acc(k), fileAcc)
           }
         }
@@ -427,15 +427,28 @@ object Sources {
     case _ => None
   }
 
+  /** ONE parquet file's footer, read with options built from the caller's
+    * `conf` (the option-less `open` builds a default `Configuration`, i.e.
+    * re-parses the default XML, per file). Runs wherever the caller is:
+    * the driver loop here, or a Spark task in [[ZOrder]]'s distributed
+    * harvest, which takes both [[footerColStats]] and [[footerCounts]]
+    * from one read. */
+  private[sources] def readFooter(st: org.apache.hadoop.fs.FileStatus,
+      conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+    try reader.getFooter finally reader.close()
+  }
+
   /** Chunk-merged per-column stats of ONE parquet file's footer, under the
     * soundness rules documented at [[bucketStats]]'s caller comment above
     * (INT96 → unknown, NaN-dropped double stats → unknown,
     * surrogate-bearing string bounds → unknown, column absent from the
-    * footer → all-null). Pure function of the file — runs wherever the
-    * caller is: the driver loop here, or a Spark task in
-    * [[ZOrder]]'s distributed harvest. */
-  private[sources] def footerColStats(st: org.apache.hadoop.fs.FileStatus,
-      conf: org.apache.hadoop.conf.Configuration,
+    * footer → all-null). */
+  private[sources] def footerColStats(
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
       fields: Seq[org.apache.spark.sql.types.StructField])
       : Map[String, StatAcc] = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -443,36 +456,32 @@ object Sources {
     def jokerFree(s: String): Boolean = s.forall(_ < '\uD800')
     val acc = scala.collection.mutable.Map[String, StatAcc](
       fields.map(f => f.name.toLowerCase -> (Some((None, None)): StatAcc)): _*)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-    try {
-      reader.getFooter.getBlocks.forEach { block =>
-        block.getColumns.forEach { cc =>
-          val path = cc.getPath.toArray
-          if (path.length == 1 && byLower.contains(path(0).toLowerCase)) {
-            val key = path(0).toLowerCase
-            val field = byLower(key)
-            val stats = cc.getStatistics
-            val chunk: StatAcc =
-              if (cc.getPrimitiveType.getPrimitiveTypeName ==
-                    PrimitiveTypeName.INT96 || stats == null) None
-              else if (stats.hasNonNullValue) {
-                val mn = encodeParquetStat(
-                  stats.genericGetMin.asInstanceOf[AnyRef])
-                val mx = encodeParquetStat(
-                  stats.genericGetMax.asInstanceOf[AnyRef])
-                if (field.dataType == org.apache.spark.sql.types.StringType
-                    && !(jokerFree(mn) && jokerFree(mx))) None
-                else Some((Some(mn), Some(mx)))
-              } else if (stats.isNumNullsSet &&
-                  stats.getNumNulls == cc.getValueCount)
-                Some((None, None)) // all-null chunk
-              else None // e.g. NaN-dropped double stats
-            acc(key) = mergeStatAcc(field.dataType, acc(key), chunk)
-          }
+    footer.getBlocks.forEach { block =>
+      block.getColumns.forEach { cc =>
+        val path = cc.getPath.toArray
+        if (path.length == 1 && byLower.contains(path(0).toLowerCase)) {
+          val key = path(0).toLowerCase
+          val field = byLower(key)
+          val stats = cc.getStatistics
+          val chunk: StatAcc =
+            if (cc.getPrimitiveType.getPrimitiveTypeName ==
+                  PrimitiveTypeName.INT96 || stats == null) None
+            else if (stats.hasNonNullValue) {
+              val mn = encodeParquetStat(
+                stats.genericGetMin.asInstanceOf[AnyRef])
+              val mx = encodeParquetStat(
+                stats.genericGetMax.asInstanceOf[AnyRef])
+              if (field.dataType == org.apache.spark.sql.types.StringType
+                  && !(jokerFree(mn) && jokerFree(mx))) None
+              else Some((Some(mn), Some(mx)))
+            } else if (stats.isNumNullsSet &&
+                stats.getNumNulls == cc.getValueCount)
+              Some((None, None)) // all-null chunk
+            else None // e.g. NaN-dropped double stats
+          acc(key) = mergeStatAcc(field.dataType, acc(key), chunk)
         }
       }
-    } finally reader.close()
+    }
     acc.toMap
   }
 
@@ -485,8 +494,8 @@ object Sources {
     * (unknown → the file is never counted from metadata, only scanned —
     * same always-safe degradation as the range stats). A column absent
     * from the footer reads as all-null: nulls = rowCount. */
-  private[sources] def footerCounts(st: org.apache.hadoop.fs.FileStatus,
-      conf: org.apache.hadoop.conf.Configuration,
+  private[sources] def footerCounts(
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
       fields: Seq[org.apache.spark.sql.types.StructField])
       : (Long, Map[String, Option[Long]]) = {
     val byLower = fields.map(f => f.name.toLowerCase -> f).toMap
@@ -494,25 +503,21 @@ object Sources {
     val nulls = scala.collection.mutable.Map[String, Option[Long]](
       fields.map(f => f.name.toLowerCase -> (Some(0L): Option[Long])): _*)
     val seen = scala.collection.mutable.Set.empty[String]
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-    try {
-      reader.getFooter.getBlocks.forEach { block =>
-        rows += block.getRowCount
-        block.getColumns.forEach { cc =>
-          val path = cc.getPath.toArray
-          if (path.length == 1 && byLower.contains(path(0).toLowerCase)) {
-            val key = path(0).toLowerCase
-            seen += key
-            val stats = cc.getStatistics
-            val chunk: Option[Long] =
-              if (stats != null && stats.isNumNullsSet) Some(stats.getNumNulls)
-              else None
-            nulls(key) = for (a <- nulls(key); b <- chunk) yield a + b
-          }
+    footer.getBlocks.forEach { block =>
+      rows += block.getRowCount
+      block.getColumns.forEach { cc =>
+        val path = cc.getPath.toArray
+        if (path.length == 1 && byLower.contains(path(0).toLowerCase)) {
+          val key = path(0).toLowerCase
+          seen += key
+          val stats = cc.getStatistics
+          val chunk: Option[Long] =
+            if (stats != null && stats.isNumNullsSet) Some(stats.getNumNulls)
+            else None
+          nulls(key) = for (a <- nulls(key); b <- chunk) yield a + b
         }
       }
-    } finally reader.close()
+    }
     (rows, nulls.map { case (k, v) =>
       k -> (if (seen.contains(k)) v else Some(rows)) // absent column: all-null
     }.toMap)
@@ -665,10 +670,14 @@ object Sources {
     // a bucket whose prior rows were never carried — silent data loss.
     // A micro-batch is small by the sink's contract, so the checkpoint is
     // cheap; the written⊆touched guard below backstops the invariant.
-    val deduped = batch.dropDuplicates(keys).localCheckpoint()
-    // the buckets this batch touches — bounded by min(batch keys, B)
-    val touched: Set[Int] = deduped.select(bucketOf.as("gb")).distinct()
-      .collect().map(_.getInt(0)).toSet
+    // The buckets this batch touches — bounded by min(batch keys, B) — are
+    // observed by that same checkpoint job, not by a job of their own.
+    val touchedObs = org.apache.spark.sql.Observation()
+    val deduped = batch.dropDuplicates(keys)
+      .observe(touchedObs, org.apache.spark.sql.functions.collect_set(bucketOf).as("gb"))
+      .localCheckpoint()
+    val touched: Set[Int] =
+      touchedObs.get("gb").asInstanceOf[scala.collection.Seq[Int]].toSet
     if (skipEmpty && touched.isEmpty) return
     // Monotone schema evolution (the reference's document grows fields as
     // steps append, aprocess.js:57,177-179): the table schema is

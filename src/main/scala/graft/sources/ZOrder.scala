@@ -1676,7 +1676,8 @@ object ZOrder {
           .map { p =>
             val hp = new Path(p)
             val st = hp.getFileSystem(bc.value.value).getFileStatus(hp)
-            Sources.footerCounts(st, bc.value.value, Seq.empty)._1
+            Sources.footerCounts(Sources.readFooter(st, bc.value.value),
+              Seq.empty)._1
           }.fold(0L)(math.max)
         finally bc.destroy()
       }
@@ -1738,8 +1739,9 @@ object ZOrder {
           val conf = bc.value.value
           val hp = new Path(p)
           val st = hp.getFileSystem(conf).getFileStatus(hp)
-          val accs = Sources.footerColStats(st, conf, fields)
-          val (rowCnt, nullCnts) = Sources.footerCounts(st, conf, fields)
+          val footer = Sources.readFooter(st, conf)
+          val accs = Sources.footerColStats(footer, fields)
+          val (rowCnt, nullCnts) = Sources.footerCounts(footer, fields)
           Seq(
             (rel, SizeKey, Option(st.getLen.toString), None: Option[String],
               false),

@@ -264,6 +264,26 @@ class SourcesSpec extends SparkSpec {
       == expected)
   }
 
+  test("a multi-partition upsert writes exactly the buckets its keys hash to") {
+    import org.apache.spark.sql.functions.{hash, lit, pmod}
+    val path = tmp("graft-upsert-touched")
+    Sources.upsert((1L to 200L).map(k => (k, s"a$k")).toDF("k", "v"), Seq("k"), path)
+    val bucketOf = (1L to 400L).toDF("k")
+      .select($"k", pmod(hash($"k"), lit(16)).as("gb")).as[(Long, Int)].collect().toMap
+    val wanted = Set(3, 7, 11)
+    // updates and inserts, spread over 8 partitions: the touched set is
+    // observed per task and merged
+    val keys = (1L to 400L).filter(k => wanted(bucketOf(k)))
+    assert(keys.exists(_ <= 200L) && keys.exists(_ > 200L))
+    Sources.upsert(keys.map(k => (k, s"b$k")).toDF("k", "v").repartition(8),
+      Seq("k"), path)
+    val v2Buckets = new java.io.File(path, "v2/data").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("gb=")).map(_.getName).toSet
+    assert(v2Buckets == wanted.map(b => s"gb=$b"), s"v2 wrote $v2Buckets")
+    assert(Sources.readTable(spark, path).as[(Long, String)].collect().toMap ==
+      (1L to 200L).map(k => k -> s"a$k").toMap ++ keys.map(k => k -> s"b$k"))
+  }
+
   test("an empty micro-batch upserts as a carry-only version; empty first write reads empty") {
     // idle micro-batches are routine in a foreachBatch deployment
     val path = tmp("graft-upsert-empty")
