@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 import graft.functions.ArrayExprs
-import graft.sources.{Lease, StoreMaint}
+import graft.sources.{GraftShards, Lease, StoreMaint}
 import graft.sources.StoreMaint.Layout
 
 /** Persisted MinHash-LSH dedup index: the incremental-ingest form of the
@@ -494,13 +494,23 @@ ORDER BY d.doc_id""",
 
   // ---- q108: continuous ingest — the streaming form of q106 --------------
 
-  /** Micro-batches per shard the rate limit aims for (2 → the limit is
-    * ceil(maxShardCount/2), so every SF streams in two deterministic
-    * batches regardless of corpus size — enough to exercise all three
-    * verdict paths: empty-index bootstrap, in-batch dedup, and a later
-    * batch deduping against appended history; each extra batch costs a
-    * full store round-trip, so the demo count stays minimal). */
-  private val TargetBatches = 2L
+  /** One q108 ingest micro-batch, run exactly-once by
+    * [[graft.sources.StoreMaint.applyOnce]]: the lookup runs against the
+    * store state BEFORE the batch, then the batch's features append. A
+    * crash after the append, before the marker, re-appends the batch's
+    * index rows on replay, which [[dedupAgainstFeat]] tolerates:
+    * candidates and matches are deduplicated by (doc, partner), so
+    * duplicate store rows change nothing downstream (LshIndexSpec pins
+    * replay ≡ once). The store reads are path-pruned and don't shuffle. */
+  private[graft] def ingestBatch(s: SparkSession, root: String,
+      df: DataFrame, id: Long, rowCap: Long = 4096L): Unit =
+    StoreMaint.applyOnce(s, root, id, StoreMaint.batchPartitions(s, rowCap)) {
+      // one feature pass feeds BOTH the lookup and the index append
+      val feat = Dedup.lshFeatures(df).localCheckpoint()
+      dedupAgainstFeat(s, s"$root/idx", s"$root/feat", feat)
+        .write.mode(SaveMode.Overwrite).parquet(s"$root/out/batch=$id")
+      append(feat, s"$root/idx", s"$root/feat")
+    }
 
   /** q108: CONTINUOUS dedup ingest — documents arrive over the
     * graft-shards stream (deterministic `doc_id mod numShards` routing,
@@ -513,62 +523,18 @@ ORDER BY d.doc_id""",
     * against the pruned store partitions.
     *
     * EXACT oracle for a streaming pipeline: the explicit shard rule plus
-    * the per-shard rate limit make batch membership pure SQL —
-    * `batch = (rank within shard) div ceil(maxShardCount/TargetBatches)` — so the
-    * oracle rebuilds the same md5-LSH verified pairs ([[Dedup.lshPairCtes]])
-    * and restricts each doc's partner set to earlier batches or
-    * smaller-id same-batch docs. Batch ids, dup links, similarities AND
+    * the per-shard rate limit make batch membership pure SQL
+    * ([[StoreMaint.batchedCte]]), so the oracle rebuilds the same md5-LSH
+    * verified pairs ([[Dedup.lshPairCtes]]) and restricts each doc's
+    * partner set to earlier batches or smaller-id same-batch docs. Batch ids, dup links, similarities AND
     * the dup_batch/dup_corpus split are all under the driver's hash
     * check; a duplicated or lost micro-batch, a wrong rate-limit cut, or
     * an index append that leaked into its own batch's lookup would all
     * hash-fail. */
-  /** One ingest micro-batch against the store rooted at `root` —
-    * EXACTLY-ONCE under foreachBatch's at-least-once replay contract, by
-    * the standard marker recipe: a batch whose `applied/<id>` marker
-    * exists is skipped wholesale (the crash-after-write-before-checkpoint
-    * replay), verdicts land in a per-batch dir with OVERWRITE (a replay
-    * that raced the marker rewrites, never appends), and the marker
-    * commits LAST. The one non-atomic window left — crash after the index
-    * append, before the marker — re-appends the batch's index rows on
-    * replay, which [[dedupAgainstFeat]] tolerates: candidates and matches
-    * are deduplicated by (doc, partner), so duplicate store rows change
-    * nothing downstream (LshIndexSpec pins replay ≡ once).
-    *
-    * Per-batch confs are scoped to the BATCH volume (the q75 recipe —
-    * confs bind at action time): a micro-batch is a corpus sliver, so
-    * wide shuffles and AQE re-planning are pure per-job overhead here;
-    * the store reads are path-pruned and don't shuffle at all. */
-  private[graft] def ingestBatch(s: SparkSession, root: String,
-      df: DataFrame, id: Long, rowCap: Long = 4096L): Unit = {
-    // replayed epoch already fully applied → skip; an id below the
-    // retention watermark refuses loudly (StoreMaint.retentionSweep)
-    if (graft.sources.StoreMaint.batchAlreadyApplied(s, root, id)) return
-    // partitions derived from the trigger's admission cap, not a literal
-    // pin (r17 — resolves to the former 8 at bench scale)
-    graft.sources.StoreMaint.withBatchConfs(s,
-        graft.sources.StoreMaint.batchPartitions(s, rowCap)) {
-      // one feature pass feeds BOTH the lookup and the index append
-      val feat = Dedup.lshFeatures(df).localCheckpoint()
-      dedupAgainstFeat(s, s"$root/idx", s"$root/feat", feat)
-        .write.mode(SaveMode.Overwrite).parquet(s"$root/out/batch=$id")
-      append(feat, s"$root/idx", s"$root/feat")
-      graft.sources.StoreMaint.markApplied(s, root, id)
-    }
-  }
-
   val q108DedupStreamIngest: Q = Q(
     "q108_dedup_stream_ingest",
     "WITH " + Dedup.lshPairCtes("documents") + s""",
-shardseq AS (
-  SELECT doc_id,
-    ROW_NUMBER() OVER (PARTITION BY doc_id % ${graft.sources.GraftShards.NumShards}
-      ORDER BY doc_id) - 1 AS seq
-  FROM documents),
-lim AS (SELECT CAST(CEIL(CAST(MAX(c) AS DOUBLE) / $TargetBatches) AS BIGINT) AS r
-  FROM (SELECT COUNT(*) AS c FROM documents
-        GROUP BY doc_id % ${graft.sources.GraftShards.NumShards})),
-batched AS (
-  SELECT s.doc_id, CAST(s.seq // l.r AS BIGINT) AS batch FROM shardseq s, lim l),
+${StoreMaint.batchedCte("documents", "doc_id")},
 matches AS (
   SELECT pb.doc_id, pa.doc_id AS partner, p.jac
   FROM pairs p JOIN batched pa ON pa.doc_id = p.doc_a
@@ -593,36 +559,11 @@ LEFT JOIN best ON best.doc_id = d.doc_id
 LEFT JOIN batched pb ON pb.doc_id = best.dup_of
 ORDER BY d.doc_id""",
   ) { (s, d) =>
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     ArrayExprs.register(s)
-    val shardDir = graft.sources.GraftShards.documentsShards(s, d)
-    // metadata-only: chunk names carry the per-shard record count (the
-    // layout was routed by this same pmod rule — GraftShards.maxShardCount)
-    val maxShardCnt = graft.sources.GraftShards.maxShardCount(shardDir)
-    val limit = (maxShardCnt + TargetBatches - 1) / TargetBatches
+    val (docs, rowCap) = StoreMaint.shardStream(s,
+      GraftShards.documentsShards(s, d), GraftShards.DocWire)
     val root = Files.createTempDirectory("graft-lsh-ingest").toString
-    val (idxDir, featDir) = (s"$root/idx", s"$root/feat")
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val q = s.readStream.format("graft-shards")
-      .option("startingPosition", "TRIM_HORIZON")
-      .option("maxRecordsPerShardPerTrigger", limit.toString)
-      .load(shardDir)
-      .select(from_json(col("data"), docSchema).as("r"))
-      .select(col("r.*"))
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        ingestBatch(s, root, df, id,
-          limit * graft.sources.GraftShards.NumShards)
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // batch is the partition dir value (discovery infers int — widen back)
-    val out = s.read.parquet(s"$root/out")
-      .withColumn("batch", col("batch").cast("long"))
+    val out = StoreMaint.run(s, docs, root)(ingestBatch(s, root, _, _, rowCap))
     val partnerBatch = out
       .select(col("doc_id").as("dup_of"), col("batch").as("pb"))
     out.join(partnerBatch, Seq("dup_of"), "left")

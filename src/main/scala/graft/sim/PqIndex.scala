@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 import graft.functions.ArrayExprs
-import graft.sources.{Lease, StoreMaint}
+import graft.sources.{GraftShards, Lease, StoreMaint}
 
 /** Persisted IVF-PQ vector index: [[VecIndex]]'s layout with q74's
   * product-quantization codes as the RESIDENT half of the store — the
@@ -553,23 +553,17 @@ object PqIndex {
 
   // ---- q127: continuous PQ-index ingest (the q117 pattern for vectors) ----
 
-  private val TargetBatches = 2L
-
   /** One PQ-ingest micro-batch: append the batch's codes + cold rows under
     * the persisted contracts, then answer the STANDING query batch through
     * the store — so the dumped result is the index state AFTER each batch
-    * (the q117 shape). Exactly-once under foreachBatch replay by the
-    * applied-marker recipe; the marker-missed replay window is closed by
-    * the store reads' (query, neighbor) / vec_id dedup tolerance. `df`
-    * arrives in the wire shape (vec_id, label, v: array<double>). */
+    * (the q117 shape). Run exactly-once by [[StoreMaint.applyOnce]]; the
+    * marker-missed replay window is closed by the store reads'
+    * (query, neighbor) / vec_id dedup tolerance. `df` arrives in the wire
+    * shape [[GraftShards.EmbWire]]. */
   private[graft] def ingestBatch(s: SparkSession, root: String,
       df: DataFrame, id: Long, queries: DataFrame,
-      rowCap: Long = 4096L): Unit = {
-    if (graft.sources.StoreMaint.batchAlreadyApplied(s, root, id)) return
-    // partitions derived from the trigger's admission cap, not a literal
-    // pin (r17 — resolves to the former 8 at bench scale)
-    graft.sources.StoreMaint.withBatchConfs(s,
-        graft.sources.StoreMaint.batchPartitions(s, rowCap)) {
+      rowCap: Long = 4096L): Unit =
+    StoreMaint.applyOnce(s, root, id, StoreMaint.batchPartitions(s, rowCap)) {
       import graft.sources.ZOrder.prf
       val w = prf("pq.ingest.checkpoint")(
         df.select(col("vec_id"), col("label"), col("v"))
@@ -578,9 +572,7 @@ object PqIndex {
       prf("pq.ingest.append")(appendWorking(w, root, SaveMode.Append))
       prf("pq.ingest.topK+dump")(topK(s, root, queries)
         .write.mode(SaveMode.Overwrite).parquet(s"$root/out/batch=$id"))
-      graft.sources.StoreMaint.markApplied(s, root, id)
     }
-  }
 
   /** q127: continuous PQ-index ingest — quantizer AND codebooks trained
     * offline (persisted before the stream: the store's two contracts),
@@ -652,17 +644,7 @@ object PqIndex {
          |      (a,b) -> a+b) AS d2
          |  FROM q, cb),
          |lutq AS (SELECT qid, list(d2 ORDER BY m, cid) AS ds FROM lut GROUP BY qid),
-         |shardseq AS (
-         |  SELECT vec_id,
-         |    ROW_NUMBER() OVER (PARTITION BY vec_id % ${graft.sources.GraftShards.NumShards}
-         |      ORDER BY vec_id) - 1 AS seq
-         |  FROM e),
-         |lim AS (SELECT CAST(CEIL(CAST(MAX(c) AS DOUBLE) / $TargetBatches) AS BIGINT) AS r
-         |  FROM (SELECT COUNT(*) AS c FROM e
-         |        GROUP BY vec_id % ${graft.sources.GraftShards.NumShards})),
-         |batched AS (
-         |  SELECT s.vec_id, CAST(s.seq // l.r AS BIGINT) AS batch
-         |  FROM shardseq s, lim l),
+         |${StoreMaint.batchedCte("e", "vec_id")},
          |bb AS (SELECT DISTINCT batch FROM batched),
          |cand AS (
          |  SELECT DISTINCT bb.batch, p.query_id AS qid, a.vec_id
@@ -694,13 +676,9 @@ object PqIndex {
          |ORDER BY batch, query_id, rank""".stripMargin
     },
   ) { (s, d) =>
-    import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
     ArrayExprs.register(s)
-    val shardDir = graft.sources.GraftShards.embeddingsShards(s, d)
-    // metadata-only: chunk names carry the per-shard record count (the
-    // layout was routed by this same pmod rule — GraftShards.maxShardCount)
-    val maxShardCnt = graft.sources.GraftShards.maxShardCount(shardDir)
-    val limit = (maxShardCnt + TargetBatches - 1) / TargetBatches
+    val (vecs, rowCap) = StoreMaint.shardStream(s,
+      GraftShards.embeddingsShards(s, d), GraftShards.EmbWire)
     val root = Files.createTempDirectory("graft-pq-ingest").toString
     // the OFFLINE-trained contracts, persisted before any vector streams
     writeContracts(Tables.embeddings(s, d), root)
@@ -708,29 +686,9 @@ object PqIndex {
       .filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
       .localCheckpoint()
-    val wireSchema = StructType(Seq(
-      StructField("vec_id", LongType), StructField("label", IntegerType),
-      StructField("v", ArrayType(DoubleType))))
-    val q = s.readStream.format("graft-shards")
-      .option("startingPosition", "TRIM_HORIZON")
-      .option("maxRecordsPerShardPerTrigger", limit.toString)
-      .load(shardDir)
-      .select(from_json(col("data"), wireSchema).as("r"))
-      .select(col("r.*"))
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        ingestBatch(s, root, df, id, standing,
-          limit * graft.sources.GraftShards.NumShards)
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.parquet(s"$root/out")
-      .select(col("batch").cast("long").as("batch"), col("query_id"),
-        col("rank"), col("neighbor_id"), col("label"), col("adc_dist"),
-        col("cos"))
+    StoreMaint.run(s, vecs, root)(ingestBatch(s, root, _, _, standing, rowCap))
+      .select(col("batch"), col("query_id"), col("rank"), col("neighbor_id"),
+        col("label"), col("adc_dist"), col("cos"))
       .orderBy(col("batch"), col("query_id"), col("rank"))
   }
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 import graft.functions.ArrayExprs
-import graft.sources.{Lease, StoreMaint}
+import graft.sources.{GraftShards, Lease, StoreMaint}
 
 /** Persisted IVF vector index: the incremental-ingest form of the q53/q44
   * similarity machinery, sibling of [[graft.dedup.LshIndex]]. A 100 TB
@@ -490,23 +490,15 @@ object VecIndex {
 
   // ---- q114: continuous embedding ingest (the q108 pattern for vectors) ---
 
-  private val TargetBatches = 2L
-
   /** One embedding-ingest micro-batch: (1) top-1 indexed neighbor for
     * every arriving vector — the at-ingest near-dup / link step of a
     * vector pipeline — against the store state BEFORE the batch, then
-    * (2) the batch's postings append under the persisted quantizer.
-    * Exactly-once under foreachBatch replay by the ingestBatch recipe
-    * ([[graft.dedup.LshIndex.ingestBatch]]): applied-marker skip,
-    * per-batch OVERWRITE verdict dirs, marker last. `df` arrives in the
-    * wire shape (vec_id, label, v: array<double>). */
+    * (2) the batch's postings append under the persisted quantizer, run
+    * exactly-once by [[graft.sources.StoreMaint.applyOnce]]. `df` arrives
+    * in the wire shape [[graft.sources.GraftShards.EmbWire]]. */
   private[graft] def ingestBatch(s: SparkSession, root: String,
-      df: DataFrame, id: Long, rowCap: Long = 4096L): Unit = {
-    if (graft.sources.StoreMaint.batchAlreadyApplied(s, root, id)) return
-    // partitions derived from the trigger's admission cap, not a literal
-    // pin (r17 — resolves to the former 8 at bench scale)
-    graft.sources.StoreMaint.withBatchConfs(s,
-        graft.sources.StoreMaint.batchPartitions(s, rowCap)) {
+      df: DataFrame, id: Long, rowCap: Long = 4096L): Unit =
+    StoreMaint.applyOnce(s, root, id, StoreMaint.batchPartitions(s, rowCap)) {
       val w = df.select(col("vec_id"), col("label"), col("v"))
         .withColumn("n2", graft.dedup.Dedup.sqNorm(col("v")))
         .localCheckpoint()
@@ -518,9 +510,7 @@ object VecIndex {
         .join(hits, Seq("vec_id"), "left")
         .write.mode(SaveMode.Overwrite).parquet(s"$root/out/batch=$id")
       appendWorking(w, root, SaveMode.Append)
-      graft.sources.StoreMaint.markApplied(s, root, id)
     }
-  }
 
   /** q114: continuous embedding ingest — the quantizer is trained OFFLINE
     * (persisted before the stream starts: the index contract), then
@@ -528,7 +518,7 @@ object VecIndex {
     * each batch links every vector to its top-1 indexed neighbor (store
     * state = strictly earlier batches) and appends its own postings.
     * EXACT oracle by the q108 recipe: explicit vec_id-mod routing makes
-    * batch membership SQL (`rank-in-shard div ceil(maxShardCount/2)`),
+    * batch membership SQL ([[graft.sources.StoreMaint.batchedCte]]),
     * and the candidate set is probes(query) ∩ assigned cells restricted
     * to earlier batches — cell assignment, pruning, ranking and the
     * found/null split are all under the driver's hash check. */
@@ -558,17 +548,7 @@ object VecIndex {
        |    SELECT vec_id, cid,
        |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY s, cid) AS rn
        |    FROM sc) WHERE rn <= $NumProbe),
-       |shardseq AS (
-       |  SELECT vec_id,
-       |    ROW_NUMBER() OVER (PARTITION BY vec_id % ${graft.sources.GraftShards.NumShards}
-       |      ORDER BY vec_id) - 1 AS seq
-       |  FROM e),
-       |lim AS (SELECT CAST(CEIL(CAST(MAX(c) AS DOUBLE) / $TargetBatches) AS BIGINT) AS r
-       |  FROM (SELECT COUNT(*) AS c FROM e
-       |        GROUP BY vec_id % ${graft.sources.GraftShards.NumShards})),
-       |batched AS (
-       |  SELECT s.vec_id, CAST(s.seq // l.r AS BIGINT) AS batch
-       |  FROM shardseq s, lim l),
+       |${StoreMaint.batchedCte("e", "vec_id")},
        |cand AS (
        |  SELECT DISTINCT p.vec_id, a.vec_id AS nn
        |  FROM probes p JOIN assign a ON a.cell = p.cell
@@ -591,38 +571,14 @@ object VecIndex {
        |LEFT JOIN best ON best.vec_id = e.vec_id
        |ORDER BY e.vec_id""".stripMargin,
   ) { (s, d) =>
-    import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
     ArrayExprs.register(s)
-    val shardDir = graft.sources.GraftShards.embeddingsShards(s, d)
-    // metadata-only: chunk names carry the per-shard record count (the
-    // layout was routed by this same pmod rule — GraftShards.maxShardCount)
-    val maxShardCnt = graft.sources.GraftShards.maxShardCount(shardDir)
-    val limit = (maxShardCnt + TargetBatches - 1) / TargetBatches
+    val (vecs, rowCap) = StoreMaint.shardStream(s,
+      GraftShards.embeddingsShards(s, d), GraftShards.EmbWire)
     val root = Files.createTempDirectory("graft-vec-ingest").toString
     // the offline-trained quantizer: persisted BEFORE any vector streams
     writeQuantizer(Tables.embeddings(s, d), root, Similarity.NumCells)
-    val wireSchema = StructType(Seq(
-      StructField("vec_id", LongType), StructField("label", IntegerType),
-      StructField("v", ArrayType(DoubleType))))
-    val q = s.readStream.format("graft-shards")
-      .option("startingPosition", "TRIM_HORIZON")
-      .option("maxRecordsPerShardPerTrigger", limit.toString)
-      .load(shardDir)
-      .select(from_json(col("data"), wireSchema).as("r"))
-      .select(col("r.*"))
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        ingestBatch(s, root, df, id,
-          limit * graft.sources.GraftShards.NumShards)
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.parquet(s"$root/out")
-      .select(col("vec_id"), col("batch").cast("long").as("batch"),
-        col("nn_id"), col("cos"))
+    StoreMaint.run(s, vecs, root)(ingestBatch(s, root, _, _, rowCap))
+      .select(col("vec_id"), col("batch"), col("nn_id"), col("cos"))
       .orderBy(col("vec_id"))
   }
 

@@ -741,6 +741,16 @@ object GraftShards {
     target
   }
 
+  /** Record shape of [[documentsShards]]: the writer selects exactly these
+    * columns and the ingest readers parse the JSON payload with it. */
+  val DocWire: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType)))
+
+  /** Record shape of [[embeddingsShards]] (the vector as array<double>). */
+  val EmbWire: StructType = StructType(Seq(
+    StructField("vec_id", LongType), StructField("label", IntegerType),
+    StructField("v", ArrayType(DoubleType))))
+
   /** Build-once sharded copy of the `documents` table for the streaming
     * ingest demos: shard = `doc_id mod NumShards` and per-shard doc_id
     * order — an EXPLICIT routing rule ([[writeShardedBy]]), so an external
@@ -756,7 +766,7 @@ object GraftShards {
     if (!tfs.exists(marker)) {
       tfs.delete(new Path(target), true)
       writeShardedBy(
-        graft.Tables.documents(s, d).select(col("doc_id"), col("text")),
+        graft.Tables.documents(s, d).select(DocWire.fieldNames.map(col): _*),
         target, NumShards, pmod(col("doc_id"), lit(NumShards)),
         order = Seq(col("doc_id")))
       tfs.create(marker, true).close()
@@ -779,8 +789,9 @@ object GraftShards {
     if (!tfs.exists(marker)) {
       tfs.delete(new Path(target), true)
       writeShardedBy(
-        graft.Tables.embeddings(s, d).select(col("vec_id"), col("label"),
-          transform(col("embedding"), x => x.cast("double")).as("v")),
+        graft.Tables.embeddings(s, d)
+          .withColumn("v", transform(col("embedding"), x => x.cast("double")))
+          .select(EmbWire.fieldNames.map(col): _*),
         target, NumShards, pmod(col("vec_id"), lit(NumShards)),
         order = Seq(col("vec_id")))
       tfs.create(marker, true).close()

@@ -3,13 +3,18 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
-/** Shared lifecycle plumbing for the persisted-index family
-  * ([[graft.dedup.LshIndex]], [[graft.sim.VecIndex]],
-  * [[graft.text.TextIndex]]): the partition-layout pin that makes the
-  * partitioning knobs real deployment parameters, and the in-place
-  * partition-dir compaction whose reader-safety token is the stores'
-  * duplicate-tolerant reads.
+/** Shared lifecycle plumbing for the persisted stores: the exactly-once
+  * ingest harness every streaming-ingest loop runs on (LSH q108, IVF
+  * q114, text q117, PQ q127, z-store q132/q141, the q143 IVM view, and
+  * the shard reader of the q152/q156 native sinks) together with the
+  * `applied/<id>` markers, `_retention` watermark and `out/batch=<id>`
+  * sweep it writes; the partition-layout pin that makes the partitioning
+  * knobs real deployment parameters; and the in-place partition-dir
+  * compaction whose reader-safety token is the stores' duplicate-tolerant
+  * reads.
   */
 object StoreMaint {
 
@@ -34,23 +39,28 @@ object StoreMaint {
     new java.util.concurrent.ConcurrentHashMap[SparkSession,
       (java.util.concurrent.atomic.AtomicInteger, String)]()
 
+  /** Rows of admission cap per shuffle partition of a bounded batch body
+    * (the small-row operator bodies the ingest loops run). */
+  private val RowsPerPartition = 512L
+
+  /** Fewest shuffle partitions of a bounded batch body: the measured
+    * sweet spot for bench-scale batches, so the sf0.1 bench numbers
+    * stay comparable. */
+  private val MinPartitions = 8L
+
   /** Shuffle-partition pin for a bounded micro-batch body, derived from
     * the batch's admission-control ROW CAP (the r16 verdict's item: a
     * literal pin serializes a cluster-scale micro-batch): one partition
-    * per `spark.graft.batch.targetRowsPerPartition` rows of the cap
-    * (default 512 — the small-row operator bodies these loops run),
-    * floored at 8 (the measured sweet spot for bench-scale batches, so
-    * the driver's sf0.1 numbers stay comparable) and capped at 4× the
-    * session's parallelism (past that, extra tiny partitions are pure
-    * scheduling overhead for a BOUNDED body). */
-  private[graft] def batchPartitions(s: SparkSession, rowCap: Long,
-      floor: Int = 8): Int = {
-    val target = s.conf.get("spark.graft.batch.targetRowsPerPartition",
-      "512").toLong
-    val byCap = math.max(1L, (math.max(rowCap, 0L) + target - 1) / target)
+    * per [[RowsPerPartition]] rows of the cap, floored at
+    * [[MinPartitions]] and capped at 4× the session's parallelism (past
+    * that, extra tiny partitions are pure scheduling overhead for a
+    * BOUNDED body). */
+  private[graft] def batchPartitions(s: SparkSession, rowCap: Long): Int = {
+    val byCap = math.max(1L,
+      (math.max(rowCap, 0L) + RowsPerPartition - 1) / RowsPerPartition)
     val ceil = math.max(s.sparkContext.defaultParallelism.toLong * 4,
-      floor.toLong)
-    math.min(math.max(byCap, floor.toLong), ceil).toInt
+      MinPartitions)
+    math.min(math.max(byCap, MinPartitions), ceil).toInt
   }
 
   private[graft] def withBatchConfs[T](s: SparkSession, partitions: Int)
@@ -326,9 +336,9 @@ object StoreMaint {
     txt.trim.toLong
   }
 
-  /** The exactly-once guard of the four stores' ingest loops: true =
-    * marker present, skip the batch; false = apply it. An id below the
-    * retention watermark throws — see [[retentionSweep]]. */
+  /** The exactly-once guard of [[applyOnce]]: true = marker present, skip
+    * the batch; false = apply it. An id below the retention watermark
+    * throws — see [[retentionSweep]]. */
   private[graft] def batchAlreadyApplied(s: SparkSession, root: String,
       id: Long): Boolean = {
     val fs = fsFor(s, new Path(root))
@@ -346,8 +356,8 @@ object StoreMaint {
     }
   }
 
-  /** Commit a batch's applied marker — the LAST write of an ingest loop
-    * iteration (the exactly-once commit point). */
+  /** Commit a batch's applied marker — the exactly-once commit point,
+    * written last by [[applyOnce]]. */
   private[graft] def markApplied(s: SparkSession, root: String,
       id: Long): Unit = {
     val p = new Path(s"$root/applied/$id")
@@ -394,6 +404,102 @@ object StoreMaint {
         (cutoff, removed.toSeq)
       }
     }
+  }
+
+  // ---- the exactly-once ingest harness -------------------------------------
+
+  /** Micro-batches per shard the ingest streams' rate limit aims for: the
+    * limit is ceil(maxShardCount / 2), so every SF streams in two
+    * deterministic batches regardless of corpus size — enough to exercise
+    * an empty-store bootstrap and a later batch against appended history;
+    * each extra batch costs a full store round-trip, so the count stays
+    * minimal. The stream ([[shardStream]]) and the oracle
+    * ([[batchedCte]]) both read this one value. */
+  private[graft] val TargetBatches = 2L
+
+  /** One ingest micro-batch of the store rooted at `root`, EXACTLY-ONCE
+    * under foreachBatch's at-least-once replay contract:
+    *  - a batch whose `applied/<id>` marker exists is skipped wholesale
+    *    (the crash-after-write-before-checkpoint replay), and an id below
+    *    the retention watermark refuses ([[batchAlreadyApplied]]);
+    *  - `body` runs under the batch-scoped confs ([[withBatchConfs]],
+    *    `partitions` from [[batchPartitions]] of the trigger's row cap);
+    *    it writes its delivery to `root/out/batch=<id>` with OVERWRITE,
+    *    so a replay that raced the marker rewrites, never appends. The
+    *    body owns that write because its place among the lookups and
+    *    appends is the store's: q108/q114 answer from the store state
+    *    BEFORE the batch, so they write it before appending;
+    *  - the marker commits LAST. A body that throws leaves no marker and
+    *    the re-delivered batch runs again.
+    * The one window left — crash after the body's store writes, before
+    * the marker — re-runs the body on replay; each store closes it on its
+    * own side (duplicate-tolerant reads for the LSH/IVF/PQ/text stores,
+    * the batch TAG riding the z-store commit, the coordinate-keyed view
+    * write of q143). */
+  private[graft] def applyOnce(s: SparkSession, root: String, id: Long,
+      partitions: Int)(body: => Unit): Unit = {
+    if (batchAlreadyApplied(s, root, id)) return
+    withBatchConfs(s, partitions) {
+      body
+      markApplied(s, root, id)
+    }
+  }
+
+  /** The rate-limited graft-shards stream of `shardDir`, parsed by its
+    * `wire` schema, plus the trigger's row cap (limit × NumShards) for
+    * [[batchPartitions]]. The limit is ceil(maxShardCount /
+    * [[TargetBatches]]) read from chunk-name metadata
+    * ([[GraftShards.maxShardCount]]), so with an explicit routing rule the
+    * batch membership is `seq div limit` — what [[batchedCte]] restates. */
+  private[graft] def shardStream(s: SparkSession, shardDir: String,
+      wire: StructType): (DataFrame, Long) = {
+    val limit =
+      (GraftShards.maxShardCount(shardDir) + TargetBatches - 1) / TargetBatches
+    val stream = s.readStream.format("graft-shards")
+      .option("startingPosition", "TRIM_HORIZON")
+      .option("maxRecordsPerShardPerTrigger", limit.toString)
+      .load(shardDir)
+      .select(from_json(col("data"), wire).as("r"))
+      .select(col("r.*"))
+    (stream, limit * GraftShards.NumShards)
+  }
+
+  /** Drain `stream` through `body` (an [[applyOnce]] batch) with
+    * foreachBatch at `root/ckpt` under AvailableNow, then read back the
+    * per-batch deliveries under `root/out` — `batch` widened to long (the
+    * partition-dir value is discovered as int). */
+  private[graft] def run(s: SparkSession, stream: DataFrame, root: String)(
+      body: (DataFrame, Long) => Unit): DataFrame = {
+    stream.writeStream
+      .foreachBatch { (df: DataFrame, id: Long) => body(df, id) }
+      .option("checkpointLocation", s"$root/ckpt")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    s.read.parquet(s"$root/out").withColumn("batch", col("batch").cast("long"))
+  }
+
+  /** The oracle's restatement of [[shardStream]]'s batch membership, as
+    * three CTEs (`shardseq`, `lim`, `batched`, no trailing comma) over
+    * `rel`: rank within shard `key mod NumShards` by `orderBy` (the order
+    * the shards were written in; empty = `key`), divided by ceil(max
+    * shard count / [[TargetBatches]]). `batched` yields `key`, the
+    * `carry` columns and `batch`. */
+  private[graft] def batchedCte(rel: String, key: String,
+      orderBy: String = "", carry: Seq[String] = Nil): String = {
+    val n = GraftShards.NumShards
+    val cols = (key +: carry).mkString(", ")
+    val sCols = (key +: carry).map("s." + _).mkString(", ")
+    s"""shardseq AS (
+  SELECT $cols,
+    ROW_NUMBER() OVER (PARTITION BY $key % $n
+      ORDER BY ${if (orderBy.isEmpty) key else orderBy}) - 1 AS seq
+  FROM $rel),
+lim AS (SELECT CAST(CEIL(CAST(MAX(c) AS DOUBLE) / $TargetBatches) AS BIGINT) AS r
+  FROM (SELECT COUNT(*) AS c FROM $rel GROUP BY $key % $n)),
+batched AS (
+  SELECT $sCols, CAST(s.seq // l.r AS BIGINT) AS batch
+  FROM shardseq s, lim l)"""
   }
 
   // ---- tombstones ----------------------------------------------------------

@@ -5300,13 +5300,10 @@ object ZOrder {
 
   // ---- q132: continuous z-store ingest (exactly-once) ---------------------
 
-  private val TargetBatches = 2L
-
   /** One z-ingest micro-batch: derive the clustering keys, append the
     * batch under its TAG, then answer the STANDING band query through the
     * store — the q117 append-then-answer shape for the fifth persisted
-    * store. Exactly-once is two-layer like every ingest loop here: the
-    * applied-marker skips a fully-replayed batch wholesale, and the
+    * store. Run exactly-once by [[StoreMaint.applyOnce]]; the
     * marker-missed window (crash after the version commit, before the
     * marker) is closed by the batch TAG riding the manifest version —
     * the z-store's rows aren't functional in a key, so duplicate-tolerant
@@ -5314,11 +5311,8 @@ object ZOrder {
     * the tag makes the re-append itself a no-op. */
   private[graft] def ingestBatch(s: SparkSession, root: String,
       df: DataFrame, id: Long, lo: Long, hi: Long,
-      rowCap: Long = 4096L): Unit = {
-    if (StoreMaint.batchAlreadyApplied(s, root, id)) return
-    // partitions derived from the trigger's admission cap, not a literal
-    // pin (r17 — resolves to the former 8 at bench scale)
-    StoreMaint.withBatchConfs(s, StoreMaint.batchPartitions(s, rowCap)) {
+      rowCap: Long = 4096L): Unit =
+    StoreMaint.applyOnce(s, root, id, StoreMaint.batchPartitions(s, rowCap)) {
       val store = s"$root/store"
       appendZOrdered(
         df.select(col("doc_id"),
@@ -5329,9 +5323,7 @@ object ZOrder {
         .select(col("doc_id"), col("k1"), col("k2"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$root/out/batch=$id")
-      StoreMaint.markApplied(s, root, id)
     }
-  }
 
   /** q132: CONTINUOUS z-store ingest — documents arrive over the
     * graft-shards stream (explicit doc_id-mod routing) in two
@@ -5350,16 +5342,7 @@ object ZOrder {
     "q132_zorder_stream_ingest",
     s"""WITH b0 AS (SELECT MIN(LENGTH(text)) AS mn, MAX(LENGTH(text)) AS mx
        |  FROM documents),
-       |shardseq AS (
-       |  SELECT doc_id,
-       |    ROW_NUMBER() OVER (PARTITION BY doc_id % ${GraftShards.NumShards}
-       |      ORDER BY doc_id) - 1 AS seq
-       |  FROM documents),
-       |lim AS (SELECT CAST(CEIL(CAST(MAX(c) AS DOUBLE) / $TargetBatches) AS BIGINT) AS r
-       |  FROM (SELECT COUNT(*) AS c FROM documents
-       |        GROUP BY doc_id % ${GraftShards.NumShards})),
-       |batched AS (
-       |  SELECT s.doc_id, CAST(s.seq // l.r AS BIGINT) AS batch FROM shardseq s, lim l),
+       |${StoreMaint.batchedCte("documents", "doc_id")},
        |bs AS (SELECT DISTINCT batch FROM batched),
        |member AS (
        |  SELECT bs.batch, bt.doc_id FROM bs JOIN batched bt ON bt.batch <= bs.batch)
@@ -5369,12 +5352,8 @@ object ZOrder {
        |                         AND b0.mn + (b0.mx - b0.mn) * 7 // 10
        |ORDER BY m.batch, d.doc_id""".stripMargin,
   ) { (s, d) =>
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val shardDir = GraftShards.documentsShards(s, d)
-    // metadata-only: chunk names carry the per-shard record count (the
-    // layout was routed by this same pmod rule — GraftShards.maxShardCount)
-    val maxShardCnt = GraftShards.maxShardCount(shardDir)
-    val limit = (maxShardCnt + TargetBatches - 1) / TargetBatches
+    val (docs, rowCap) = StoreMaint.shardStream(s,
+      GraftShards.documentsShards(s, d), GraftShards.DocWire)
     // the standing band derives from the full corpus — a constant of the
     // deployment, mirrored by the oracle's b0 CTE
     val b = Tables.documents(s, d)
@@ -5382,26 +5361,8 @@ object ZOrder {
     val (mn, mx) = (b.getInt(0).toLong, b.getInt(1).toLong)
     val (lo, hi) = (mn + (mx - mn) * 3 / 10, mn + (mx - mn) * 7 / 10)
     val root = Files.createTempDirectory("graft-zorder-ingest").toString
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val q = s.readStream.format("graft-shards")
-      .option("startingPosition", "TRIM_HORIZON")
-      .option("maxRecordsPerShardPerTrigger", limit.toString)
-      .load(shardDir)
-      .select(from_json(col("data"), docSchema).as("r"))
-      .select(col("r.*"))
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        ingestBatch(s, root, df, id, lo, hi, limit * GraftShards.NumShards)
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.parquet(s"$root/out")
-      .select(col("batch").cast("long").as("batch"), col("doc_id"),
-        col("k1"), col("k2"))
+    StoreMaint.run(s, docs, root)(ingestBatch(s, root, _, _, lo, hi, rowCap))
+      .select(col("batch"), col("doc_id"), col("k1"), col("k2"))
       .orderBy(col("batch"), col("doc_id"))
   }
 
@@ -5418,13 +5379,12 @@ object ZOrder {
     * batch's own delta rows — structurally never the base store (the
     * delta arrives FROM the source; nothing here can touch base files). */
   private[graft] def ivmBatch(s: SparkSession, root: String,
-      df: DataFrame, id: Long): Unit = {
-    if (StoreMaint.batchAlreadyApplied(s, root, id)) return
+      df: DataFrame, id: Long): Unit =
     // literal pin kept: admission here is maxVersionsPerTrigger (no row
     // cap exists to derive from) and the fold reduces to <= #langs rows
     // regardless of delta volume — a deployment with huge deltas raises
     // spark.sql.shuffle.partitions around the stream instead
-    StoreMaint.withBatchConfs(s, 4) {
+    StoreMaint.applyOnce(s, root, id, 4) {
       import s.implicits._
       // fold PER VERSION, resolving the previous state from what EXISTS:
       // committed version numbers are not contiguous (claimNextVersion
@@ -5480,9 +5440,7 @@ object ZOrder {
           .mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$root/out/batch=$id")
       }
-      StoreMaint.markApplied(s, root, id)
     }
-  }
 
   /** q143: CONTINUOUS incremental view maintenance — the composition the
     * graft-zcdf source exists for, and the streaming completion of
@@ -5509,20 +5467,11 @@ object ZOrder {
   ) { (s, d) =>
     val dir = zcdfStreamStoreFor(s, d)
     val root = Files.createTempDirectory("graft-zcdfivm").toString
-    val q = s.readStream.format("graft-zcdf")
+    val deltas = s.readStream.format("graft-zcdf")
       .option("startingVersion", "earliest")
       .option("maxVersionsPerTrigger", "1")
       .load(dir)
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        ivmBatch(s, root, df, id)
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.parquet(s"$root/out")
+    StoreMaint.run(s, deltas, root)(ivmBatch(s, root, _, _))
       .select(col("ver"), col("lang"), col("n_docs"), col("sum_chars"))
       .orderBy(col("ver"), col("lang"))
   }
@@ -5534,16 +5483,13 @@ object ZOrder {
     * versions of one key; replaying them as separate merges would be
     * order-dependent — the within-batch argmax is the standard dedupe),
     * apply it as a keyed copy-on-write [[mergeByKey]] under the batch
-    * TAG, then dump the post-merge snapshot. Exactly-once is the q132
-    * two-layer recipe: the applied-marker skips a replayed batch
-    * wholesale, and the marker-missed window is closed by the tag riding
-    * the merge's own epoch commit (a replayed tagged merge no-ops). */
+    * TAG, then dump the post-merge snapshot. Run exactly-once by
+    * [[StoreMaint.applyOnce]]; the marker-missed window is closed by the
+    * tag riding the merge's own epoch commit (a replayed tagged merge
+    * no-ops), as in q132. */
   private[graft] def mergeIngestBatch(s: SparkSession, root: String,
-      df: DataFrame, id: Long, rowCap: Long = 4096L): Unit = {
-    if (StoreMaint.batchAlreadyApplied(s, root, id)) return
-    // partitions derived from the trigger's admission cap, not a literal
-    // pin (r17 — resolves to the former 8 at bench scale)
-    StoreMaint.withBatchConfs(s, StoreMaint.batchPartitions(s, rowCap)) {
+      df: DataFrame, id: Long, rowCap: Long = 4096L): Unit =
+    StoreMaint.applyOnce(s, root, id, StoreMaint.batchPartitions(s, rowCap)) {
       import org.apache.spark.sql.expressions.Window
       val store = s"$root/store"
       val w = Window.partitionBy(col("doc_id"))
@@ -5561,9 +5507,7 @@ object ZOrder {
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$root/out/batch=$id"))
-      StoreMaint.markApplied(s, root, id)
     }
-  }
 
   /** q141: CONTINUOUS CDC apply — a keyed change stream (two waves:
     * doc_id%7 re-crawls at +1000 chars as version 0, doc_id%5 at +5000
@@ -5585,17 +5529,7 @@ object ZOrder {
        |  UNION ALL
        |  SELECT doc_id, 1 AS version, n_chars + 5000 AS nc
        |  FROM documents WHERE doc_id % 5 = 0),
-       |shardseq AS (
-       |  SELECT doc_id, version, nc,
-       |    ROW_NUMBER() OVER (PARTITION BY doc_id % ${GraftShards.NumShards}
-       |      ORDER BY version, doc_id) - 1 AS seq
-       |  FROM cdc),
-       |lim AS (SELECT CAST(CEIL(CAST(MAX(c) AS DOUBLE) / $TargetBatches) AS BIGINT) AS r
-       |  FROM (SELECT COUNT(*) AS c FROM cdc
-       |        GROUP BY doc_id % ${GraftShards.NumShards})),
-       |batched AS (
-       |  SELECT s.doc_id, s.version, s.nc, CAST(s.seq // l.r AS BIGINT) AS batch
-       |  FROM shardseq s, lim l),
+       |${StoreMaint.batchedCte("cdc", "doc_id", "version, doc_id", Seq("version", "nc"))},
        |bs AS (SELECT DISTINCT batch FROM batched),
        |applied AS (
        |  SELECT bs.batch, bt.doc_id, bt.nc,
@@ -5609,7 +5543,7 @@ object ZOrder {
        |  ON a.batch = b.batch AND a.doc_id = d.doc_id
        |ORDER BY b.batch, d.doc_id""".stripMargin,
   ) { (s, d) =>
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import org.apache.spark.sql.types.LongType
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("n_chars"))
     val cdc = docs.filter(col("doc_id") % 7 === 0)
@@ -5630,31 +5564,14 @@ object ZOrder {
         Seq(col("version"), col("doc_id"))))
     // metadata-only: the chunk names of the layout just written above
     // carry the per-shard record count (GraftShards.maxShardCount)
-    val maxShardCnt = prf("q141.maxShardCnt")(
-      GraftShards.maxShardCount(shardDir))
-    val limit = (maxShardCnt + TargetBatches - 1) / TargetBatches
-    val rowSchema = StructType(Seq(
+    val cdcWire = StructType(Seq(
       StructField("doc_id", LongType), StructField("lang", StringType),
       StructField("n_chars", LongType), StructField("version", LongType)))
-    val q = s.readStream.format("graft-shards")
-      .option("startingPosition", "TRIM_HORIZON")
-      .option("maxRecordsPerShardPerTrigger", limit.toString)
-      .load(shardDir)
-      .select(from_json(col("data"), rowSchema).as("r"))
-      .select(col("r.*"))
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        mergeIngestBatch(s, root, df, id,
-          limit * GraftShards.NumShards)
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    prf("q141.streamWall")(q.awaitTermination())
-    s.read.parquet(s"$root/out")
-      .select(col("batch").cast("long").as("batch"), col("doc_id"),
-        col("lang"), col("n_chars"))
+    val (changes, rowCap) = prf("q141.maxShardCnt")(
+      StoreMaint.shardStream(s, shardDir, cdcWire))
+    prf("q141.streamWall")(
+      StoreMaint.run(s, changes, root)(mergeIngestBatch(s, root, _, _, rowCap)))
+      .select(col("batch"), col("doc_id"), col("lang"), col("n_chars"))
       .orderBy(col("batch"), col("doc_id"))
   }
 
@@ -5957,22 +5874,12 @@ object ZOrder {
   private def sinkStoreFor(s: SparkSession, d: String): String =
     synchronized {
       sinkStores.getOrElseUpdate(d, {
-        import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
         val root = Files.createTempDirectory("graft-zsinkq").toString
         val store = s"$root/store"
-        val shardDir = GraftShards.documentsShards(s, d)
-        // metadata-only per-shard counts from the chunk names
-        val maxShardCnt = GraftShards.maxShardCount(shardDir)
-        val limit = (maxShardCnt + TargetBatches - 1) / TargetBatches
-        val docSchema = StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType)))
+        val (docs, _) = StoreMaint.shardStream(s,
+          GraftShards.documentsShards(s, d), GraftShards.DocWire)
         def run(ckpt: String): Unit = {
-          val q = s.readStream.format("graft-shards")
-            .option("startingPosition", "TRIM_HORIZON")
-            .option("maxRecordsPerShardPerTrigger", limit.toString)
-            .load(shardDir)
-            .select(from_json(col("data"), docSchema).as("r"))
-            .select(col("r.*"))
+          val q = docs
             .select(col("doc_id"),
               length(col("text")).cast("long").as("k1"),
               pmod(col("doc_id"), lit(997L)).as("k2"))
@@ -6220,7 +6127,6 @@ object ZOrder {
   private def toTableStoreFor(s: SparkSession, d: String): String =
     synchronized {
       toTableStores.getOrElseUpdate(d, {
-        import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
         val root = Files.createTempDirectory("graft-ztotableq").toString
         val cat = "graftq156c" + math.abs(d.hashCode).toString
         s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.ZCatalog")
@@ -6228,19 +6134,10 @@ object ZOrder {
         s.sql(s"CREATE NAMESPACE $cat.lake")
         s.sql(s"""CREATE TABLE $cat.lake.sunk
           (doc_id BIGINT, k1 BIGINT, k2 BIGINT) PARTITIONED BY (k1, k2)""")
-        val shardDir = GraftShards.documentsShards(s, d)
-        // metadata-only per-shard counts from the chunk names
-        val maxShardCnt = GraftShards.maxShardCount(shardDir)
-        val limit = (maxShardCnt + TargetBatches - 1) / TargetBatches
-        val docSchema = StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType)))
+        val (docs, _) = StoreMaint.shardStream(s,
+          GraftShards.documentsShards(s, d), GraftShards.DocWire)
         def run(ckpt: String): Unit = {
-          val q = s.readStream.format("graft-shards")
-            .option("startingPosition", "TRIM_HORIZON")
-            .option("maxRecordsPerShardPerTrigger", limit.toString)
-            .load(shardDir)
-            .select(from_json(col("data"), docSchema).as("r"))
-            .select(col("r.*"))
+          val q = docs
             .select(col("doc_id"),
               length(col("text")).cast("long").as("k1"),
               pmod(col("doc_id"), lit(997L)).as("k2"))

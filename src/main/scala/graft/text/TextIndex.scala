@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
-import graft.sources.{Lease, StoreMaint}
+import graft.sources.{GraftShards, Lease, StoreMaint}
 import graft.sources.StoreMaint.Layout
 
 /** Persisted inverted text index — the third member of the persisted-index
@@ -37,8 +37,8 @@ import graft.sources.StoreMaint.Layout
   * (`(doc_id, tok) → tf`, `doc_id → dl`), so reads DEDUPLICATE by key and
   * a re-appended batch changes nothing; each write's stats increment lands
   * in its own `src=<tag>` dir with OVERWRITE, so a replay rewrites rather
-  * than double-counts. [[ingestBatch]] adds the applied-marker recipe of
-  * [[graft.dedup.LshIndex.ingestBatch]] on top, making the streaming loop
+  * than double-counts. [[ingestBatch]] adds the applied marker of
+  * [[StoreMaint.applyOnce]] on top, making the streaming loop
   * (q117) exactly-once end-to-end. A torn non-replayed write can at worst
   * leave stats ahead/behind the data until the caller retries or
   * [[compact]] recomputes them from the surviving rows.
@@ -439,11 +439,8 @@ object TextIndex {
 
   // ---- q117: continuous text-index ingest ---------------------------------
 
-  private val TargetBatches = 2L
-
-  /** One text-ingest micro-batch against the store at `root/index` —
-    * exactly-once under foreachBatch replay by the applied-marker recipe
-    * ([[graft.dedup.LshIndex.ingestBatch]]) ON TOP of [[append]]'s own
+  /** One text-ingest micro-batch against the store at `root/index`, run
+    * exactly-once by [[StoreMaint.applyOnce]] ON TOP of [[append]]'s own
     * idempotence: a replayed un-markered batch re-runs `append("b<id>")`,
     * whose duplicate rows and rewritten stats dir converge to the clean
     * state, then overwrites its verdict dir with an identical search
@@ -451,20 +448,13 @@ object TextIndex {
     * everything that has streamed so far — the index-freshness probe of a
     * live retrieval deployment. */
   private[graft] def ingestBatch(s: SparkSession, root: String,
-      df: DataFrame, id: Long, rowCap: Long = 4096L): Unit = {
-    // replayed epoch already fully applied → skip; an id below the
-    // retention watermark refuses loudly (StoreMaint.retentionSweep)
-    if (StoreMaint.batchAlreadyApplied(s, root, id)) return
-    // partitions derived from the trigger's admission cap, not a literal
-    // pin (r17 — resolves to the former 8 at bench scale)
-    StoreMaint.withBatchConfs(s, StoreMaint.batchPartitions(s, rowCap)) {
+      df: DataFrame, id: Long, rowCap: Long = 4096L): Unit =
+    StoreMaint.applyOnce(s, root, id, StoreMaint.batchPartitions(s, rowCap)) {
       val idx = s"$root/index"
       append(df.select(col("doc_id"), col("text")), idx, s"b$id")
       search(s, idx, TextAnalysis.Bm25QueryTerms, 10)
         .write.mode(SaveMode.Overwrite).parquet(s"$root/out/batch=$id")
-      StoreMaint.markApplied(s, root, id)
     }
-  }
 
   /** q117: CONTINUOUS text-index ingest — documents arrive over the
     * graft-shards stream (explicit `doc_id mod numShards` routing) in two
@@ -472,8 +462,8 @@ object TextIndex {
     * persisted inverted index (which starts EMPTY) and then answers the
     * standing BM25 query through the store, so the result records the
     * index state AFTER each batch. EXACT oracle by the q108 recipe: batch
-    * membership is `rank-in-shard div ceil(maxShardCount/2)` in SQL, and
-    * the per-batch scores are BM25 over the docs of batches ≤ b — so the
+    * membership is SQL ([[StoreMaint.batchedCte]]), and the per-batch
+    * scores are BM25 over the docs of batches ≤ b — so the
     * driver's hash check covers the incremental stats sums, the pruned
     * postings reads, df over the partial corpus, AND exactly-once append
     * (a double-appended batch would double tf/df/stats and hash-fail;
@@ -483,16 +473,7 @@ object TextIndex {
     s"""WITH toks AS (
        |  SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS tok FROM documents),
        |dl0 AS (SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY doc_id),
-       |shardseq AS (
-       |  SELECT doc_id,
-       |    ROW_NUMBER() OVER (PARTITION BY doc_id % ${graft.sources.GraftShards.NumShards}
-       |      ORDER BY doc_id) - 1 AS seq
-       |  FROM documents),
-       |lim AS (SELECT CAST(CEIL(CAST(MAX(c) AS DOUBLE) / $TargetBatches) AS BIGINT) AS r
-       |  FROM (SELECT COUNT(*) AS c FROM documents
-       |        GROUP BY doc_id % ${graft.sources.GraftShards.NumShards})),
-       |batched AS (
-       |  SELECT s.doc_id, CAST(s.seq // l.r AS BIGINT) AS batch FROM shardseq s, lim l),
+       |${StoreMaint.batchedCte("documents", "doc_id")},
        |b AS (SELECT DISTINCT batch FROM batched),
        |member AS (
        |  SELECT b.batch, bt.doc_id FROM b JOIN batched bt ON bt.batch <= b.batch),
@@ -522,35 +503,12 @@ object TextIndex {
        |          ORDER BY score_micro DESC, doc_id) AS rnk FROM sc)
        |WHERE rnk <= 10 ORDER BY batch, rnk""".stripMargin,
   ) { (s, d) =>
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val shardDir = graft.sources.GraftShards.documentsShards(s, d)
-    // metadata-only: chunk names carry the per-shard record count (the
-    // layout was routed by this same pmod rule — GraftShards.maxShardCount)
-    val maxShardCnt = graft.sources.GraftShards.maxShardCount(shardDir)
-    val limit = (maxShardCnt + TargetBatches - 1) / TargetBatches
+    val (docs, rowCap) = StoreMaint.shardStream(s,
+      GraftShards.documentsShards(s, d), GraftShards.DocWire)
     val root = Files.createTempDirectory("graft-text-ingest").toString
     create(s, s"$root/index")
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val q = s.readStream.format("graft-shards")
-      .option("startingPosition", "TRIM_HORIZON")
-      .option("maxRecordsPerShardPerTrigger", limit.toString)
-      .load(shardDir)
-      .select(from_json(col("data"), docSchema).as("r"))
-      .select(col("r.*"))
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        ingestBatch(s, root, df, id,
-          limit * graft.sources.GraftShards.NumShards)
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.parquet(s"$root/out")
-      .select(col("batch").cast("long").as("batch"), col("doc_id"),
-        col("score"), col("rnk"))
+    StoreMaint.run(s, docs, root)(ingestBatch(s, root, _, _, rowCap))
+      .select(col("batch"), col("doc_id"), col("score"), col("rnk"))
       .orderBy(col("batch"), col("rnk"))
   }
 
