@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     // 1-minute loadavg, embedded in the record so every consumer can
@@ -11,27 +10,8 @@ object Bench {
       catch { case _: Throwable => -1.0 }
     val loadStart = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // standing default: storage-partitioned joins over bucketed z-tables
-      // (q161) plan exchange-free; a no-op for every non-bucketed scan
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // Inferred isnotnull constraints push through projections and
-      // re-evaluate expensive expressions (shingle sets) below the join —
-      // measured 2.1x on the q41 pairwise-dedup join (DbgProf: 16.1s with,
-      // 7.6s without). Our queries carry explicit filters; nothing relies
-      // on inference.
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      // bounded AvailableNow runs emit on the data batch; the trailing
-      // watermark-only batch is pure overhead (~0.5 s per streaming query)
-      .config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession(cpus)
     // Untimed infra warmup: first query otherwise absorbs ~3.5 s of one-time
     // JVM/class-loading cost (codegen compiler, parquet reader, shuffle +
     // broadcast machinery). Touches only the 5-row region table — no query
@@ -159,7 +139,7 @@ object Bench {
         // sweep at 10M rows: 4/8/16/32 salts -> 3.5/2.7/2.3/2.6 s)
         val (sums3, salted) = under(skewJoin = false, thresholds16m = false)(
           timed(Skew.checksum(Skew.saltedEquiJoin(
-            big, Skew.skewDim(spark), "key", math.min(16, cpus.toInt)))))
+            big, Skew.skewDim(spark), "key", math.min(16, cpus)))))
         // a checksum disagreement is a FINDING to record, not a reason to
         // throw away the ~2 min of query measurements already taken — the
         // hard three-plan-equivalence assertion lives in SkewSpec

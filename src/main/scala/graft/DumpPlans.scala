@@ -1,18 +1,16 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-/** Dev tool: regenerate docs/PLANS.md — formatted physical plans of the
-  * headline queries with the properties PlanSpec asserts. Run:
-  * `sbt "runMain graft.DumpPlans"` after plan-affecting changes. */
+/** Dev tool: regenerate docs/PLANS.md — physical plans of the headline
+  * queries with the properties PlanSpec asserts. Run:
+  * `sbt "runMain graft.DumpPlans"` after plan-affecting changes.
+  *
+  * With query names (`sbt "runMain graft.DumpPlans q141_zorder_cdc_merge
+  * q75_pagerank"`) it writes each named query's formatted plan to
+  * `plans/<query>.txt` instead. */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     graft.functions.ArrayExprs.register(spark)
     val d = "/root/testdata/sf0.001"
     val picks: Seq[(String, String)] = Seq(
@@ -31,22 +29,32 @@ object DumpPlans {
       "q128_knn_join" -> "corpus x corpus KNN: both sides distributed, one cell-keyed equi-join (no cartesian), per-query rank window",
       "q129_semantic_dedup" -> "SemDeDup: k-means clusters as blocking; cosine threshold inside the within-cluster pair join's condition; per-victim MIN aggregate",
     )
-    val qs = SparkEntry.queries
-    val sb = new StringBuilder
-    sb.append("# Physical plans — headline queries\n\n")
-    sb.append("Generated by `graft.DumpPlans` at sf0.001 (plan SHAPE is what\n")
-    sb.append("matters; sizes differ at scale). PlanSpec asserts the key\n")
-    sb.append("properties in CI; this file is the human-readable snapshot.\n")
-    picks.foreach { case (name, note) =>
-      val df = qs(name)(spark, d)
-      sb.append(s"\n## $name\n\n_${note}_\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.SimpleMode).trim)
-      sb.append("\n```\n")
+    if (args.nonEmpty) {
+      Files.createDirectories(Paths.get("plans"))
+      SparkEntry.registry.filter(r => args.contains(r.name)).foreach { r =>
+        val out = Paths.get(s"plans/${r.name}.txt")
+        Files.writeString(out, r.fn(spark, d).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
+        println(s"[plans] wrote $out")
+      }
+    } else {
+      val qs = SparkEntry.queries
+      val sb = new StringBuilder
+      sb.append("# Physical plans — headline queries\n\n")
+      sb.append("Generated by `graft.DumpPlans` at sf0.001 (plan SHAPE is what\n")
+      sb.append("matters; sizes differ at scale). PlanSpec asserts the key\n")
+      sb.append("properties in CI; this file is the human-readable snapshot.\n")
+      picks.foreach { case (name, note) =>
+        val df = qs(name)(spark, d)
+        sb.append(s"\n## $name\n\n_${note}_\n\n```\n")
+        sb.append(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.SimpleMode).trim)
+        sb.append("\n```\n")
+      }
+      Files.createDirectories(Paths.get("docs"))
+      Files.writeString(Paths.get("docs/PLANS.md"), sb.toString)
+      println(s"[plans] wrote docs/PLANS.md (${picks.size} queries)")
     }
-    Files.createDirectories(Paths.get("docs"))
-    Files.writeString(Paths.get("docs/PLANS.md"), sb.toString)
-    println(s"[plans] wrote docs/PLANS.md (${picks.size} queries)")
     spark.stop()
   }
 }

@@ -17,26 +17,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   */
 object JobProf {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // quick A/B: SPARK_GRAFT_PROF_CONF="spark.sql.adaptive.enabled=false;k=v"
     sys.env.get("SPARK_GRAFT_PROF_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k, v)
     })
-    // registered graft_* SQL temp functions (graft_bloom_agg, graft_dot,
-    // ...) — every sibling driver main registers them; profiling a
-    // registry query that uses one failed with unresolved-function
-    // before (r16 advisor)
+    // the graft_* SQL temp functions (graft_bloom_agg, graft_dot, ...):
+    // profiling a registry query that uses one without registering it
+    // failed with unresolved-function
     graft.functions.ArrayExprs.register(spark)
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = args.toSet

@@ -78,16 +78,9 @@ object ScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = GraftSession.cpus
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus)
 
     // the real corpus's 31-word vocabulary seeds the generator
     val vocab = Tables.documents(spark, sfDir)
@@ -100,9 +93,9 @@ object ScaleProbe {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(p, true)
       genDocuments(spark, vocab, BaseDocs * scale)
-        .repartition(cpus.toInt).write.parquet(s"$dir/documents.parquet")
+        .repartition(cpus).write.parquet(s"$dir/documents.parquet")
       genEmbeddings(spark, BaseVecs * scale)
-        .repartition(cpus.toInt).write.parquet(s"$dir/embeddings.parquet")
+        .repartition(cpus).write.parquet(s"$dir/embeddings.parquet")
       dir
     }
     val x1 = writeCorpus(1)

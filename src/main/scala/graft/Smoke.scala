@@ -1,24 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke main mirroring the driver's t1 check: SparkEntry.entry must
   * return >0 rows on sf0.001. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // standing default: storage-partitioned joins over bucketed z-tables
-      // (q161) plan exchange-free; a no-op for every non-bucketed scan
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // see Bench.scala: avoids duplicated expensive projections (2x on q41)
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val n = SparkEntry.entry(spark).count()
     println(s"[smoke] entry rows=$n ${if (n > 0) "OK" else "FAIL"}")
     spark.stop()

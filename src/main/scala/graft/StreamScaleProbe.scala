@@ -56,16 +56,8 @@ object StreamScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession(cpus)
 
     def writeCorpus(scale: Int): String = {
       val dir = s"${System.getProperty("java.io.tmpdir")}/graft-streamprobe/x$scale"
@@ -73,7 +65,7 @@ object StreamScaleProbe {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(p, true)
       genEvents(spark, BaseEvents * scale, BaseUsers * scale)
-        .repartition(cpus.toInt).write.parquet(s"$dir/events.parquet")
+        .repartition(cpus).write.parquet(s"$dir/events.parquet")
       dir
     }
     val x1 = writeCorpus(1)

@@ -38,8 +38,8 @@ object Tables {
     *
     * Branching on the observed schema instead of pinning one layout keeps
     * a testdata regeneration from silently changing query semantics: an
-    * unrecognized ts type refuses loudly. The nanosAsLong flag is set in
-    * every session builder AND here (order-independent loading); it only
+    * unrecognized ts type refuses loudly. The nanosAsLong flag is set on
+    * the GraftSession plane AND here (order-independent loading); it only
     * affects NANOS columns, so it cannot change any other table's schema.
     */
   def events(s: SparkSession, d: String): DataFrame = {

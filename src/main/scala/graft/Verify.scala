@@ -1,30 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * Usage: `runMain graft.Verify <sfDir> <outDir> [q1,q2,…]`. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // standing default: storage-partitioned joins over bucketed z-tables
-      // (q161) plan exchange-free; a no-op for every non-bucketed scan
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // see Bench.scala: avoids duplicated expensive projections (2x on q41)
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      // bounded AvailableNow runs emit on the data batch; the trailing
-      // watermark-only batch is pure overhead (~0.5 s per streaming query)
-      .config("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val Array(sfDir, outDir) = args.take(2)
+    // optional third argument: dump only these (comma-separated) queries
+    // and their oracle entries, for fast iteration on a few operators
+    val wanted: String => Boolean =
+      args.lift(2).fold((_: String) => true)(_.split(',').toSet)
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -43,7 +31,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => wanted(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -44,12 +44,13 @@ object Correlate {
   /** 20 s — the reference's end-to-end HTTP timeout (pollingsvc.js:133). */
   val TimeoutMs: Long = 20000L
 
-  /** Keyed state: the latest event time, and whether the txn has already
-    * completed. A completed txn keeps a `done` TOMBSTONE for [[TimeoutMs]]
-    * of event time (the reference's headers-already-sent guard,
-    * svckinesis.js:80-88): an at-least-once source that re-delivers the
-    * terminal in a LATER micro-batch with a re-stamped (above-watermark)
-    * timestamp would otherwise emit a duplicate Completion. The tombstone
+  /** Keyed state: the latest event time (for a timed-out txn, when its
+    * timeout fired), and whether the txn has already completed. A completed
+    * txn keeps a `done` TOMBSTONE for [[TimeoutMs]] of event time (the
+    * reference's headers-already-sent guard, svckinesis.js:80-88): an
+    * at-least-once source that re-delivers the terminal in a LATER
+    * micro-batch with a re-stamped (above-watermark) timestamp would
+    * otherwise emit a duplicate Completion. The tombstone
     * is evicted by its own timeout, so state stays bounded; duplicates
     * arriving later than that are dropped by the watermark instead. */
   case class CorrState(ts: Long, done: Boolean)
@@ -63,43 +64,52 @@ object Correlate {
       .flatMapGroupsWithState[CorrState, Completion](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (txnId: String, evs: Iterator[StatusEvent], state: GroupState[CorrState]) =>
+          // Spark clears a key's timeout on every call and rejects one
+          // below the watermark, so every path that keeps state re-arms it
+          // above the watermark
+          val wm = state.getCurrentWatermarkMs()
+          def arm(deadline: Long): Unit =
+            state.setTimeoutTimestamp(math.max(deadline, wm + 1))
+          def timeOut(): Iterator[Completion] = {
+            // pending txn → TIMEOUT (R13); leave a done tombstone so a
+            // terminal re-delivered above the watermark AFTER the timeout
+            // is suppressed too (headers-already-sent). The watermark may
+            // be far past the deadline when this fires: the tombstone
+            // lives TimeoutMs from the later of the two.
+            val firedAt = math.max(state.get.ts + TimeoutMs, wm)
+            state.update(CorrState(firedAt, done = true))
+            arm(firedAt + TimeoutMs)
+            Iterator(Completion(txnId, "TIMEOUT"))
+          }
+          val done = state.exists && state.get.done
+          val pending = state.exists && !done
           if (state.hasTimedOut) {
-            if (!state.get.done) {
-              // pending txn → TIMEOUT (R13); leave a done tombstone so a
-              // terminal re-delivered above the watermark AFTER the
-              // timeout is suppressed too (headers-already-sent)
-              val ts = state.get.ts
-              state.update(CorrState(ts, done = true))
-              // the watermark may have jumped far past ts when this fires;
-              // a timeout timestamp must sit above it
-              state.setTimeoutTimestamp(
-                math.max(ts + 2 * TimeoutMs, state.getCurrentWatermarkMs() + TimeoutMs))
-              Iterator(Completion(txnId, "TIMEOUT"))
-            } else {
+            if (pending) timeOut()
+            else {
               state.remove() // expiring tombstone → silence
               Iterator.empty
             }
+          } else if (pending && state.get.ts + TimeoutMs <= wm) {
+            // the deadline passed before this event's batch: without a
+            // no-data batch the timeout fires only now, so the txn times
+            // out and the arriving event is swallowed (headers-already-sent)
+            timeOut()
           } else {
             val batch = evs.toSeq
             val terminal = batch
               .filter(e => e.status == "SUCCEEDED" || e.status == "FAILED")
               .sortBy(_.ts.getTime)
               .headOption
-            val alreadyDone = state.exists && state.get.done
             terminal match {
-              case Some(e) if !alreadyDone =>
+              case Some(e) if !done =>
                 // complete (svckinesis.js:105); same-batch duplicates
                 // collapse to the first terminal; a tombstone suppresses
                 // cross-batch re-deliveries
                 val doneTs = e.ts.getTime
                 state.update(CorrState(doneTs, done = true))
-                state.setTimeoutTimestamp(doneTs + TimeoutMs)
+                arm(doneTs + TimeoutMs)
                 Iterator(Completion(txnId, e.status))
-              case Some(_) =>
-                Iterator.empty // duplicate terminal after completion
-              case None if alreadyDone =>
-                Iterator.empty // RUNNING after completion: ignore
-              case None =>
+              case None if !done =>
                 // RUNNING pass-through (svckinesis.js:92-95): keep waiting,
                 // arm/refresh the 20 s timeout from the latest event time
                 // seen so far — the deadline only advances, so an
@@ -108,7 +118,12 @@ object Correlate {
                 val maxTs = (batch.map(_.ts.getTime) ++
                   (if (state.exists) Seq(state.get.ts) else Nil)).max
                 state.update(CorrState(maxTs, done = false))
-                state.setTimeoutTimestamp(maxTs + TimeoutMs)
+                arm(maxTs + TimeoutMs)
+                Iterator.empty
+              case _ =>
+                // duplicate terminal or RUNNING after completion: ignore,
+                // keeping the tombstone's expiry
+                arm(state.get.ts + TimeoutMs)
                 Iterator.empty
             }
           }

@@ -4,20 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole suite (JVM-singleton — Spark
-  * sessions are expensive; suites must not stop() it). */
+  * sessions are expensive; suites must not stop() it), on the
+  * [[GraftSession]] plane the mains run on. A spec that changes a plane key
+  * restores its prior value. */
 object TestSpark {
+  /** Fixed at 4 cores whatever `SPARK_GRAFT_CPUS` says, so the suite's
+    * partitioning does not depend on the host. */
+  val Cores = 4
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see Bench.scala: avoids duplicated expensive projections (2x on q41)
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = GraftSession(Cores)
     graft.functions.ArrayExprs.register(s)
     s
   }

@@ -17,17 +17,31 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(sec: Long) = new Timestamp(sec * 1000)
 
-  private def runCorrelate(batches: Seq[Seq[StatusEvent]]): Seq[Completion] = {
+  /** The completions, and the correlator's state rows after the last batch. */
+  private def correlateRun(batches: Seq[Seq[StatusEvent]]): (Seq[Completion], Long) = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[StatusEvent]
     val out = Correlate.correlate(input.toDS())
     spark.catalog.dropTempView("corr_sink")
     val q = out.writeStream.format("memory").queryName("corr_sink")
       .outputMode(OutputMode.Append).start()
-    try {
+    val stateRows = try {
       batches.foreach { b => input.addData(b); q.processAllAvailable() }
+      q.lastProgress.stateOperators.head.numRowsTotal
     } finally q.stop()
-    spark.table("corr_sink").as[Completion].collect().toSeq
+    (spark.table("corr_sink").as[Completion].collect().toSeq, stateRows)
+  }
+
+  private def runCorrelate(batches: Seq[Seq[StatusEvent]]): Seq[Completion] =
+    correlateRun(batches)._1
+
+  /** Runs `body` with a watermark-only batch after each data batch, which
+    * the session plane turns off; restores the prior value. */
+  private def withNoDataBatches[T](body: => T): T = {
+    val k = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prev = spark.conf.getOption(k)
+    spark.conf.set(k, "true")
+    try body finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
   }
 
   // NB: event times start at ts(1)+ — an event at epoch 0 equals the
@@ -46,12 +60,13 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("pending txn times out after 20 s event-time and is evicted (R13)") {
-    val got = runCorrelate(Seq(
+    // t2 can time out only in a watermark-only batch: no data follows ts(200)
+    val got = withNoDataBatches(runCorrelate(Seq(
       Seq(StatusEvent("t1", "RUNNING", ts(5))),
       // watermark jumps past t1's timeout (5 s + 20 s):
       Seq(StatusEvent("t2", "RUNNING", ts(100))),
       Seq(StatusEvent("t3", "SUCCEEDED", ts(200))), // advance again → t2 times out
-    ))
+    )))
     val statuses = got.map(c => c.txnId -> c.finalStatus).toMap
     assert(statuses("t1") == "TIMEOUT")
     assert(statuses("t2") == "TIMEOUT")
@@ -103,6 +118,35 @@ class StreamingSpec extends SparkSpec {
     ))
     assert(got.count(_.txnId == "t1") == 1)
     assert(got.count(_.txnId == "t9") == 1)
+  }
+
+  test("a new txn's terminal more than 20 s behind the newest event completes it; the query lives on") {
+    // with no watermark-only batch, the third batch evicts at watermark
+    // 100 s while t1's ts(50) is above the previous batch's 1 s, so t1 and
+    // t2 reach the function with their 20 s deadlines already below it
+    val got = runCorrelate(Seq(
+      Seq(StatusEvent("t0", "RUNNING", ts(1))),
+      Seq(StatusEvent("t9", "RUNNING", ts(100))),
+      Seq(StatusEvent("t1", "SUCCEEDED", ts(50)), StatusEvent("t2", "RUNNING", ts(60))),
+      Seq(StatusEvent("t3", "SUCCEEDED", ts(300))),
+      Seq(StatusEvent("t4", "SUCCEEDED", ts(400))), // watermark 300 s: t2 times out
+    ))
+    val statuses = got.groupBy(_.txnId).view.mapValues(_.map(_.finalStatus)).toMap
+    assert(statuses("t0") == Seq("TIMEOUT"))
+    assert(statuses("t1") == Seq("SUCCEEDED"))
+    assert(statuses("t2") == Seq("TIMEOUT"))
+    assert(statuses("t3") == Seq("SUCCEEDED"))
+  }
+
+  test("a tombstone hit by a re-delivered terminal still expires (state stays bounded)") {
+    val (got, stateRows) = correlateRun(Seq(
+      Seq(StatusEvent("t1", "SUCCEEDED", ts(10))),
+      Seq(StatusEvent("t1", "SUCCEEDED", ts(12))), // re-delivery reaches the tombstone
+      Seq(StatusEvent("t9", "RUNNING", ts(100))),
+      Seq(StatusEvent("t8", "RUNNING", ts(101))), // watermark 100 s: t1's tombstone expires
+    ))
+    assert(got.map(_.txnId) == Seq("t1"))
+    assert(stateRows == 2, "only the pending t8 and t9 may hold state")
   }
 
   test("session_window merges events EXACTLY one gap apart (oracle boundary pin)") {
@@ -237,7 +281,8 @@ class StreamingSpec extends SparkSpec {
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    // t8's timer can fire only in a watermark-only batch: no data follows ts(300)
+    try withNoDataBatches {
       val input = MemoryStream[StatusEvent]
       val out = graft.streaming.StatusHistory.correlateWithTimers(input.toDS())
       spark.catalog.dropTempView("twt_sink")
@@ -320,18 +365,21 @@ class StreamingSpec extends SparkSpec {
       .dropDuplicatesWithinWatermark("id")
       .select(col("id"))
     spark.catalog.dropTempView("ddw_sink")
-    val q = out.writeStream.format("memory").queryName("ddw_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // b1: first sight of 1 and 2 → both emit; watermark after b1 = 0
-      input.addData(Seq((1L, ts(10)), (2L, ts(10)))); q.processAllAvailable()
-      // b2: re-delivery of 1 within the horizon → suppressed; the ts(100)
-      // row pushes the watermark to 90, past id 1's expiry (10 + 10)
-      input.addData(Seq((1L, ts(11)), (9L, ts(100)))); q.processAllAvailable()
-      // b3: id 1's state was evicted → re-delivery now re-emits (the
-      // documented contract: dedup is guaranteed only within the horizon)
-      input.addData(Seq((1L, ts(95)))); q.processAllAvailable()
-    } finally q.stop()
+    // id 1 is evicted only by a watermark-only batch between b2 and b3
+    withNoDataBatches {
+      val q = out.writeStream.format("memory").queryName("ddw_sink")
+        .outputMode(OutputMode.Append).start()
+      try {
+        // b1: first sight of 1 and 2 → both emit; watermark after b1 = 0
+        input.addData(Seq((1L, ts(10)), (2L, ts(10)))); q.processAllAvailable()
+        // b2: re-delivery of 1 within the horizon → suppressed; the ts(100)
+        // row pushes the watermark to 90, past id 1's expiry (10 + 10)
+        input.addData(Seq((1L, ts(11)), (9L, ts(100)))); q.processAllAvailable()
+        // b3: id 1's state was evicted → re-delivery now re-emits (the
+        // documented contract: dedup is guaranteed only within the horizon)
+        input.addData(Seq((1L, ts(95)))); q.processAllAvailable()
+      } finally q.stop()
+    }
     val ids = spark.table("ddw_sink").as[Long].collect().toSeq
     assert(ids.count(_ == 1L) == 2, s"got $ids")
     assert(ids.count(_ == 2L) == 1)

@@ -13,6 +13,13 @@ import graft.SparkSpec
   * reach the scan internals; query-level exactness rides q157–q159. */
 class ZBatchPlanSpec extends SparkSpec {
 
+  private val V2Bucketing = "spark.sql.sources.v2.bucketing.enabled"
+
+  /** Puts a conf back as the test found it: unsetting a plane key would
+    * drop every later suite off the session plane. */
+  private def restore(key: String, prev: Option[String]): Unit =
+    prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+
   private def mkStore(n: Long, numFiles: Int = 8): String = {
     val dir = Files.createTempDirectory("graft-zbps").toString
     ZOrder.writeZOrdered(
@@ -206,7 +213,8 @@ class ZBatchPlanSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-spj").toString
     spark.conf.set("spark.sql.catalog.gspj", "graft.sources.ZCatalog")
     spark.conf.set("spark.sql.catalog.gspj.root", root)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    val prevBucketing = spark.conf.getOption(V2Bucketing)
+    spark.conf.set(V2Bucketing, "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try {
@@ -240,11 +248,11 @@ class ZBatchPlanSpec extends SparkSpec {
         s"bucketed join must be exchange-free:\n" +
           joined().queryExecution.executedPlan.toString.take(2000))
       // planted positive: same query with v2 bucketing OFF does shuffle
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
+      spark.conf.set(V2Bucketing, "false")
       val off = joined()
       assert(off.count() == 6000)
       assert(shufflesOf(joined()) > 0, "the no-exchange detector is vacuous")
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+      spark.conf.set(V2Bucketing, "true")
       // exactness against the in-memory control
       val got = joined().agg(
         org.apache.spark.sql.functions.sum(col("v") + col("w")))
@@ -289,7 +297,7 @@ class ZBatchPlanSpec extends SparkSpec {
     } finally {
       spark.conf.unset("spark.sql.catalog.gspj")
       spark.conf.unset("spark.sql.catalog.gspj.root")
-      spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
+      restore(V2Bucketing, prevBucketing)
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
     }
@@ -303,7 +311,8 @@ class ZBatchPlanSpec extends SparkSpec {
     ZOrder.recordBucketing(spark, dir, "k", 8)
     ZOrder.appendZOrdered(spark.range(1000, 1200)
       .select(col("id").as("k"), (col("id") * 2).as("v")), dir, Seq("k"), 4)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    val prevBucketing = spark.conf.getOption(V2Bucketing)
+    spark.conf.set(V2Bucketing, "true")
     try {
       // mixed history: the appended files carry bucket ids, the build
       // files do not — the scan must fall back WHOLESALE (a partial
@@ -345,12 +354,11 @@ class ZBatchPlanSpec extends SparkSpec {
       assert(mk(Seq("k"), limit = Some(5)).outputPartitioning()
         .isInstanceOf[org.apache.spark.sql.connector.read.partitioning
           .UnknownPartitioning])
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
+      spark.conf.set(V2Bucketing, "false")
       assert(mk(Seq("k")).outputPartitioning().isInstanceOf[
         org.apache.spark.sql.connector.read.partitioning
           .UnknownPartitioning])
-    } finally
-      spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
+    } finally restore(V2Bucketing, prevBucketing)
   }
 
   test("the scan reports prunable runtime-filter attributes: recorded stat columns, not unrecorded ones") {
@@ -690,7 +698,8 @@ class ZBatchPlanSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-cmplan").toString
     spark.conf.set("spark.sql.catalog.gcm", "graft.sources.ZCatalog")
     spark.conf.set("spark.sql.catalog.gcm.root", root)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    val prevBucketing = spark.conf.getOption(V2Bucketing)
+    spark.conf.set(V2Bucketing, "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try {
@@ -758,6 +767,7 @@ class ZBatchPlanSpec extends SparkSpec {
     } finally {
       spark.conf.unset("spark.sql.catalog.gcm")
       spark.conf.unset("spark.sql.catalog.gcm.root")
+      restore(V2Bucketing, prevBucketing)
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
     }
