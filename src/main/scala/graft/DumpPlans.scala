@@ -51,6 +51,15 @@ object DumpPlans {
           org.apache.spark.sql.execution.SimpleMode).trim)
         sb.append("\n```\n")
       }
+      // a streaming sink's executed plan, which its query's result plan
+      // (the read-back) does not show
+      qs("q57_stream_sink_roundtrip")(spark, d)
+      graft.streaming.Streaming.lastPlans.get("q57_sink").foreach { p =>
+        sb.append("\n## q57_sink\n\n_q57's graft-shards sink: the write's " +
+          "required distribution shuffles by key into one task per shard_\n\n```\n")
+        sb.append(p.toString.trim)
+        sb.append("\n```\n")
+      }
       Files.createDirectories(Paths.get("docs"))
       Files.writeString(Paths.get("docs/PLANS.md"), sb.toString)
       println(s"[plans] wrote docs/PLANS.md (${picks.size} queries)")

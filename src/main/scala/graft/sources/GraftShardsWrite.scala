@@ -4,7 +4,9 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write.{DataWriter, LogicalWriteInfo, PhysicalWriteInfo, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+import org.apache.spark.sql.connector.expressions.{Expression, Expressions, SortOrder}
+import org.apache.spark.sql.connector.write.{DataWriter, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,9 +26,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * Spark's `hash()` use, so producer-side layouts and sink-side layouts
   * key identically.
   *
+  * ONE CHUNK PER SHARD PER EPOCH: the write requires its input clustered
+  * by `key` into exactly `numShards` partitions, and Spark's hash
+  * partitioning (`pmod(murmur3(key, 42), n)`) is the routing hash, so each
+  * write task holds the rows of exactly one shard. Without that shuffle,
+  * every input partition would stage its own chunk in every shard it
+  * touches (tasks × shards chunks per epoch), and every reader would open
+  * each of them.
+  *
+  * PER-KEY ORDER, as in Kinesis, holds per producer: the rows of one input
+  * partition keep their relative order in their shard (the shuffle reads
+  * each map output's block in order), while rows of different input
+  * partitions interleave in no promised order.
+  *
   * EXACTLY-ONCE across restarts, in three steps per epoch:
-  *  1. tasks stage rows into per-shard TEMP files (`_wtmp-…`, invisible
-  *     to the ChunkName-regex reader) and report (shard → temp, count);
+  *  1. tasks stage their rows into a TEMP file per shard they hold
+  *     (`_wtmp-…`, invisible to the ChunkName-regex reader) and report
+  *     (shard → temp, count);
   *  2. the driver assigns contiguous seq ranges per shard in partition
   *     order, persists an INTENT manifest (`_epochs/<e>.intent`, written
   *     atomically), then renames each temp to its final chunk name;
@@ -90,7 +106,13 @@ object GraftShardsWrite {
         s"${info.schema().simpleString} — to_json(struct(*)) the payload " +
         "and select the routing key")
     override def build(): org.apache.spark.sql.connector.write.Write =
-      new org.apache.spark.sql.connector.write.Write {
+      new RequiresDistributionAndOrdering {
+        // one task per shard: Spark hash-partitions `key` by
+        // pmod(murmur3(key, 42), n), which is exactly [[shardOf]]
+        override def requiredDistribution(): Distribution =
+          Distributions.clustered(Array[Expression](Expressions.column("key")))
+        override def requiredNumPartitions(): Int = numShards
+        override def requiredOrdering(): Array[SortOrder] = Array.empty
         override def toStreaming: StreamingWrite =
           new EpochWrite(path, numShards,
             GraftShardsSource.confOverrides(
@@ -234,9 +256,9 @@ object GraftShardsWrite {
   private[sources] case class CommitMsg(partitionId: Int,
       perShard: Map[Int, (String, Long)]) extends WriterCommitMessage
 
-  /** Streams rows into one temp file per touched shard — per-shard order
-    * within a task is input order, matching Kinesis per-producer-per-shard
-    * ordering. */
+  /** Streams a task's rows into one temp file per shard it holds (one,
+    * under the write's required distribution) — per-shard order within a
+    * task is input order. */
   private final class ShardStagingWriter(path: String, numShards: Int,
       overrides: Map[String, String], partitionId: Int, epochId: Long)
       extends DataWriter[InternalRow] {

@@ -371,11 +371,16 @@ object StoreMaint {
     * Watermark FIRST, deletes after — a crash mid-sweep leaves extra
     * markers (harmless), never a refusable id that would re-apply.
     * Returns (new watermark, removed names). Runs under the store's
-    * writer lease like every other mutation. */
+    * writer lease like every other mutation. An append log
+    * ([[Sources.appendOnce]]) refuses: its markers are its commits, so a
+    * swept marker would hide that batch's rows from every reader. */
   def retentionSweep(s: SparkSession, root: String,
       keepLast: Int): (Long, Seq[String]) = {
     require(keepLast >= 2,
       "keepLast must cover at least the trailing replay batch (≥ 2)")
+    require(!fsFor(s, new Path(root)).exists(new Path(root, Sources.AppendOwner)),
+      s"$root is an append log: its applied/ markers commit its batches, " +
+        "and sweeping one would drop that batch from every read")
     Lease.withLease(s, root, "retention-sweep") {
       val fs = fsFor(s, new Path(root))
       val appliedDir = new Path(s"$root/applied")

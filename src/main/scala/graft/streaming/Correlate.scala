@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** Keyed stream-to-state correlation with timeout eviction — the typed
@@ -130,30 +130,28 @@ object Correlate {
       }
   }
 
-  /** Convenience: run the correlator over a bounded typed stream and
-    * collect completions (used by specs and ad-hoc runs). */
-  def correlateBatchLike(s: SparkSession, events: Seq[StatusEvent]): Seq[Completion] = {
-    import s.implicits._
-    // batch path shares the terminal-dispatch semantics (no timeouts):
-    events.toDS().groupByKey(_.txnId).flatMapGroups { (txn, evs) =>
-      evs.toSeq.filter(e => e.status == "SUCCEEDED" || e.status == "FAILED")
-        .sortBy(_.ts.getTime).headOption
-        .map(e => Completion(txn, e.status)).iterator
-    }.collect().toSeq
-  }
-
   /** The reference's LIVE deployment form — the long-running service loop
     * (doInit → startStreamReader, svckinesis.js:250-256) as a
     * ProcessingTime-triggered query: consume status events continuously at
     * the reference's 1500 ms poll cadence (:209-211), correlate, and land
-    * every completion in the versioned upsert table (the durable analog of
-    * completing held HTTP responses — a web tier reads the table instead
-    * of holding sockets in a process map). `foreachBatch` + keyed upsert
-    * gives end-to-end exactly-once: offsets checkpoint the source cursor,
-    * the correlator state is store-backed, and re-delivered terminals are
-    * tombstone-suppressed, so a crash/restart never duplicates or loses a
-    * completion (StreamingSpec proves it across a restart). Empty
-    * micro-batches skip the table rewrite.
+    * every completion in an append log at `tablePath` (the durable analog
+    * of completing held HTTP responses — a web tier reads the table with
+    * [[graft.sources.Sources.readTable]] instead of holding sockets in a
+    * process map).
+    *
+    * Exactly-once end to end, with no read of the table: the correlator
+    * emits at most one [[Completion]] per txnId (its tombstone suppresses
+    * re-delivered terminals, the watermark anything later), so the only
+    * other source of a duplicate is a replayed micro-batch. Each trigger's
+    * completions are one [[graft.sources.Sources.appendOnce]] keyed by the
+    * batch id: one job writes them straight from the stateful plan, and
+    * the batch's marker commits last, so a replay of a committed batch
+    * writes nothing and a replay of a crashed one overwrites files no
+    * reader opened. Offsets checkpoint the source cursor and the correlator state
+    * is store-backed, so a crash/restart never duplicates or loses a
+    * completion (StreamingSpec proves it across a restart). A trigger
+    * that completes nothing leaves no trace in the table, and a fresh
+    * checkpoint pointed at an existing table refuses.
     *
     * `monitorDir` (optional) attaches the live dashboard
     * ([[Monitor.ProgressListener]], dashboard.yml:14-57 analog): one
@@ -175,12 +173,10 @@ object Correlate {
         .writeStream
         .queryName("correlate_serve")
         .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          // upsert materializes the batch exactly once (its dedup
-          // checkpoint), so the stateful plan runs once per trigger with no
-          // cache, and an idle batch (RUNNING-only, duplicate terminals) is
-          // detected from that same materialization, with no extra job
-          graft.sources.Sources.upsertUnlessEmpty(batch, Seq("txnId"), tablePath)
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+          graft.sources.Sources.appendOnce(batch, tablePath, id,
+            s.sparkContext.getLocalProperty("sql.streaming.queryId"))
+          ()
         }
         .option("checkpointLocation", checkpoint)
         .trigger(Trigger.ProcessingTime(s"$intervalMs milliseconds"))

@@ -1002,7 +1002,7 @@ class StreamingSpec extends SparkSpec {
 
   test("serve: continuous correlate→upsert lands completions across batches and a restart") {
     // the reference's live loop (svckinesis.js:250-256) end to end:
-    // Kinesis-shaped source → stateful correlator → versioned upsert table
+    // Kinesis-shaped source → stateful correlator → append log
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("graft-serve").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-serve-ck").toString
@@ -1052,13 +1052,22 @@ class StreamingSpec extends SparkSpec {
       Map("t1" -> "SUCCEEDED", "t2" -> "SUCCEEDED", "t3" -> "SUCCEEDED"))
   }
 
-  test("serve: one evaluation per data-bearing trigger (≤ 2 jobs); an idle batch commits no version") {
+  test("serve: one job per data-bearing trigger; an idle batch leaves the log unchanged") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
     val dir = java.nio.file.Files.createTempDirectory("graft-serve1").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-serve1-ck").toString
     val table = java.nio.file.Files.createTempDirectory("graft-serve1-tbl").toString
+    // the log's files: markers and batch dirs, crc side files aside
+    def logEntries(): Set[String] = {
+      val root = java.nio.file.Paths.get(table)
+      Seq("applied", "data").flatMap { d =>
+        val sub = root.resolve(d).toFile
+        Option(sub.listFiles()).toSeq.flatten.map(_.getName)
+          .filterNot(_.startsWith(".")).map(n => s"$d/$n")
+      }.toSet
+    }
     // jobs per (streaming query id, batch id), from the properties every
-    // job of a trigger carries — upsert's jobs inside foreachBatch included
+    // job of a trigger carries — the append's job inside foreachBatch included
     val barrierKey = "graft.test.barrier"
     val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long), Int]()
     @volatile var barrierDone = false
@@ -1086,15 +1095,15 @@ class StreamingSpec extends SparkSpec {
       }
       try {
         step(ev("t1", "SUCCEEDED", 1), ev("t2", "RUNNING", 2), ev("t3", "FAILED", 3))
-        val v1 = graft.sources.Sources.committedVersions(spark, table)
-        assert(v1.nonEmpty)
+        val v1 = logEntries()
+        assert(v1.exists(_.startsWith("applied/")) && v1.exists(_.startsWith("data/")),
+          s"log after the first batch: $v1")
         // RUNNING-only and already-completed events complete nothing: the
-        // trigger runs (state advances) but commits no table version
+        // trigger runs (state advances) but leaves no marker and no dir
         step(ev("t2", "RUNNING", 4), ev("t1", "SUCCEEDED", 5))
-        assert(graft.sources.Sources.committedVersions(spark, table) == v1,
-          "an idle micro-batch committed a table version")
+        assert(logEntries() == v1, "an idle micro-batch changed the log")
         step(ev("t2", "SUCCEEDED", 6))
-        assert(graft.sources.Sources.committedVersions(spark, table).max > v1.max)
+        assert(logEntries().size == v1.size + 2, s"log: ${logEntries()}")
       } finally q.stop()
       assert(dataBatches.size == 3, s"data-bearing batches: $dataBatches")
       assert(graft.sources.Sources.readTable(spark, table).as[(String, String)].collect().toMap ==
@@ -1109,10 +1118,58 @@ class StreamingSpec extends SparkSpec {
       val perBatch = dataBatches.map(b => b -> jobs.getOrDefault((q.id.toString, b), 0))
       // non-vacuous: the listener attributes the trigger's jobs to it
       assert(perBatch.forall(_._2 >= 1), s"jobs per data batch: $perBatch")
-      // the dedup checkpoint (which also observes the touched buckets) and
-      // the bucket write
-      assert(perBatch.forall(_._2 <= 2), s"jobs per data batch: $perBatch")
+      // the append writes straight from the stateful plan and counts its
+      // rows on that same job
+      assert(perBatch.forall(_._2 == 1), s"jobs per data batch: $perBatch")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def appendedRows(table: String): Seq[(String, String)] =
+    graft.sources.Sources.readTable(spark, table).select(col("txnId"), col("finalStatus"))
+      .as[(String, String)].collect().toSeq.sorted
+
+  test("serve: a batch replayed after its marker landed is evaluated again but not rewritten") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-alog-replay").toString
+    val table = java.nio.file.Files.createTempDirectory("graft-alog-replay-tbl").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-alog-replay-ck").toString
+    graft.sources.GraftShards.append(dir, 0,
+      Seq(ev("t1", "SUCCEEDED", 1), ev("t2", "SUCCEEDED", 2)))
+    val q1 = Correlate.serve(shardStatusStream(dir), table, ckpt, intervalMs = 100)
+    try q1.processAllAvailable() finally q1.stop()
+    // the crash window after the marker, before Spark's commit log entry:
+    // the restart replays the batch
+    val commits = new java.io.File(ckpt, "commits")
+    val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    new java.io.File(commits, last.toString).delete()
+    new java.io.File(commits, s".$last.crc").delete()
+    assert(new java.io.File(table, s"applied/$last").exists())
+    val files = new java.io.File(table, s"data/$last").list().toSet
+    val q2 = Correlate.serve(shardStatusStream(dir), table, ckpt, intervalMs = 100)
+    try q2.processAllAvailable() finally q2.stop()
+    assert(q2.exception.isEmpty, q2.exception)
+    assert(q2.recentProgress.exists(_.batchId == last), "the batch was not replayed")
+    assert(new java.io.File(table, s"data/$last").list().toSet == files)
+    assert(appendedRows(table) == Seq("t1" -> "SUCCEEDED", "t2" -> "SUCCEEDED"))
+  }
+
+  test("serve: a fresh checkpoint on an existing table refuses instead of skipping its batches") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-alog-own").toString
+    val table = java.nio.file.Files.createTempDirectory("graft-alog-own-tbl").toString
+    def stream = shardStatusStream(dir)
+    graft.sources.GraftShards.append(dir, 0, Seq(ev("t1", "SUCCEEDED", 1)))
+    val q1 = Correlate.serve(stream, table,
+      java.nio.file.Files.createTempDirectory("graft-alog-own-ck1").toString, intervalMs = 100)
+    try q1.processAllAvailable() finally q1.stop()
+    assert(appendedRows(table) == Seq("t1" -> "SUCCEEDED"))
+    // a second query numbers its batches from 0 again: batch 0 is marked,
+    // so without the owner check t2 would be skipped as already applied
+    graft.sources.GraftShards.append(dir, 0, Seq(ev("t2", "SUCCEEDED", 2)))
+    val q2 = Correlate.serve(stream, table,
+      java.nio.file.Files.createTempDirectory("graft-alog-own-ck2").toString, intervalMs = 100)
+    val e = try intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q2.processAllAvailable()) finally q2.stop()
+    assert(e.getMessage.contains("append log of streaming query"), e.getMessage)
+    assert(appendedRows(table) == Seq("t1" -> "SUCCEEDED"))
   }
 
   // ---- graft-zcdf: the z-store change-feed streaming source (r10) --------

@@ -239,4 +239,69 @@ class GraftShardsWriteProtocolSpec extends graft.SparkSpec {
       GraftShardsSource.chunkFileName(2L, 3L) -> Seq("p0r0"),
       GraftShardsSource.chunkFileName(3L, 5L) -> Seq("p1r0", "p1r1")))
   }
+
+  test("one chunk per shard per epoch; dense seqs; per-key order kept within a producer partition") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val numShards = 4
+    val dir = java.nio.file.Files.createTempDirectory("graft-wdist").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-wdist-ck").toString
+    // 40 keys x 3 rows each, seq 0..2 per key, over 4 input partitions
+    val in = MemoryStream[(String, Long)](4)
+    in.addData(for (i <- 0 until 3; k <- 0 until 40) yield (s"k$k", i.toLong))
+    val q = in.toDF().select(col("_1").as("key"),
+        concat_ws(":", col("_1"), spark_partition_id(), col("_2")).as("data"))
+      .writeStream.format("graft-shards").option("numShards", numShards.toString)
+      .option("checkpointLocation", ckpt).start(dir)
+    try q.processAllAvailable() finally q.stop()
+    val byShard = (0 until numShards).map(sh => sh -> chunkLines(dir, sh)).toMap
+    val touched = byShard.filter(_._2.nonEmpty)
+    assert(touched.size == numShards, s"shards touched: ${touched.keySet}")
+    // one epoch, one chunk per shard, seqs dense from 0
+    touched.foreach { case (sh, chunks) =>
+      assert(chunks.size == 1, s"shard $sh chunks: ${chunks.map(_._1)}")
+      assert(chunks.head._1 == GraftShardsSource.chunkFileName(0L, chunks.head._2.size),
+        s"shard $sh: ${chunks.head._1}")
+    }
+    val rows = byShard.values.flatten.flatMap(_._2).toSeq
+    assert(rows.size == 120)
+    // every key in its routed shard, and in input order per producer;
+    // non-vacuous: some key has several rows from one producer
+    val perProducer = rows.map(_.split(":")).groupBy(a => (a(0), a(1)))
+    assert(perProducer.values.exists(_.size > 1), "no key had 2 rows in one partition")
+    byShard.foreach { case (sh, chunks) =>
+      val recs = chunks.flatMap(_._2).map(_.split(":")).map(a => (a(0), a(1), a(2).toLong))
+      recs.foreach { case (k, _, _) =>
+        assert(GraftShardsWrite.shardOf(
+          org.apache.spark.unsafe.types.UTF8String.fromString(k), numShards) == sh)
+      }
+      recs.groupBy(r => (r._1, r._2)).foreach { case (kp, rs) =>
+        assert(rs.map(_._3) == rs.map(_._3).sorted, s"order of $kp in shard $sh: $rs")
+      }
+    }
+  }
+
+  test("planted: the same 4-partition epoch staged without the distribution leaves several chunks in a shard") {
+    spark
+    val numShards = 4
+    val dir = java.nio.file.Files.createTempDirectory("graft-wnodist").toString
+    val write = new GraftShardsWrite.EpochWrite(dir, numShards, Map.empty)
+    val factory = write.createStreamingWriterFactory(null)
+    // each input partition stages its own rows, as a write with no
+    // shuffle in front of it does
+    val msgs = (0 until 4).map { p =>
+      val w = factory.createWriter(p, p.toLong, 0L)
+      (0 until 40).filter(_ % 4 == p).foreach { k =>
+        w.write(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+          Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(s"k$k"),
+            org.apache.spark.unsafe.types.UTF8String.fromString(s"k$k:$p:0"))))
+      }
+      w.commit()
+    }.toArray
+    write.commit(0L, msgs)
+    val most = (0 until numShards).map(chunkLines(dir, _).size).max
+    assert(most > 1, s"chunks per shard: $most")
+  }
 }
