@@ -616,9 +616,10 @@ object GraftShards {
     * discipline). Concurrent appenders to DIFFERENT shards are fine. */
   def append(dir: String, shard: Int, lines: Seq[String]): Unit = {
     val shardDir = new Path(dir, shardDirName(shard))
-    val end = GraftShardsSource.currentEnds(new Path(dir))
-      .getOrElse(shardDirName(shard), 0L)
-    publishChunk(GraftShardsSource.fs(shardDir), shardDir, end, end + lines.size, lines)
+    val f = GraftShardsSource.fs(shardDir)
+    val end = if (!f.exists(shardDir)) 0L
+      else GraftShardsSource.shardChunks(shardDir).lastOption.map(_.end).getOrElse(0L)
+    publishChunk(f, shardDir, end, end + lines.size, lines)
   }
 
   /** Producer-side reshard: SPLIT `parent` into `children` — close the

@@ -53,9 +53,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * at ANY point leaves the stream readable: readers only ever see fully
   * renamed chunks.
   *
-  * SINGLE WRITING QUERY per stream dir (micro-batch epochs are
-  * sequential within a query): seq-range assignment has no cross-writer
-  * CAS, exactly like [[GraftShards.append]]'s per-shard discipline.
+  * Epoch ids mean something only within the query that numbered them:
+  * the marker skip above would silently drop a second query's epochs
+  * (its fresh checkpoint numbers them from 0 again), and seq-range
+  * assignment has no cross-writer CAS, exactly like
+  * [[GraftShards.append]]'s per-shard discipline. So a stream dir has a
+  * SINGLE WRITING QUERY, enforced: its first writing query binds it by an
+  * exclusive create of `_query` holding the query id (the id a checkpoint
+  * keeps across restarts), and any other query refuses loudly before it
+  * stages a row.
+  *
   * Keep `numShards` CONSTANT for a stream's lifetime — changing it
   * re-routes keys mid-stream and breaks per-key order; growing a stream
   * is a reshard ([[GraftShards.split]]/[[GraftShards.merge]]), exactly
@@ -68,6 +75,13 @@ object GraftShardsWrite {
   ))
 
   private[sources] val EpochsDirName = "_epochs"
+
+  /** The stream dir's owner file: the id of the one query that writes it. */
+  private[sources] val QueryFileName = "_query"
+
+  /** The write's clustering column, built once: `Expressions.column` runs
+    * the SQL parser on every call. */
+  private val ByKey: Array[Expression] = Array(Expressions.column("key"))
 
   /** Spark SQL `hash()` of a string key, mod numShards — matches
     * [[GraftShards.writeSharded]]'s `pmod(hash(key), n)` routing. */
@@ -110,17 +124,17 @@ object GraftShardsWrite {
         // one task per shard: Spark hash-partitions `key` by
         // pmod(murmur3(key, 42), n), which is exactly [[shardOf]]
         override def requiredDistribution(): Distribution =
-          Distributions.clustered(Array[Expression](Expressions.column("key")))
+          Distributions.clustered(ByKey)
         override def requiredNumPartitions(): Int = numShards
         override def requiredOrdering(): Array[SortOrder] = Array.empty
         override def toStreaming: StreamingWrite =
-          new EpochWrite(path, numShards,
+          new EpochWrite(path, numShards, info.queryId(),
             GraftShardsSource.confOverrides(
               org.apache.spark.sql.SparkSession.active))
       }
   }
 
-  final class EpochWrite(path: String, numShards: Int,
+  final class EpochWrite(path: String, numShards: Int, queryId: String,
       overrides: Map[String, String]) extends StreamingWrite {
     import GraftShardsSource._
 
@@ -129,17 +143,34 @@ object GraftShardsWrite {
 
     override def createStreamingWriterFactory(
         info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-      // the constant-numShards contract, enforced BEFORE the first row is
-      // staged ([[GraftShardsSource.validateAndPinNumShards]]): reshard
+      // the single-writing-query and constant-numShards contracts, enforced
+      // BEFORE the first row is staged: the owner binding, then reshard
       // refusal, pin match, live-dir fallback + atomic pin publication
-      // (mid-RUN reshards are caught by the writer-side _closed guard)
+      // ([[GraftShardsSource.validateAndPinNumShards]]; mid-RUN reshards
+      // are caught by the writer-side _closed guard)
       if (!layoutValidated) {
         val root = new Path(path)
-        GraftShardsSource.validateAndPinNumShards(
-          fs(root, hadoopConf(overrides)), root, numShards, "graft-shards sink")
+        val f = fs(root, hadoopConf(overrides))
+        bindQuery(f, root)
+        GraftShardsSource.validateAndPinNumShards(f, root, numShards,
+          "graft-shards sink")
         layoutValidated = true
       }
       WriterFactory(path, numShards, overrides)
+    }
+
+    /** Bind the stream dir to this query on first write, or check that it
+      * is bound to it; any other owner refuses, as a held [[Lease]] does. */
+    private def bindQuery(f: FileSystem, root: Path): Unit = {
+      val p = new Path(root, QueryFileName)
+      if (!StoreMaint.createExclusive(f, p, queryId.getBytes(StandardCharsets.UTF_8))) {
+        val owner = readSmall(f, p)
+        if (owner != queryId) throw new IllegalStateException(
+          s"$path is written by streaming query $owner, not $queryId: epoch " +
+            "ids are per query, so this query's epochs would be skipped as " +
+            "already committed. Resume the owning query's checkpoint or " +
+            "point this query at a fresh stream dir.")
+      }
     }
 
     private def temps(messages: Array[WriterCommitMessage]): Seq[String] =

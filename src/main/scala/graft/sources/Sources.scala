@@ -22,9 +22,9 @@ import org.apache.spark.sql.types.StructType
   *  - [[upsertBatch]], the same sink as a `foreachBatch` function, which is
   *    how a streaming pipeline upserts micro-batches (R5's streaming form;
   *    exactly-once per batch since the swap is last);
-  *  - an append log ([[appendOnce]]) for a stream that never rewrites a
-  *    key, such as the correlator's completions: each micro-batch lands
-  *    once, committed by its batch-id marker, at O(batch) cost.
+  *  - [[readTable]] over either an upsert table or a completion stream
+  *    (the graft-shards layout `Correlate.serve` writes through the sink,
+  *    whose epochs commit each micro-batch once at O(batch) cost).
   *
   * All paths are driver-visible filesystem URIs; on a cluster the same code
   * runs against HDFS/S3A (Path/FileSystem are scheme-agnostic).
@@ -220,11 +220,17 @@ object Sources {
       .map(_.buckets.values.toSet).getOrElse(Set.empty)
 
   /** Read a table: the current committed version of an upsert table, or
-    * the committed batches of an append log ([[appendOnce]]). */
+    * the completions of a [[graft.streaming.Correlate.serve]] stream — a
+    * graft-shards layout, recognized by its `numShards` pin — as exactly
+    * `(txnId, finalStatus)`. A stream reads its published chunks only
+    * (the sink's staged temps never match `*.jsonl`, and Spark hides `_`
+    * names), with an explicit schema, so no inference job runs. */
   def readTable(s: SparkSession, path: String): DataFrame = {
     val root = new Path(path)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(root, AppendOwner))) return readAppended(s, fs, root)
+    if (fs.exists(new Path(root, GraftShardsSource.NumShardsFileName)))
+      return s.read.schema(CompletionSchema).option("pathGlobFilter", "*.jsonl")
+        .option("recursiveFileLookup", "true").json(path)
     val listing = listTable(s, path)
     requireVersionedLayout(listing, path)
     listing.committed.lastOption match {
@@ -234,94 +240,9 @@ object Sources {
     }
   }
 
-  // ---- the append log: exactly-once batch appends -------------------------
-
-  /** The append log's owner file: the streaming query id it is bound to. */
-  private[graft] val AppendOwner = "_query"
-
-  private def appendDir(root: Path, id: Long) = new Path(root, s"data/$id")
-
-  /** Append micro-batch `id` of the streaming query `queryId` to the log at
-    * `path`, EXACTLY-ONCE under foreachBatch's at-least-once replay, and
-    * with no listing or read of the log's data:
-    *  - the log belongs to one query ([[bindAppendLog]]): a batch id means
-    *    something only within the query that numbered it, so a different
-    *    query — a fresh checkpoint pointed at an existing log — refuses
-    *    instead of having its batches skipped as "already applied";
-    *  - a batch whose `applied/<id>` marker exists writes nothing
-    *    ([[StoreMaint.batchAlreadyApplied]]), so a committed batch is never
-    *    rewritten under a reader;
-    *  - ONE job writes the batch straight from its plan to `data/<id>`
-    *    (one file per input partition that holds rows, plus partition 0),
-    *    overwriting what a crashed attempt left there; the row count is an
-    *    observation on that same job;
-    *  - the marker ([[StoreMaint.markApplied]]) commits LAST, and readers
-    *    ([[readTable]]) see only marked batches. A crash before it leaves
-    *    a dir no reader opens, which the replay overwrites.
-    * A batch with no rows deletes its dir and writes no marker. Returns
-    * the rows appended (0 for a skipped or empty batch). */
-  private[graft] def appendOnce(batch: DataFrame, path: String, id: Long,
-      queryId: String): Long = {
-    val s = batch.sparkSession
-    bindAppendLog(s, path, queryId)
-    if (StoreMaint.batchAlreadyApplied(s, path, id)) {
-      // evaluated all the same, into no sink: a stateful plan's state
-      // stores commit only when every partition runs, and Spark fails a
-      // foreachBatch query whose batch left them uncommitted
-      batch.write.format("noop").mode("overwrite").save()
-      return 0L
-    }
-    val n = writeAppend(batch, path, id)
-    if (n > 0) StoreMaint.markApplied(s, path, id)
-    n
-  }
-
-  /** The data half of [[appendOnce]], without its marker: the batch's
-    * files under `data/<id>` (none if it has no rows). Returns the rows. */
-  private[graft] def writeAppend(batch: DataFrame, path: String,
-      id: Long): Long = {
-    val dir = appendDir(new Path(path), id)
-    val obs = org.apache.spark.sql.Observation()
-    batch.observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir.toString)
-    val n = obs.get("n").asInstanceOf[Long]
-    if (n == 0) StoreMaint.fsFor(batch.sparkSession, dir).delete(dir, true)
-    n
-  }
-
-  /** Bind the log at `path` to `queryId` on first use (an exclusive create
-    * of [[AppendOwner]]), or check that it is bound to it; any other owner
-    * refuses loudly, as a held [[Lease]] does. */
-  private def bindAppendLog(s: SparkSession, path: String,
-      queryId: String): Unit = {
-    require(queryId != null, s"$path: an append needs its streaming query id")
-    val p = new Path(path, AppendOwner)
-    val fs = StoreMaint.fsFor(s, p)
-    if (!StoreMaint.createExclusive(fs, p, queryId.getBytes("UTF-8"))) {
-      val in = fs.open(p)
-      val owner = try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-      finally in.close()
-      if (owner != queryId) throw new IllegalStateException(
-        s"$path is the append log of streaming query $owner, not $queryId: " +
-          "batch ids are per query, so this query's batches would be " +
-          "skipped as already applied. Resume the owning query's " +
-          "checkpoint or point this query at a fresh table.")
-    }
-  }
-
-  /** The union of an append log's committed (marked) batches. */
-  private def readAppended(s: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: Path): DataFrame = {
-    val applied = new Path(root, "applied")
-    val ids =
-      if (!fs.exists(applied)) Nil
-      else fs.listStatus(applied).toSeq
-        .flatMap(_.getPath.getName.toLongOption).sorted
-    require(ids.nonEmpty, s"no committed batch under $root")
-    s.read.parquet(ids.map(appendDir(root, _).toString): _*)
-  }
+  /** A completion record's payload: the JSON `Correlate.serve` writes. */
+  private val CompletionSchema: StructType =
+    StructType.fromDDL("txnId STRING, finalStatus STRING")
 
   /** Whether version n's snapshot is FULLY readable: every bucket dir its
     * manifest references still exists. A version dir can outlive its own

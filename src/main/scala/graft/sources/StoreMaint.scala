@@ -20,25 +20,6 @@ object StoreMaint {
 
   // ---- batch-scoped execution confs ---------------------------------------
 
-  /** Batch-scoped execution confs for rate-limited micro-batch bodies —
-    * pins shuffle partitions to the (bounded, known) batch volume and
-    * disables AQE for the body: each body query is a fixed tiny-stage
-    * shape whose per-query adaptive re-planning costs more wall-clock
-    * than it saves (measured 1.4-1.8× on the six ingest loops at sf0.1:
-    * q141 21→12 s, q127 10.5→6.9 s, q117 7.6→5.9 s — JobProf, r16),
-    * exactly the pageRank loop discipline (Graph.scala). A cluster
-    * deployment keeps AQE for unbounded DML — this wraps ONLY micro-batch
-    * bodies whose admission control bounds the input
-    * (maxRecordsPerShardPerTrigger / maxVersionsPerTrigger), and the
-    * partition pin should be derived from the configured batch cap there.
-    * Refcounted per session (the writeMicros discipline): concurrent
-    * bodies interleaving a naive save/restore leak the inner value into
-    * the session (the r15 outputTimestampType bug class). Nested calls
-    * keep the OUTERMOST pin. */
-  private val batchConfDepth =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession,
-      (java.util.concurrent.atomic.AtomicInteger, String)]()
-
   /** Rows of admission cap per shuffle partition of a bounded batch body
     * (the small-row operator bodies the ingest loops run). */
   private val RowsPerPartition = 512L
@@ -63,32 +44,22 @@ object StoreMaint {
     math.min(math.max(byCap, MinPartitions), ceil).toInt
   }
 
+  /** Batch-scoped execution confs for rate-limited micro-batch bodies —
+    * pins shuffle partitions to the (bounded, known) batch volume and
+    * disables AQE for the body: each body query is a fixed tiny-stage
+    * shape whose per-query adaptive re-planning costs more wall-clock
+    * than it saves (measured 1.4-1.8× on the six ingest loops at sf0.1:
+    * q141 21→12 s, q127 10.5→6.9 s, q117 7.6→5.9 s — JobProf, r16),
+    * exactly the pageRank loop discipline (Graph.scala). A cluster
+    * deployment keeps AQE for unbounded DML — this wraps ONLY micro-batch
+    * bodies whose admission control bounds the input
+    * (maxRecordsPerShardPerTrigger / maxVersionsPerTrigger), and the
+    * partition pin should be derived from the configured batch cap there.
+    * The pins are [[withConf]] scopes, so concurrent and nested bodies
+    * share their refcounts. */
   private[graft] def withBatchConfs[T](s: SparkSession, partitions: Int)
       (f: => T): T = withNoAqe(s) {
-    // AQE handling DELEGATES to withNoAqe so both scope families share
-    // ONE per-session depth counter and saved value for the adaptive
-    // key — two independent refcounts over the same conf key interleave
-    // across threads exactly like the r15 naive save/restore (the r16
-    // advisor's medium finding: family A's exit restores mid-scope of
-    // family B, whose exit then leaks A's stale snapshot).
-    val pk = "spark.sql.shuffle.partitions"
-    batchConfDepth.synchronized {
-      val (d, _) = batchConfDepth.computeIfAbsent(s,
-        _ => (new java.util.concurrent.atomic.AtomicInteger(0), ""))
-      if (d.getAndIncrement() == 0) {
-        // re-read prev NOW (the conf may have changed since a prior
-        // fully-unwound cycle)
-        batchConfDepth.put(s, (d, s.conf.get(pk)))
-        s.conf.set(pk, partitions.toString)
-      }
-    }
-    try f finally batchConfDepth.synchronized {
-      val (d, pp) = batchConfDepth.get(s)
-      if (d.decrementAndGet() == 0) {
-        s.conf.set(pk, pp)
-        batchConfDepth.remove(s) // don't retain dead sessions (r16 advisor)
-      }
-    }
+    withConf(s, "spark.sql.shuffle.partitions", partitions.toString)(f)
   }
 
   /** AQE-off scope WITHOUT touching shuffle partitions — for fixed-shape
@@ -98,26 +69,35 @@ object StoreMaint {
     * repartition (AQE respects user-specified partitioning), manifest
     * metadata-plane commits (where replan latency directly extends the
     * `_zcommit` turnstile hold and so caps concurrent-committer
-    * throughput). Same refcount discipline as [[withBatchConfs]]. */
-  private val noAqeDepth =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession,
-      (java.util.concurrent.atomic.AtomicInteger, String)]()
+    * throughput). */
+  private[graft] def withNoAqe[T](s: SparkSession)(f: => T): T =
+    withConf(s, "spark.sql.adaptive.enabled", "false")(f)
 
-  private[graft] def withNoAqe[T](s: SparkSession)(f: => T): T = {
-    val ak = "spark.sql.adaptive.enabled"
-    noAqeDepth.synchronized {
-      val (d, _) = noAqeDepth.computeIfAbsent(s,
-        _ => (new java.util.concurrent.atomic.AtomicInteger(0), ""))
-      if (d.getAndIncrement() == 0) {
-        noAqeDepth.put(s, (d, s.conf.get(ak, "true")))
-        s.conf.set(ak, "false")
-      }
+  /** (depth, value before the outermost scope) per (session, conf key). */
+  private val confScopes =
+    scala.collection.mutable.Map.empty[(SparkSession, String), (Int, Option[String])]
+
+  /** Run `f` with the session conf `key` set to `value`, refcounted per
+    * (session, key): the first entrant saves the prior value and sets
+    * `value`, nested and concurrent entrants keep the OUTERMOST value, and
+    * the last exit restores the prior value (or unsets a key that had
+    * none), on the failure path too. A naive save/restore interleaved
+    * across threads leaks the inner value into the session (the r15
+    * outputTimestampType bug class); two refcounts over one key interleave
+    * the same way, so every scope on a key goes through this one. */
+  private[graft] def withConf[T](s: SparkSession, key: String, value: String)
+      (f: => T): T = {
+    confScopes.synchronized {
+      val (depth, prior) = confScopes.getOrElse((s, key), (0, s.conf.getOption(key)))
+      if (depth == 0) s.conf.set(key, value)
+      confScopes((s, key)) = (depth + 1, prior)
     }
-    try f finally noAqeDepth.synchronized {
-      val (d, pa) = noAqeDepth.get(s)
-      if (d.decrementAndGet() == 0) {
-        s.conf.set(ak, pa)
-        noAqeDepth.remove(s) // don't retain dead sessions (r16 advisor)
+    try f finally confScopes.synchronized {
+      val (depth, prior) = confScopes((s, key))
+      if (depth > 1) confScopes((s, key)) = (depth - 1, prior)
+      else {
+        confScopes.remove((s, key)) // don't retain dead sessions
+        prior.fold(s.conf.unset(key))(s.conf.set(key, _))
       }
     }
   }
@@ -371,16 +351,11 @@ object StoreMaint {
     * Watermark FIRST, deletes after — a crash mid-sweep leaves extra
     * markers (harmless), never a refusable id that would re-apply.
     * Returns (new watermark, removed names). Runs under the store's
-    * writer lease like every other mutation. An append log
-    * ([[Sources.appendOnce]]) refuses: its markers are its commits, so a
-    * swept marker would hide that batch's rows from every reader. */
+    * writer lease like every other mutation. */
   def retentionSweep(s: SparkSession, root: String,
       keepLast: Int): (Long, Seq[String]) = {
     require(keepLast >= 2,
       "keepLast must cover at least the trailing replay batch (≥ 2)")
-    require(!fsFor(s, new Path(root)).exists(new Path(root, Sources.AppendOwner)),
-      s"$root is an append log: its applied/ markers commit its batches, " +
-        "and sweeping one would drop that batch from every read")
     Lease.withLease(s, root, "retention-sweep") {
       val fs = fsFor(s, new Path(root))
       val appliedDir = new Path(s"$root/applied")

@@ -3,6 +3,8 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+import org.apache.spark.sql.functions.{col, struct, to_json}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** Keyed stream-to-state correlation with timeout eviction — the typed
@@ -134,24 +136,36 @@ object Correlate {
     * (doInit → startStreamReader, svckinesis.js:250-256) as a
     * ProcessingTime-triggered query: consume status events continuously at
     * the reference's 1500 ms poll cadence (:209-211), correlate, and land
-    * every completion in an append log at `tablePath` (the durable analog
-    * of completing held HTTP responses — a web tier reads the table with
+    * every completion in a graft-shards stream at `tablePath` (the durable
+    * analog of completing held HTTP responses — a web tier reads it with
     * [[graft.sources.Sources.readTable]] instead of holding sockets in a
-    * process map).
+    * process map). Each completion is one record, keyed by its txnId, with
+    * `to_json(struct(txnId, finalStatus))` as its payload.
     *
-    * Exactly-once end to end, with no read of the table: the correlator
-    * emits at most one [[Completion]] per txnId (its tombstone suppresses
-    * re-delivered terminals, the watermark anything later), so the only
-    * other source of a duplicate is a replayed micro-batch. Each trigger's
-    * completions are one [[graft.sources.Sources.appendOnce]] keyed by the
-    * batch id: one job writes them straight from the stateful plan, and
-    * the batch's marker commits last, so a replay of a committed batch
-    * writes nothing and a replay of a crashed one overwrites files no
-    * reader opened. Offsets checkpoint the source cursor and the correlator state
-    * is store-backed, so a crash/restart never duplicates or loses a
-    * completion (StreamingSpec proves it across a restart). A trigger
-    * that completes nothing leaves no trace in the table, and a fresh
-    * checkpoint pointed at an existing table refuses.
+    * Exactly-once end to end, with no read of the completions: the
+    * correlator emits at most one [[Completion]] per txnId (its tombstone
+    * suppresses re-delivered terminals, the watermark anything later), so
+    * the only other source of a duplicate is a replayed micro-batch. The
+    * graft-shards sink ([[graft.sources.GraftShardsWrite]]) commits each
+    * micro-batch as one epoch: its tasks stage temp files straight from
+    * the stateful plan in one job, and the driver publishes them through
+    * an intent manifest, renames and a committed marker. A replay of a
+    * committed epoch runs its plan (so its state stores commit) and
+    * publishes nothing; a replay of one that died mid-publish finishes the
+    * dead attempt's renames instead. Epoch ids are per query, so the sink
+    * binds `tablePath` to this query's id on its first write: a fresh
+    * checkpoint pointed at an existing stream refuses rather than having
+    * its epochs skipped. Offsets checkpoint the source cursor and the
+    * correlator state is store-backed, so a crash/restart never duplicates
+    * or loses a completion (StreamingSpec proves it across a restart). A
+    * trigger that completes nothing publishes no chunk.
+    *
+    * The query's offset and commit logs and its state-store deltas commit
+    * through Spark's `FileSystemBasedCheckpointFileManager` (one
+    * `FileSystem.rename` each, where the `FileContext` manager forks
+    * processes on a local FS without native Hadoop). The setting is scoped
+    * to this `start()`, which is when the query takes its own copy of the
+    * session conf, so the session's own value is unchanged afterwards.
     *
     * `monitorDir` (optional) attaches the live dashboard
     * ([[Monitor.ProgressListener]], dashboard.yml:14-57 analog): one
@@ -169,18 +183,20 @@ object Correlate {
         detachOnTerminate = true))
     listener.foreach(s.streams.addListener)
     try {
-      correlate(events).toDF()
-        .writeStream
-        .queryName("correlate_serve")
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          graft.sources.Sources.appendOnce(batch, tablePath, id,
-            s.sparkContext.getLocalProperty("sql.streaming.queryId"))
-          ()
-        }
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.ProcessingTime(s"$intervalMs milliseconds"))
-        .start()
+      graft.sources.StoreMaint.withConf(s,
+          "spark.sql.streaming.checkpointFileManagerClass",
+          classOf[FileSystemBasedCheckpointFileManager].getName) {
+        correlate(events)
+          .select(col("txnId").as("key"),
+            to_json(struct(col("txnId"), col("finalStatus"))).as("data"))
+          .writeStream
+          .format("graft-shards")
+          .queryName("correlate_serve")
+          .outputMode(OutputMode.Append)
+          .option("checkpointLocation", checkpoint)
+          .trigger(Trigger.ProcessingTime(s"$intervalMs milliseconds"))
+          .start(tablePath)
+      }
     } catch {
       case t: Throwable =>
         listener.foreach(s.streams.removeListener)

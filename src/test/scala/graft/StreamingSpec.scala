@@ -1002,7 +1002,7 @@ class StreamingSpec extends SparkSpec {
 
   test("serve: continuous correlate→upsert lands completions across batches and a restart") {
     // the reference's live loop (svckinesis.js:250-256) end to end:
-    // Kinesis-shaped source → stateful correlator → append log
+    // Kinesis-shaped source → stateful correlator → graft-shards sink
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("graft-serve").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-serve-ck").toString
@@ -1057,17 +1057,10 @@ class StreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-serve1").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-serve1-ck").toString
     val table = java.nio.file.Files.createTempDirectory("graft-serve1-tbl").toString
-    // the log's files: markers and batch dirs, crc side files aside
-    def logEntries(): Set[String] = {
-      val root = java.nio.file.Paths.get(table)
-      Seq("applied", "data").flatMap { d =>
-        val sub = root.resolve(d).toFile
-        Option(sub.listFiles()).toSeq.flatten.map(_.getName)
-          .filterNot(_.startsWith(".")).map(n => s"$d/$n")
-      }.toSet
-    }
+    // the stream's published chunks
+    def logEntries(): Set[String] = publishedChunks(table).keySet
     // jobs per (streaming query id, batch id), from the properties every
-    // job of a trigger carries — the append's job inside foreachBatch included
+    // job of a trigger carries
     val barrierKey = "graft.test.barrier"
     val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long), Int]()
     @volatile var barrierDone = false
@@ -1096,14 +1089,13 @@ class StreamingSpec extends SparkSpec {
       try {
         step(ev("t1", "SUCCEEDED", 1), ev("t2", "RUNNING", 2), ev("t3", "FAILED", 3))
         val v1 = logEntries()
-        assert(v1.exists(_.startsWith("applied/")) && v1.exists(_.startsWith("data/")),
-          s"log after the first batch: $v1")
+        assert(v1.nonEmpty, "no chunk after the first batch")
         // RUNNING-only and already-completed events complete nothing: the
-        // trigger runs (state advances) but leaves no marker and no dir
+        // trigger runs (state advances) but publishes no chunk
         step(ev("t2", "RUNNING", 4), ev("t1", "SUCCEEDED", 5))
         assert(logEntries() == v1, "an idle micro-batch changed the log")
         step(ev("t2", "SUCCEEDED", 6))
-        assert(logEntries().size == v1.size + 2, s"log: ${logEntries()}")
+        assert(logEntries().size == v1.size + 1, s"log: ${logEntries()}")
       } finally q.stop()
       assert(dataBatches.size == 3, s"data-bearing batches: $dataBatches")
       assert(graft.sources.Sources.readTable(spark, table).as[(String, String)].collect().toMap ==
@@ -1118,8 +1110,8 @@ class StreamingSpec extends SparkSpec {
       val perBatch = dataBatches.map(b => b -> jobs.getOrDefault((q.id.toString, b), 0))
       // non-vacuous: the listener attributes the trigger's jobs to it
       assert(perBatch.forall(_._2 >= 1), s"jobs per data batch: $perBatch")
-      // the append writes straight from the stateful plan and counts its
-      // rows on that same job
+      // the sink's tasks stage the completions straight from the stateful
+      // plan, and the driver publishes them without another job
       assert(perBatch.forall(_._2 == 1), s"jobs per data batch: $perBatch")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
@@ -1127,6 +1119,13 @@ class StreamingSpec extends SparkSpec {
   private def appendedRows(table: String): Seq[(String, String)] =
     graft.sources.Sources.readTable(spark, table).select(col("txnId"), col("finalStatus"))
       .as[(String, String)].collect().toSeq.sorted
+
+  /** A graft-shards stream's published chunks, `shard/chunk` → mtime. */
+  private def publishedChunks(stream: String): Map[String, Long] =
+    Option(new java.io.File(stream).listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("shard-"))
+      .flatMap(d => d.listFiles().filter(_.getName.endsWith(".jsonl"))
+        .map(c => s"${d.getName}/${c.getName}" -> c.lastModified)).toMap
 
   test("serve: a batch replayed after its marker landed is evaluated again but not rewritten") {
     val dir = java.nio.file.Files.createTempDirectory("graft-alog-replay").toString
@@ -1136,19 +1135,23 @@ class StreamingSpec extends SparkSpec {
       Seq(ev("t1", "SUCCEEDED", 1), ev("t2", "SUCCEEDED", 2)))
     val q1 = Correlate.serve(shardStatusStream(dir), table, ckpt, intervalMs = 100)
     try q1.processAllAvailable() finally q1.stop()
-    // the crash window after the marker, before Spark's commit log entry:
-    // the restart replays the batch
+    // the crash window after the sink's epoch marker, before Spark's
+    // commit log entry: the restart replays the batch
     val commits = new java.io.File(ckpt, "commits")
     val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
     new java.io.File(commits, last.toString).delete()
     new java.io.File(commits, s".$last.crc").delete()
-    assert(new java.io.File(table, s"applied/$last").exists())
-    val files = new java.io.File(table, s"data/$last").list().toSet
+    assert(new java.io.File(table, s"_epochs/$last.committed").exists())
+    val files = publishedChunks(table)
+    assert(files.nonEmpty)
     val q2 = Correlate.serve(shardStatusStream(dir), table, ckpt, intervalMs = 100)
     try q2.processAllAvailable() finally q2.stop()
     assert(q2.exception.isEmpty, q2.exception)
     assert(q2.recentProgress.exists(_.batchId == last), "the batch was not replayed")
-    assert(new java.io.File(table, s"data/$last").list().toSet == files)
+    // no chunk rewritten, and the replay's staged temps are gone
+    assert(publishedChunks(table) == files)
+    assert(new java.io.File(table).listFiles().filter(_.getName.startsWith("shard-"))
+      .forall(_.list().forall(!_.startsWith("_wtmp-"))))
     assert(appendedRows(table) == Seq("t1" -> "SUCCEEDED", "t2" -> "SUCCEEDED"))
   }
 
@@ -1161,15 +1164,62 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("graft-alog-own-ck1").toString, intervalMs = 100)
     try q1.processAllAvailable() finally q1.stop()
     assert(appendedRows(table) == Seq("t1" -> "SUCCEEDED"))
-    // a second query numbers its batches from 0 again: batch 0 is marked,
-    // so without the owner check t2 would be skipped as already applied
+    // a second query numbers its epochs from 0 again: epoch 0 is marked,
+    // so without the owner check t2 would be skipped as already committed
     graft.sources.GraftShards.append(dir, 0, Seq(ev("t2", "SUCCEEDED", 2)))
     val q2 = Correlate.serve(stream, table,
       java.nio.file.Files.createTempDirectory("graft-alog-own-ck2").toString, intervalMs = 100)
     val e = try intercept[org.apache.spark.sql.streaming.StreamingQueryException](
       q2.processAllAvailable()) finally q2.stop()
-    assert(e.getMessage.contains("append log of streaming query"), e.getMessage)
+    assert(e.getMessage.contains("is written by streaming query"), e.getMessage)
     assert(appendedRows(table) == Seq("t1" -> "SUCCEEDED"))
+  }
+
+  test("serve: checkpoints commit by FileSystem rename; the session conf is unchanged") {
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val fsManager = classOf[org.apache.spark.sql.execution.streaming.checkpointing
+      .FileSystemBasedCheckpointFileManager].getName
+    val before = spark.conf.getOption(key)
+    val dir = java.nio.file.Files.createTempDirectory("graft-serve-cfm").toString
+    graft.sources.GraftShards.append(dir, 0, Seq(ev("t1", "SUCCEEDED", 1)))
+    def tmp(tag: String) = java.nio.file.Files.createTempDirectory(s"graft-serve-cfm-$tag").toString
+    def serve() = Correlate.serve(shardStatusStream(dir), tmp("tbl"), tmp("ck"), intervalMs = 100)
+    // two serves started at once on one session, so their conf scopes
+    // overlap; Spark's duplicate-name check may refuse either start()
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val tries = (0 until 2).map { _ =>
+      val r = new java.util.concurrent.atomic.AtomicReference[
+        scala.util.Try[org.apache.spark.sql.streaming.StreamingQuery]]()
+      val t = new Thread(() => { go.await(); r.set(scala.util.Try(serve())) })
+      t.start(); (t, r)
+    }
+    go.countDown()
+    tries.foreach(_._1.join(120000))
+    val results = tries.map(_._2.get)
+    val started = results.collect { case scala.util.Success(q) => q }
+    try {
+      results.collect { case scala.util.Failure(e) => e }.foreach(e =>
+        assert(e.getMessage.contains("already active"), e))
+      assert(started.nonEmpty, results)
+      assert(spark.conf.getOption(key) == before)
+      started.foreach { q =>
+        q.processAllAvailable()
+        assert(q.exception.isEmpty, q.exception)
+        // the query's own session copy (which plans the state stores) and
+        // its offset and commit logs use the FileSystem-based manager
+        val exec = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        assert(exec.lastExecution.sparkSession.conf.get(key) == fsManager)
+        Seq[AnyRef](exec.offsetLog, exec.commitLog).foreach { log =>
+          val fm = log.getClass.getMethod("fileManager").invoke(log) // protected in Scala
+          assert(fm.getClass.getName == fsManager, fm.getClass)
+        }
+      }
+      // a start() that throws on its own restores the session conf too
+      intercept[IllegalArgumentException](serve())
+      assert(spark.conf.getOption(key) == before)
+    } finally started.foreach(_.stop())
+    assert(spark.conf.getOption(key) == before)
   }
 
   // ---- graft-zcdf: the z-store change-feed streaming source (r10) --------

@@ -68,7 +68,7 @@ class GraftShardsWriteProtocolSpec extends graft.SparkSpec {
     // the REPLAY attempt: re-staged the same records as fresh temps
     val t2a = stage(dir, 0, "_wtmp-7-0-cccc", Seq("r0", "r1"))
     val t2b = stage(dir, 1, "_wtmp-7-0-dddd", Seq("r2"))
-    val write = new GraftShardsWrite.EpochWrite(dir, 2, Map.empty)
+    val write = new GraftShardsWrite.EpochWrite(dir, 2, "q", Map.empty)
     write.commit(7L, Array[WriterCommitMessage](
       GraftShardsWrite.CommitMsg(0, Map(0 -> (t2a, 2L), 1 -> (t2b, 1L)))))
     // exactly the ORIGINAL plan's chunks, exactly once
@@ -99,16 +99,16 @@ class GraftShardsWriteProtocolSpec extends graft.SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-wpin").toString
     val f = GraftShardsSource.fs(new Path(dir))
     // fresh dir: any numShards passes and pins the layout
-    new GraftShardsWrite.EpochWrite(dir, 2, Map.empty)
+    new GraftShardsWrite.EpochWrite(dir, 2, "q", Map.empty)
       .createStreamingWriterFactory(null)
     assert(f.exists(new Path(dir, GraftShardsSource.NumShardsFileName)))
     // a later sink with a different numShards refuses loudly
     val e = intercept[IllegalArgumentException](
-      new GraftShardsWrite.EpochWrite(dir, 4, Map.empty)
+      new GraftShardsWrite.EpochWrite(dir, 4, "q", Map.empty)
         .createStreamingWriterFactory(null))
     assert(e.getMessage.contains("pinned"))
     // the matching count keeps working
-    new GraftShardsWrite.EpochWrite(dir, 2, Map.empty)
+    new GraftShardsWrite.EpochWrite(dir, 2, "q", Map.empty)
       .createStreamingWriterFactory(null)
   }
 
@@ -118,17 +118,17 @@ class GraftShardsWriteProtocolSpec extends graft.SparkSpec {
     (0 to 2).foreach(s => GraftShards.append(dir, s, Seq(s"r$s")))
     // 3 live dirs, no pin (appends don't pin): numShards=2 re-routes keys
     val e = intercept[IllegalArgumentException](
-      new GraftShardsWrite.EpochWrite(dir, 2, Map.empty)
+      new GraftShardsWrite.EpochWrite(dir, 2, "q", Map.empty)
         .createStreamingWriterFactory(null))
     assert(e.getMessage.contains("live shard dirs"))
     // the matching count passes and pins for the future
-    new GraftShardsWrite.EpochWrite(dir, 3, Map.empty)
+    new GraftShardsWrite.EpochWrite(dir, 3, "q", Map.empty)
       .createStreamingWriterFactory(null)
     // a reshard closes a parent: the flat sink refuses even at the pinned
     // count — its hash cannot target the children
     GraftShards.split(dir, 0, Seq(3, 4))
     val e2 = intercept[IllegalArgumentException](
-      new GraftShardsWrite.EpochWrite(dir, 3, Map.empty)
+      new GraftShardsWrite.EpochWrite(dir, 3, "q", Map.empty)
         .createStreamingWriterFactory(null))
     assert(e2.getMessage.contains("resharded"))
   }
@@ -143,7 +143,7 @@ class GraftShardsWriteProtocolSpec extends graft.SparkSpec {
       GraftShards.writeSharded(df, dir, 4, col("k"), Seq(col("k"))))
     assert(e.getMessage.contains("pinned"))
     // a sink at the pinned count is accepted on the producer's layout
-    new GraftShardsWrite.EpochWrite(dir, 2, Map.empty)
+    new GraftShardsWrite.EpochWrite(dir, 2, "q", Map.empty)
       .createStreamingWriterFactory(null)
   }
 
@@ -172,7 +172,7 @@ class GraftShardsWriteProtocolSpec extends graft.SparkSpec {
     spark
     val dir = java.nio.file.Files.createTempDirectory("graft-wclosed").toString
     val numShards = 2
-    val factory = new GraftShardsWrite.EpochWrite(dir, numShards, Map.empty)
+    val factory = new GraftShardsWrite.EpochWrite(dir, numShards, "q", Map.empty)
       .createStreamingWriterFactory(null) // validates + pins BEFORE the reshard
     // reshard happens while the query runs: shard 0 closes
     GraftShards.split(dir, 0, Seq(2, 3))
@@ -228,7 +228,7 @@ class GraftShardsWriteProtocolSpec extends graft.SparkSpec {
     GraftShards.append(dir, 0, Seq("pre0", "pre1")) // existing head at 2
     val tA = stage(dir, 0, "_wtmp-3-0-aaaa", Seq("p0r0"))
     val tB = stage(dir, 0, "_wtmp-3-1-bbbb", Seq("p1r0", "p1r1"))
-    val write = new GraftShardsWrite.EpochWrite(dir, 1, Map.empty)
+    val write = new GraftShardsWrite.EpochWrite(dir, 1, "q", Map.empty)
     // partition 1's message listed FIRST: commit must still order by
     // partitionId, so partition 0's records take the earlier seqs
     write.commit(3L, Array[WriterCommitMessage](
@@ -283,11 +283,38 @@ class GraftShardsWriteProtocolSpec extends graft.SparkSpec {
     }
   }
 
+  test("a fresh checkpoint on a written stream dir refuses") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val dir = java.nio.file.Files.createTempDirectory("graft-wowner").toString
+    // three epochs of five rows each, from a query with its own checkpoint
+    def run(tag: String): Unit = {
+      val in = MemoryStream[String]
+      val q = in.toDF().select(col("value").as("key"), col("value").as("data"))
+        .writeStream.format("graft-shards").option("numShards", "2")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory(s"graft-wowner-$tag").toString)
+        .start(dir)
+      try (0 until 3).foreach { e =>
+        in.addData((0 until 5).map(i => s"$tag-$e-$i"))
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    run("a")
+    // B numbers its epochs from 0 again, and A's markers cover 0..2
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](run("b"))
+    assert(e.getMessage.contains("is written by streaming query"), e.getMessage)
+    val records = (0 until 2).flatMap(chunkLines(dir, _)).flatMap(_._2)
+    assert(records.sorted == (for (ep <- 0 until 3; i <- 0 until 5) yield s"a-$ep-$i").sorted)
+  }
+
   test("planted: the same 4-partition epoch staged without the distribution leaves several chunks in a shard") {
     spark
     val numShards = 4
     val dir = java.nio.file.Files.createTempDirectory("graft-wnodist").toString
-    val write = new GraftShardsWrite.EpochWrite(dir, numShards, Map.empty)
+    val write = new GraftShardsWrite.EpochWrite(dir, numShards, "q", Map.empty)
     val factory = write.createStreamingWriterFactory(null)
     // each input partition stages its own rows, as a write with no
     // shuffle in front of it does

@@ -171,7 +171,7 @@ class ObjectStoreSafetySpec extends graft.SparkSpec {
     reader.start()
     SlowRenameFileSystem.renameDelayMs = 40
     try {
-      new GraftShardsWrite.EpochWrite(dir, 2, Map.empty).commit(1L,
+      new GraftShardsWrite.EpochWrite(dir, 2, "q", Map.empty).commit(1L,
         Array[WriterCommitMessage](
           GraftShardsWrite.CommitMsg(0, Map(0 -> (tA, 2L), 1 -> (tB, 3L))),
           GraftShardsWrite.CommitMsg(1, Map(0 -> (tC, 2L)))))
