@@ -170,7 +170,7 @@ object ScaleProbe {
     def buildBucketed(dir: String, scale: Int): Unit = {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       Seq("zspj_a", "zspj_b").foreach(n =>
-        graft.sources.ZOrder.recordBucketing(spark, s"$dir/$n", "k", 16))
+        graft.sources.ZLog.recordBucketing(spark, s"$dir/$n", "k", 16))
       graft.sources.ZOrder.writeZOrdered(
         docs.select(col("doc_id").as("k"), col("n_chars").as("v")),
         s"$dir/zspj_a", Seq("k"), 32 * scale)
@@ -302,19 +302,19 @@ object ScaleProbe {
       // round-9: z-store streaming ingest (the fifth exactly-once loop;
       // tag-idempotent appends + marker recipe)
       "q132_zorder_ingest" -> ((d, _) =>
-        graft.sources.ZOrder.q132ZOrderStreamIngest.fn(spark, d)),
+        graft.sources.ZQueries.q132ZOrderStreamIngest.fn(spark, d)),
       // round-10: the CDC-apply merge loop (sixth exactly-once ingest) —
       // per-batch cost is O(affected files + batch), so growth should
       // track the CDC volume, never batches × table
       "q141_cdc_merge" -> ((d, _) =>
-        graft.sources.ZOrder.q141ZOrderCdcMerge.fn(spark, d)),
+        graft.sources.ZQueries.q141ZOrderCdcMerge.fn(spark, d)),
       // round-10: change-feed stream consume and the continuous IVM over
       // it — cost is O(delta files) reads + per-version folds (view rows
       // ≤ #langs), so growth should track data volume
       "q140_zcdf_stream" -> ((d, _) =>
-        graft.sources.ZOrder.q140ZcdfStream.fn(spark, d)),
+        graft.sources.ZQueries.q140ZcdfStream.fn(spark, d)),
       "q143_zcdf_ivm" -> ((d, _) =>
-        graft.sources.ZOrder.q143ZcdfIvm.fn(spark, d)),
+        graft.sources.ZQueries.q143ZcdfIvm.fn(spark, d)),
       // round-10: bloom point-index lifecycle at the file-count knob
       // (32→320): build = one distributed pass + O(files) sidecars; the
       // probe itself opens O(matches) files at either scale
@@ -541,7 +541,7 @@ object ScaleProbe {
       graft.dedup.LshIndex.clearCaches()
       graft.sim.VecIndex.clearCaches()
       graft.sim.PqIndex.clearCaches()
-      graft.sources.ZOrder.clearCaches()
+      graft.sources.ZQueries.clearCaches()
       graft.text.TextIndex.clearCaches()
     }
     pass(x1, 1)

@@ -20,7 +20,7 @@ object SparkEntry {
       graft.sim.VecIndex.all ++
       graft.sim.PqIndex.all ++
       graft.sim.Retrieval.all ++
-      graft.sources.ZOrder.all ++
+      graft.sources.ZQueries.all ++
       graft.streaming.Streaming.all ++
       graft.multimodal.Multimodal.all ++
       graft.relational.Relational2.all ++

@@ -11,10 +11,6 @@ import org.apache.spark.sql.types.StructType
   * The reference's storage layer is: JSON documents point-read/overwritten
   * whole per key on S3 (R1 `readInputDataJSON` aprocess.js:15-32, R5
   * `writeBodyObj` aprocess.js:34-45). Here that becomes:
-  *  - schema-explicit JSON/CSV scans (schema given, not inferred — an
-  *    inference pass over 100 TB is a full extra read of the data);
-  *  - partitioned parquet writes, so downstream point-lookups and range
-  *    scans prune to one partition directory instead of the full table;
   *  - a whole-row keyed upsert sink ([[upsert]]) with an atomic
   *    staging-directory swap — the R5 "overwrite the document at its key"
   *    semantics, batched: one job rewrites the table once per batch no
@@ -30,99 +26,6 @@ import org.apache.spark.sql.types.StructType
   * runs against HDFS/S3A (Path/FileSystem are scheme-agnostic).
   */
 object Sources {
-
-  /** JSON-lines scan with explicit schema (no inference pass). */
-  def readJson(s: SparkSession, path: String, schema: StructType): DataFrame =
-    s.read.schema(schema).json(path)
-
-  def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
-
-  /** Fault-tolerant JSON-lines scan for dirty corpora: malformed lines do
-    * NOT fail the job (one bad crawl record must not kill a 100 TB read) —
-    * they land intact in a `_corrupt_record` column for quarantine, valid
-    * rows parse normally. Callers split on `_corrupt_record IS NULL`.
-    *
-    * CAVEAT: Spark refuses a query over raw JSON whose referenced columns
-    * are ONLY `_corrupt_record` — `.cache()` the returned frame (or carry
-    * a data column) before a quarantine-only select, as SourcesSpec does. */
-  def readJsonPermissive(s: SparkSession, path: String,
-      schema: StructType): DataFrame =
-    s.read
-      .schema(schema.add("_corrupt_record", org.apache.spark.sql.types.StringType))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
-
-  /** CSV scan with explicit schema + header. */
-  def readCsv(s: SparkSession, path: String, schema: StructType): DataFrame =
-    s.read.schema(schema).option("header", "true").csv(path)
-
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(path)
-
-  /** ORC scan/sink — the other columnar format Spark bundles. Same
-    * pushdown/pruning properties as parquet (predicate pushdown via ORC
-    * search arguments, column projection via the schema — SourcesSpec pins
-    * both), so a deployment standardized on ORC swaps formats without
-    * losing the scan-side scale levers. */
-  def readOrc(s: SparkSession, path: String): DataFrame =
-    s.read.orc(path)
-
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
-
-  /** XML scan/sink — Spark 4 bundles the (formerly external spark-xml)
-    * data source natively. Schema-explicit like the JSON/CSV scans (no
-    * inference pass over 100 TB); `rowTag` selects the repeating record
-    * element. XML gets no parquet-style predicate/aggregate pushdown — it
-    * is an INGESTION format here (crawl dumps, wiki exports, feed
-    * archives): read once, filter in Spark, persist columnar. SourcesSpec
-    * pins the round-trip. */
-  def readXml(s: SparkSession, path: String, schema: StructType,
-      rowTag: String = "row"): DataFrame =
-    s.read.schema(schema).option("rowTag", rowTag).xml(path)
-
-  def writeXml(df: DataFrame, path: String, rowTag: String = "row"): Unit =
-    df.write.mode("overwrite").option("rowTag", rowTag).xml(path)
-
-  /** Hive-style partitioned parquet write: reads filtered on `partCols`
-    * prune to matching directories (partition pruning — verified in
-    * SourcesSpec via inputFiles). */
-  def writePartitioned(df: DataFrame, path: String, partCols: String*): Unit =
-    df.write.mode("overwrite").partitionBy(partCols: _*).parquet(path)
-
-  /** Binary-file ingestion — how a multimodal corpus (image/audio/video
-    * files on object storage) actually enters the engine: each file
-    * becomes one row `(path, modificationTime, length, content: binary)`,
-    * ready for the `multimodal` operators' payload+metadata shape.
-    * `pathGlobFilter` selects a modality by extension WITHOUT opening
-    * non-matching files, and the scan parallelizes per file — a million
-    * images fan out across executors with no driver-side listing
-    * bottleneck beyond the initial index. */
-  def readBinaryFiles(s: SparkSession, path: String,
-      glob: String = "*"): DataFrame =
-    s.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(path)
-
-  /** Range-sharded sorted export — the training-shard layout writer:
-    * `repartitionByRange` splits the keyspace into `numShards` contiguous
-    * ranges (one output file each, ranges disjoint), and each shard is
-    * sorted by the key within its file. Readers that want "shard i of N"
-    * open exactly one file; a sequential consumer (a training loader
-    * streaming packed chunks in q92 order) reads the files in name order
-    * and sees the full corpus globally sorted — WITHOUT any global
-    * single-partition sort having run (range partitioning samples the key
-    * distribution, then each shard sorts locally in parallel).
-    * maxRecordsPerFile bounds file size at scale. */
-  def writeRangeSharded(df: DataFrame, path: String, key: String,
-      numShards: Int, maxRecordsPerFile: Long = 0L): Unit =
-    df.repartitionByRange(numShards, col(key))
-      .sortWithinPartitions(key)
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(path)
 
   /** Version-directory names: v1, v2, … */
   private val VersionRe = "^v(\\d+)$".r

@@ -75,14 +75,14 @@ class ZBatchProvider extends TableProvider with DataSourceRegister
     val s = SparkSession.active
     val path = ZcdfStream.pathOf(options)
     if (options.getBoolean("history", false)) {
-      require(ZOrder.storeExists(s, path),
+      require(ZLog.storeExists(s, path),
         s"no committed z-store under $path — no history to describe")
       require(ZBatch.travelOf(options).isEmpty &&
           ZBatch.changesOf(options).isEmpty,
         "graft-z: .option(\"history\", true) describes ALL commits — it " +
           "does not combine with time-travel or change-feed options")
       ZBatch.HistorySchema
-    } else if (ZOrder.storeExists(s, path))
+    } else if (ZLog.storeExists(s, path))
       ZcdfStream.wireSchema(s, path, "graft-z", ZBatch.travelOf(options))
     else if (options.containsKey("zcols")) new StructType() // create-on-write
     else throw new IllegalArgumentException(
@@ -175,7 +175,7 @@ class ZStreamSink(parameters: Map[String, String])
   /** Resolved per batch (the store may not exist before the first one):
     * the option, else the store's recorded clustering keys. */
   private def zcols(s: org.apache.spark.sql.SparkSession): Seq[String] =
-    zcolsOpt.orElse(ZOrder.recordedZcols(s, path)).getOrElse(
+    zcolsOpt.orElse(ZLog.recordedZcols(s, path)).getOrElse(
       throw new IllegalArgumentException(
         "graft-z streaming sink needs .option(\"zcols\", \"c1,c2\") — " +
           "the clustering keys of each appended batch"))
@@ -430,12 +430,12 @@ class ZBatchTable(path: String, tschema: StructType,
   override def partitioning(): Array[Transform] = {
     val s = SparkSession.active
     // layout policy records PHYSICAL names; the table surface is logical
-    val bucket = ZOrder.recordedBucketing(s, path).map { case (c, n) =>
+    val bucket = ZLog.recordedBucketing(s, path).map { case (c, n) =>
       org.apache.spark.sql.connector.expressions.Expressions
         .bucket(n, ZOrder.logicalNameFor(s, path, c)): Transform
     }
     bucket.toArray ++
-      ZOrder.recordedZcols(s, path).getOrElse(Seq.empty)
+      ZLog.recordedZcols(s, path).getOrElse(Seq.empty)
         .map(c => org.apache.spark.sql.connector.expressions.Expressions
           .identity(ZOrder.logicalNameFor(s, path, c)))
   }
@@ -443,14 +443,14 @@ class ZBatchTable(path: String, tschema: StructType,
   override def properties(): java.util.Map[String, String] = {
     val m = new java.util.HashMap[String, String]()
     m.put("provider", "graft-z")
-    ZOrder.recordedZcols(SparkSession.active, path)
+    ZLog.recordedZcols(SparkSession.active, path)
       .foreach(cs => m.put("z.clustering", cs.mkString(",")))
     pinnedTravel match {
       case Some((e, v)) =>
         m.put("z.travel.epoch", e.toString)
         m.put("z.travel.version", v.toString)
       case None =>
-        ZOrder.currentSnapshot(SparkSession.active, path).foreach { snap =>
+        ZLog.currentSnapshot(SparkSession.active, path).foreach { snap =>
           m.put("z.epoch", snap.epoch.toString)
           m.put("z.versions", snap.vdirs.size.toString)
         }
@@ -476,7 +476,7 @@ class ZBatchTable(path: String, tschema: StructType,
       : Option[Seq[(String, Any, Any)]] = ZBatch.exactBandPreds(filters)
 
   private def recordedZcolsOrRefuse: Seq[String] =
-    ZOrder.recordedZcols(SparkSession.active, path).getOrElse(
+    ZLog.recordedZcols(SparkSession.active, path).getOrElse(
       throw new IllegalArgumentException(
         s"$path predates recorded clustering keys — run one write with " +
           ".option(\"zcols\", …) (or the programmatic API) first"))
@@ -652,7 +652,7 @@ class ZBatchWriteBuilder(path: String,
             // the way the table was declared
             val zcols = Option(opts.get("zcols"))
               .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-              .orElse(ZOrder.recordedZcols(data.sparkSession, path))
+              .orElse(ZLog.recordedZcols(data.sparkSession, path))
               .getOrElse(throw new IllegalArgumentException(
                 "graft-z write needs .option(\"zcols\", \"c1,c2\") — " +
                   "the clustering keys of the batch (stores created " +
@@ -664,7 +664,7 @@ class ZBatchWriteBuilder(path: String,
               .getOrElse(Seq.empty)
             val tag = Option(opts.get("tag"))
             replaceWhere match {
-              case Some(preds) if ZOrder.storeExists(data.sparkSession, path) =>
+              case Some(preds) if ZLog.storeExists(data.sparkSession, path) =>
                 ZOrder.overwriteZRange(data, path, preds, zcols,
                   Option(opts.get("numFiles")).map(_.toInt).getOrElse(0))
                 ()
@@ -757,7 +757,7 @@ class ZStreamingWrite(path: String,
       if (staged.nonEmpty) {
         val zcols = Option(opts.get("zcols"))
           .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-          .orElse(ZOrder.recordedZcols(s, path))
+          .orElse(ZLog.recordedZcols(s, path))
           .getOrElse(throw new IllegalArgumentException(
             s"graft-z streaming write to $path needs clustering keys — " +
               "a table created through the catalog records them; " +
@@ -1170,7 +1170,7 @@ class ZBatchScan(path: String, required: StructType,
     val s = SparkSession.active
     if (changes.nonEmpty || limit.nonEmpty ||
         !s.sessionState.conf.v2BucketingEnabled) None
-    else ZOrder.recordedBucketing(s, path)
+    else ZLog.recordedBucketing(s, path)
       .map { case (bcol, n) => // the scan output speaks logical
         (ZOrder.logicalNameFor(s, path, bcol), n) }
       .filter { case (bcol, _) =>
@@ -1230,7 +1230,7 @@ class ZBatchScan(path: String, required: StructType,
 case class ZBatchPartition(files: Seq[(String, Long, String)])
   extends InputPartition
 
-/** One HASH BUCKET of a bucketed store ([[ZOrder.recordedBucketing]]):
+/** One HASH BUCKET of a bucketed store ([[ZLog.recordedBucketing]]):
   * all surviving files whose recorded [[ZOrder.BucketKey]] id is
   * `bucket`, as ONE input partition keyed by that id — what Spark's
   * storage-partitioned join aligns on (`HasPartitionKey`; the scan

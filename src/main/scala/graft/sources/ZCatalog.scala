@@ -32,7 +32,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * of truth (Delta's path-table discipline, here with names). CREATE
   * TABLE commits an EMPTY epoch-0 manifest carrying the declared schema
   * and records the PARTITIONED BY columns as the store's clustering
-  * policy ([[ZOrder.recordedZcols]]) — what later option-less INSERTs
+  * policy ([[ZLog.recordedZcols]]) — what later option-less INSERTs
   * cluster by. `PARTITIONED BY` is deliberately reused for the
   * clustering declaration: z-ordering IS this format's physical layout
   * story, and identity transforms are exactly the shape SQL can say.
@@ -85,7 +85,7 @@ class ZCatalog extends TableCatalog with SupportsNamespaces
           in("small_bytes", LongType).defaultValue("16777216").build()),
         StructType(Seq(StructField("files_folded", LongType))),
         r => longRow(ZOrder.compactSmallFiles(s, tblOf(r),
-          ZOrder.recordedZcols(s, tblOf(r)).getOrElse(
+          ZLog.recordedZcols(s, tblOf(r)).getOrElse(
             throw new IllegalArgumentException(
               s"${r.getUTF8String(0)} predates recorded clustering keys")),
           r.getLong(1)).toLong)),
@@ -95,7 +95,7 @@ class ZCatalog extends TableCatalog with SupportsNamespaces
         StructType(Seq(StructField("num_files", LongType))),
         r => {
           ZOrder.reclusterZOrdered(s, tblOf(r),
-            ZOrder.recordedZcols(s, tblOf(r)).getOrElse(
+            ZLog.recordedZcols(s, tblOf(r)).getOrElse(
               throw new IllegalArgumentException(
                 s"${r.getUTF8String(0)} predates recorded clustering keys")),
             r.getLong(1).toInt)
@@ -198,9 +198,9 @@ class ZCatalog extends TableCatalog with SupportsNamespaces
               f.dataType == org.apache.spark.sql.types.IntegerType,
             s"set_bucketing: bucket column must be BIGINT/INT; got " +
               f.dataType.simpleString)
-          ZOrder.recordBucketing(s, dir, f.name, n)
+          ZLog.recordBucketing(s, dir, f.name, n)
           ZOrder.reclusterZOrdered(s, dir,
-            ZOrder.recordedZcols(s, dir).getOrElse(Seq(f.name)),
+            ZLog.recordedZcols(s, dir).getOrElse(Seq(f.name)),
             r.getLong(3).toInt)
           longRow(ZOrder.listDataFiles(s, dir).size.toLong)
         }),
@@ -238,7 +238,7 @@ class ZCatalog extends TableCatalog with SupportsNamespaces
               s"replace_where: no band order for ${dt.simpleString}")
           }
           val src = s.table(r.getUTF8String(4).toString)
-          val zcols = ZOrder.recordedZcols(s, dir).getOrElse(
+          val zcols = ZLog.recordedZcols(s, dir).getOrElse(
             throw new IllegalArgumentException(
               s"${r.getUTF8String(0)} predates recorded clustering keys"))
           val (nDel, nIns) = ZOrder.overwriteZRange(src, dir,
@@ -325,13 +325,13 @@ class ZCatalog extends TableCatalog with SupportsNamespaces
     if (!fs.exists(base)) throw new NoSuchNamespaceException(
       catalogName +: namespace.toSeq)
     fs.listStatus(base).filter(_.isDirectory)
-      .filter(st => ZOrder.storeExists(s, st.getPath.toString))
+      .filter(st => ZLog.storeExists(s, st.getPath.toString))
       .map(st => Identifier.of(namespace, st.getPath.getName))
   }
 
   override def loadTable(ident: Identifier): Table = {
     val dir = dirOf(ident)
-    if (ZOrder.storeExists(s, dir))
+    if (ZLog.storeExists(s, dir))
       return new ZBatchTable(dir,
         ZcdfStream.wireSchema(s, dir, s"$catalogName.$ident"))
     // Iceberg-style METADATA TABLE `<table>.changes` (r15 — the r14
@@ -352,7 +352,7 @@ class ZCatalog extends TableCatalog with SupportsNamespaces
       val base = Identifier.of(ident.namespace().dropRight(1),
         ident.namespace().last)
       val bdir = dirOf(base)
-      if (ZOrder.storeExists(s, bdir))
+      if (ZLog.storeExists(s, bdir))
         return new ZcdfTable(bdir,
           ZcdfStream.tableSchema(s, bdir, changeFeed = true),
           changeFeed = true)
@@ -366,7 +366,7 @@ class ZCatalog extends TableCatalog with SupportsNamespaces
     * snapshot's schema governs and the table is read-only. */
   override def loadTable(ident: Identifier, version: String): Table = {
     val dir = dirOf(ident)
-    if (!ZOrder.storeExists(s, dir)) throw new NoSuchTableException(ident)
+    if (!ZLog.storeExists(s, dir)) throw new NoSuchTableException(ident)
     val coord = version.split("[:.]") match {
       case Array(e, v) if e.forall(_.isDigit) && v.forall(_.isDigit) =>
         (e.toLong, v.toLong)
@@ -386,7 +386,7 @@ class ZCatalog extends TableCatalog with SupportsNamespaces
     * Delta's wall-clock travel form). */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
     val dir = dirOf(ident)
-    if (!ZOrder.storeExists(s, dir)) throw new NoSuchTableException(ident)
+    if (!ZLog.storeExists(s, dir)) throw new NoSuchTableException(ident)
     val coord = ZOrder.versionAsOfTimestamp(s, dir, timestampMicros / 1000L)
     new ZBatchTable(dir,
       ZcdfStream.wireSchema(s, dir, s"$catalogName.$ident", Some(coord)),
@@ -397,7 +397,7 @@ class ZCatalog extends TableCatalog with SupportsNamespaces
       partitions: Array[Transform],
       properties: java.util.Map[String, String]): Table = {
     val dir = dirOf(ident)
-    require(!ZOrder.storeExists(s, dir),
+    require(!ZLog.storeExists(s, dir),
       s"table $catalogName.$ident already exists ($dir)")
     ZOrder.invalidateScanPlans(dir) // out-of-band dir replacement defense
     // `PARTITIONED BY (bucket(n, k), c1, …)`: at most ONE bucket
@@ -487,7 +487,7 @@ class ZCatalog extends TableCatalog with SupportsNamespaces
     // against them. Bucketing is recorded FIRST so the very first
     // write (and every later one: zWrite reads the policy per batch)
     // routes by bucket.
-    bucketDecl.foreach { case (c, n) => ZOrder.recordBucketing(s, dir, c, n) }
+    bucketDecl.foreach { case (c, n) => ZLog.recordBucketing(s, dir, c, n) }
     // TBLPROPERTIES('changeFeed'='true') — Delta's enableChangeDataFeed
     if (Option(properties.get("changeFeed"))
         .orElse(Option(properties.get("changefeed")))
@@ -529,7 +529,7 @@ class ZCatalog extends TableCatalog with SupportsNamespaces
     * indirection would corrupt every existing file's reads. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val dir = dirOf(ident)
-    if (!ZOrder.storeExists(s, dir)) throw new NoSuchTableException(ident)
+    if (!ZLog.storeExists(s, dir)) throw new NoSuchTableException(ident)
     val adds = changes.flatMap {
       case a: TableChange.AddColumn =>
         require(a.fieldNames().length == 1,
@@ -571,14 +571,13 @@ class ZCatalog extends TableCatalog with SupportsNamespaces
 
   override def dropTable(ident: Identifier): Boolean = {
     val dir = dirOf(ident)
-    if (!ZOrder.storeExists(s, dir)) false
+    if (!ZLog.storeExists(s, dir)) false
     else {
-      val p = new Path(dir)
       // drop the store's cached scan plans too: a recreate at this path
       // restarts at e0/v0, and on a coarse-mtime filesystem the birth
       // identity alone could collide within one tick
       ZOrder.invalidateScanPlans(dir)
-      StoreMaint.fsFor(s, p).delete(p, true)
+      ZLog.dropStore(s, dir)
     }
   }
 
@@ -594,7 +593,7 @@ class ZCatalog extends TableCatalog with SupportsNamespaces
     val fs = StoreMaint.fsFor(s, base)
     if (!fs.exists(base)) Array.empty
     else fs.listStatus(base).filter(_.isDirectory)
-      .filterNot(st => ZOrder.storeExists(s, st.getPath.toString))
+      .filterNot(st => ZLog.storeExists(s, st.getPath.toString))
       .map(st => Array(st.getPath.getName))
   }
 
@@ -607,7 +606,7 @@ class ZCatalog extends TableCatalog with SupportsNamespaces
       if (!fs.exists(base)) throw new NoSuchNamespaceException(
         catalogName +: namespace.toSeq)
       fs.listStatus(base).filter(_.isDirectory)
-        .filterNot(st => ZOrder.storeExists(s, st.getPath.toString))
+        .filterNot(st => ZLog.storeExists(s, st.getPath.toString))
         .map(st => namespace :+ st.getPath.getName)
     }
 

@@ -1,14 +1,12 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
-import graft.{Q, Tables}
+import ZLog._
 
 /** Multi-dimensional clustering + file-level data skipping: the
   * OPTIMIZE-ZORDER shape of the lakehouse world (Delta/Iceberg publish the
@@ -26,38 +24,9 @@ import graft.{Q, Tables}
   * oracle — a manifest that pruned a file containing matching rows would
   * hash-fail against the plain-filter SQL.
   *
-  * ON-DISK LAYOUT — the manifest is the COMMIT LOG, epochs make rebuilds
-  * a versioned swap:
-  * {{{
-  *   root/
-  *     d-<uuid>/part-*.parquet     one immutable data dir per write batch
-  *     _zmanifest/e<E>/v<N>/       per-version stats parquet; committed
-  *                                 when its _SUCCESS exists
-  * }}}
-  * Readers resolve the HIGHEST epoch with a committed `v0`, then union
-  * that epoch's committed versions; they trust ONLY manifest-listed files.
-  * Version numbers are allocated by exclusive-created `v<N>.claim` files
-  * (the CAS behind lock-free concurrent appends — see [[appendZOrdered]]);
-  * `v<N>.rolled` tickets arbitrate the rebase of appends that raced an
-  * epoch rewrite ([[rollForwardLateAppends]]). So:
-  *  - an append becomes visible atomically when its `v<N>` commits; a
-  *    crash before that leaves an invisible data dir (never a partial
-  *    batch), and the RETRY lands the rows exactly once —
-  *    availability-biased "read unknown files too" would double them;
-  *  - a rebuild/re-cluster ([[reclusterZOrdered]], [[writeZOrdered]] over
-  *    an existing store) writes fresh data dirs and commits a NEW epoch:
-  *    a concurrent reader resolves the old epoch or the new one, never a
-  *    mix — the torn-rebuild silent-partial-result window of the old
-  *    in-place delete-then-rewrite is structurally gone;
-  *  - a manifest-listed file that is MISSING fails the read loudly
-  *    (Spark's path-existence check on the explicit file list) instead of
-  *    silently dropping rows — listed ⇒ present is an invariant of the
-  *    append/vacuum flow ([[vacuumOrphans]] deletes only UNlisted dirs
-  *    and superseded epochs, under the writer lease).
-  *  - the read path never lists the data directories — O(epoch versions)
-  *    manifest metadata + the surviving files themselves (ZOrderSpec pins
-  *    this with a listing-recording FileSystem), the listing cost the
-  *    commit log exists to avoid on object stores.
+  * The store's commit log — on-disk layout, commit protocols and every
+  * mutating filesystem step — is [[ZLog]]; this object holds the public
+  * operations, the data writes and the read paths.
   *
   * Stats are harvested from the parquet footers the write already
   * produced — a SPARK JOB over the batch's files (O(batch files) work,
@@ -108,11 +77,7 @@ object ZOrder {
     terms.reduce(_ bitwiseOR _)
   }
 
-  // ---- commit-log plumbing ------------------------------------------------
-
-  /** Manifest row key of the per-version recorded-schema row (`mn` holds
-    * the DDL); every other row is a per-(file, column) stat. */
-  private val DdlKey = "__ddl__"
+  // ---- manifest row keys (the DDL and column-mapping keys are ZLog's) ----
 
   /** Manifest row key of the per-file SIZE row (`mn` holds the byte
     * length): recorded at harvest so maintenance ops ([[compactSmallFiles]])
@@ -167,13 +132,6 @@ object ZOrder {
 
   // ---- COLUMN MAPPING (r16): logical names over stable physical names ----
 
-  /** Manifest row key of the per-version COLUMN-MAPPING row (`mn` holds
-    * the encoded mapping) — Delta's column mapping / Iceberg's field
-    * ids in the store's grammar. The latest committed row governs a
-    * snapshot; epoch rewrites carry it; TIME TRAVEL therefore reads a
-    * past snapshot under the names of that time. */
-  private val ColmapKey = "__colmap__"
-
   /** Logical↔physical column mapping of one snapshot. Data files,
     * manifest stats, bloom sidecars, recorded clustering/bucketing
     * policy and change records are all keyed by a column's PHYSICAL
@@ -215,22 +173,6 @@ object ZOrder {
   }
 
   private[sources] val IdentityColMap: ColMap = ColMap(Seq.empty, Seq.empty)
-
-  /** Wire form: one line per entry — `R<TAB>phys<TAB>logical` /
-    * `D<TAB>phys`. Rename targets are validated to be tab/newline-free
-    * identifiers, so the encoding never ambiguates. */
-  private def encodeColMap(cm: ColMap): String =
-    (cm.renames.map { case (p, l) => s"R\t$p\t$l" } ++
-      cm.dropped.map(p => s"D\t$p")).mkString("\n")
-
-  private def decodeColMap(s: String): ColMap = {
-    val lines = s.split('\n').filter(_.nonEmpty)
-    ColMap(
-      lines.collect { case l if l.startsWith("R\t") =>
-        val Array(_, p, lg) = l.split('\t'); (p, lg) }.toSeq,
-      lines.collect { case l if l.startsWith("D\t") =>
-        l.split('\t')(1) }.toSeq)
-  }
 
   /** The LOGICAL (surface) schema of a snapshot: renames applied,
     * dropped columns hidden. */
@@ -371,247 +313,10 @@ object ZOrder {
       at: Option[(Long, Long)], physical: StructType): StructType =
     logicalSchema(physical, colMapFor(s, path, at))
 
-  /** Allocate `span` fresh row ids: bump `_zschema/ridhw` under the
-    * commit turnstile (tiny critical section — one file read + write).
-    * A crash after the bump leaks a gap, never a duplicate.
-    *
-    * CRASH SAFETY (r16 advisor): the mark is never truncated in place —
-    * the new value lands in a sibling `ridhw.new.*` file first and
-    * renames over the mark only after a complete flush, so the OLD mark
-    * survives every crash window. Read rule: the MAX parseable value
-    * across the mark and any leftover `.new` siblings. That max can
-    * never mint a duplicate: a torn `.new` numeral is a strict decimal
-    * PREFIX of `old + span`, so it is strictly below the value a crashed
-    * bump would have returned — and that bump returned to nobody (the
-    * crash killed its caller before a single rid was stamped), so any
-    * value in [old, old+span] is a safe restart point; max(old, torn)
-    * is always in that interval. A store whose ridhw files exist but
-    * NONE parse refuses loudly with the recovery recipe instead of
-    * silently rewinding to 0 (which would re-mint every id). */
-  private def allocateRids(s: SparkSession, path: String,
-      span: Long): Long =
-    withCommitLock(s, path, "rid-alloc") { _ =>
-      val dir = new Path(path, "_zschema")
-      val p = new Path(dir, "ridhw")
-      val fs = StoreMaint.fsFor(s, p)
-      fs.mkdirs(dir)
-      def parse(f: Path): Option[Long] =
-        try {
-          val in = fs.open(f)
-          val b = try org.apache.commons.io.IOUtils.toByteArray(in)
-          finally in.close()
-          new String(b, "UTF-8").trim.toLongOption
-        } catch { case _: java.io.IOException => None }
-      val candidates = (if (fs.exists(dir)) fs.listStatus(dir).toSeq
-        else Seq.empty)
-        .map(_.getPath)
-        .filter(f => f.getName == "ridhw" || f.getName.startsWith("ridhw.new."))
-      val parsed = candidates.flatMap(parse)
-      require(candidates.isEmpty || parsed.nonEmpty,
-        s"$path: the row-id high-water mark (_zschema/ridhw) exists but " +
-          "is unreadable — a crashed writer tore it. Recover by writing " +
-          "the decimal value (1 + max(__rid) across every data file of " +
-          "the store) to _zschema/ridhw; do NOT delete it (a missing " +
-          "mark restarts at 0 and re-mints existing row ids)")
-      val cur = parsed.maxOption.getOrElse(0L)
-      // id-space budget: spans are (partitions+1) << 33, so even a
-      // 65536-bucket store exhausts 2^63 only after ~16k writes — but
-      // exhaustion must REFUSE loudly, never wrap into duplicate ids
-      require(cur <= Long.MaxValue - span,
-        s"$path: the row-id high-water mark would overflow Long " +
-          s"(hw=$cur, span=$span) — the id space is exhausted; migrate " +
-          "the data into a fresh store path (identities restart there)")
-      val tmp = new Path(dir, "ridhw.new." +
-        java.util.UUID.randomUUID().toString.replace("-", "").take(12))
-      val out = fs.create(tmp, true)
-      try out.write((cur + span).toString.getBytes("UTF-8"))
-      finally out.close()
-      if (fs.exists(p)) fs.delete(p, false)
-      require(fs.rename(tmp, p),
-        s"$path: could not install the new row-id high-water mark " +
-          s"($tmp -> $p)")
-      // sweep older crash leftovers now that the mark is re-installed
-      candidates.filter(_.getName.startsWith("ridhw.new."))
-        .foreach(f => if (fs.exists(f)) fs.delete(f, false))
-      cur
-    }
-
   /** The per-(file, column) PRUNING stats — excludes the DDL rows and the
     * `__`-prefixed per-file metadata rows (size/count/nulls). */
   private def statRows(man: DataFrame): DataFrame =
     man.filter(!col("c").startsWith("__"))
-
-  private def manifestRoot(path: String) = new Path(path, "_zmanifest")
-
-  private def parseIdx(name: String, pfx: String): Option[Long] =
-    if (name.startsWith(pfx)) name.drop(pfx.length).toLongOption else None
-
-  private def isCommitted(fs: org.apache.hadoop.fs.FileSystem,
-      v: Path): Boolean = fs.exists(new Path(v, "_SUCCESS"))
-
-  private[sources] final case class ZSnapshot(epoch: Long, epochDir: Path,
-      vdirs: Seq[Path])
-
-  /** Resolve the current committed snapshot: the highest epoch whose v0
-    * committed, with that epoch's committed versions in order. O(epochs +
-    * versions) manifest-dir metadata; the data dirs are never listed. */
-  private[sources] def currentSnapshot(s: SparkSession,
-      path: String): Option[ZSnapshot] = {
-    val mroot = manifestRoot(path)
-    val fs = StoreMaint.fsFor(s, mroot)
-    if (!fs.exists(mroot)) return None
-    val epochs = fs.listStatus(mroot).filter(_.isDirectory)
-      .flatMap(st => parseIdx(st.getPath.getName, "e").map(_ -> st.getPath))
-      .sortBy(-_._1)
-    epochs.find { case (_, p) => isCommitted(fs, new Path(p, "v0")) }
-      .map { case (e, edir) =>
-        val vdirs = fs.listStatus(edir).filter(_.isDirectory)
-          .flatMap(st => parseIdx(st.getPath.getName, "v").map(_ -> st.getPath))
-          .filter { case (_, v) => isCommitted(fs, v) }
-          .sortBy(_._1).map(_._2).toSeq
-        ZSnapshot(e, edir, vdirs)
-      }
-  }
-
-  /** The snapshot's manifest rows and its recorded table schema (the
-    * LATEST committed version's DDL, deep-nullable so files predating a
-    * column null-fill — the upsert table's read-schema discipline). */
-  private def manifestAndSchema(s: SparkSession,
-      snap: ZSnapshot): (DataFrame, StructType) = {
-    val (man, schema, _) = manifestSchemaMap(s, snap)
-    (man, schema)
-  }
-
-  /** The snapshot's manifest rows as a LAZY frame — no job until an
-    * actual stat/file scan forces it. */
-  private def manifestDf(s: SparkSession, snap: ZSnapshot): DataFrame =
-    s.read.parquet(snap.vdirs.map(_.toString): _*)
-
-  /** Collected manifest META of one snapshot: recorded PHYSICAL schema
-    * (latest committed DDL, deep-nullable), column mapping, and the full
-    * batch-TAG set — memoized per snapshot identity like the scan-plan
-    * cache. One snapshot used to pay this collect 2-4× per append/DML
-    * (boundary translation, schema union, replay check, landed check,
-    * carried tags), each a full Spark job on the hot commit path; the
-    * answer only changes with a commit, which changes the key (r17
-    * optimization — guide §1.2 "remove passes", §5 driver work). */
-  private val manifestMetaCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (StructType, ColMap, Set[String])]()
-
-  private def snapCacheKey(s: SparkSession, snap: ZSnapshot): String =
-    s"${snap.epochDir}|i${snapIdentity(s, snap)}|" +
-      snap.vdirs.map(_.getName).sorted.mkString(",")
-
-  private def manifestMeta(s: SparkSession, snap: ZSnapshot)
-      : (StructType, ColMap, Set[String]) = {
-    val key = snapCacheKey(s, snap)
-    val hit = manifestMetaCache.get(key)
-    if (hit != null) return hit
-    val meta = manifestDf(s, snap).filter(col("c").isin(DdlKey, ColmapKey))
-      .select(col("ver"), col("c"), col("mn"), col("mx")).collect()
-    val ddl = meta.filter(_.getString(1) == DdlKey)
-      .sortBy(-_.getLong(0)).headOption.getOrElse(
-        throw new IllegalStateException(
-          s"manifest of epoch ${snap.epoch} has no recorded schema row"))
-      .getString(2)
-    val cm = meta.filter(_.getString(1) == ColmapKey)
-      .sortBy(-_.getLong(0)).headOption
-      .map(r => decodeColMap(r.getString(2))).getOrElse(IdentityColMap)
-    val tags = meta.iterator
-      .filter(r => r.getString(1) == DdlKey && !r.isNullAt(3))
-      .map(_.getString(3)).toSet
-    val schema = Sources.deepNullable(StructType.fromDDL(ddl))
-      .asInstanceOf[StructType]
-    val res = (schema, cm, tags)
-    if (manifestMetaCache.size() > 64) manifestMetaCache.clear()
-    manifestMetaCache.put(key, res)
-    res
-  }
-
-  /** Every batch tag recorded in the snapshot's manifest — cached, no
-    * job (sorted for deterministic manifest row order downstream). */
-  private def manifestTagsOf(s: SparkSession, snap: ZSnapshot): Set[String] =
-    manifestMeta(s, snap)._3
-
-  /** The snapshot's manifest rows, recorded PHYSICAL schema, and column
-    * mapping — the schema/mapping from the cached meta collect; the
-    * manifest frame stays lazy. */
-  private def manifestSchemaMap(s: SparkSession,
-      snap: ZSnapshot): (DataFrame, StructType, ColMap) = {
-    val (schema, cm, _) = manifestMeta(s, snap)
-    (manifestDf(s, snap), schema, cm)
-  }
-
-  private def requireSnapshot(s: SparkSession, path: String): ZSnapshot =
-    currentSnapshot(s, path).getOrElse(throw new IllegalArgumentException(
-      s"no committed z-store under $path"))
-
-  /** Is there a committed z-store at `path`? O(epochs) manifest-dir
-    * metadata — what the table surface's create-on-write branch checks. */
-  private[sources] def storeExists(s: SparkSession, path: String): Boolean =
-    currentSnapshot(s, path).nonEmpty
-
-  /** The store's recorded CLUSTERING KEYS — store POLICY like the CHECK
-    * constraints (one small `_zschema/clustering` file outside the
-    * manifest; epoch rewrites and restores never touch it), written by
-    * every epoch-creating op that takes a zcols parameter. What lets a
-    * write that does not restate the keys (`INSERT INTO` through the
-    * catalog, `df.write` without the option) cluster the way the table
-    * was declared. */
-  private def zcolsFile(path: String) = new Path(path, "_zschema/clustering")
-  private def bucketingFile(path: String) =
-    new Path(path, "_zschema/bucketing")
-
-  /** The recorded HASH-BUCKET layout policy (`_zschema/bucketing` =
-    * `col:n`, the clustering-policy discipline): when present, every
-    * batch routes rows by `pmod(col, n)` into one file per bucket per
-    * batch, each file's bucket id rides the manifest ([[BucketKey]]
-    * rows), and the DSv2 scan reports `KeyGroupedPartitioning(bucket(n,
-    * col), n)` — what lets two graft-z tables bucketed the same way
-    * join with ZERO exchange (Iceberg's storage-partitioned join; the
-    * r13 verdict's item 2). The bucket function is pmod on the long
-    * key ([[ZCatalog]]'s `bucket` V2 function is the engine-visible
-    * twin); layout-internal, so it needs no oracle mirroring. */
-  private[sources] def recordedBucketing(s: SparkSession,
-      path: String): Option[(String, Int)] = {
-    val p = bucketingFile(path)
-    val fs = StoreMaint.fsFor(s, p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      body.split(':') match {
-        case Array(c, n) => Some((c, n.toInt))
-        case _ => None
-      }
-    }
-  }
-
-  private[graft] def recordBucketing(s: SparkSession, path: String,
-      bcol: String, n: Int): Unit = {
-    require(n > 0 && n <= 65536, s"bucket count $n out of range (1..65536)")
-    val p = bucketingFile(path)
-    val fs = StoreMaint.fsFor(s, p)
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
-    try out.write(s"$bcol:$n".getBytes("UTF-8")) finally out.close()
-  }
-
-  private[sources] def recordedZcols(s: SparkSession,
-      path: String): Option[Seq[String]] = {
-    val p = zcolsFile(path)
-    val fs = StoreMaint.fsFor(s, p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      Some(body.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-        .filter(_.nonEmpty)
-    }
-  }
 
   /** Metadata-only ADD COLUMN — the catalog's `ALTER TABLE … ADD
     * COLUMN` ([[ZCatalog.alterTable]]): commit the evolved DDL as the
@@ -647,15 +352,6 @@ object ZOrder {
       union
     }
 
-  private def recordZcols(s: SparkSession, path: String,
-      zcols: Seq[String]): Unit = {
-    val p = zcolsFile(path)
-    val fs = StoreMaint.fsFor(s, p)
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
-    try out.write(zcols.mkString(",").getBytes("UTF-8")) finally out.close()
-  }
-
   /** Manifest-listed relative data-file paths of the current snapshot —
     * ops/spec surface; O(table files) driver rows by nature. */
   def listDataFiles(s: SparkSession, path: String): Seq[String] = {
@@ -688,7 +384,7 @@ object ZOrder {
     // carries into the new epoch
     val cm = colMapFor(s, path)
     Lease.withLease(s, path, "zorder-write") {
-      commitNewEpoch(toPhysicalDf(df, cm, path), path,
+      writeNewEpoch(toPhysicalDf(df, cm, path), path,
         translateColsLenient(cm, path, zcols), numFiles,
         translateColsLenient(cm, path, statCols), colmap = cm)
     }
@@ -840,7 +536,7 @@ object ZOrder {
             Lease.withLease(s, path, "zorder-append-bootstrap") {
               currentSnapshot(s, path) match {
                 case None =>
-                  commitNewEpoch(dfP, path, zcolsP, numFiles, statColsP,
+                  writeNewEpoch(dfP, path, zcolsP, numFiles, statColsP,
                     tag.toSeq, op = "append")
                   done = true
                 case Some(_) => // bootstrapped meanwhile: loop → OCC path
@@ -949,392 +645,21 @@ object ZOrder {
     }
   }
 
-  /** Reserve an epoch's next manifest-version number by EXCLUSIVE-CREATING
-    * its claim file — the optimistic-concurrency CAS behind lock-free
-    * appends. `FileSystem.create(overwrite = false)` is atomic on HDFS
-    * and local filesystems; an object-store deployment backs this one
-    * primitive with a conditional PUT (the same slot Delta's S3 LogStore
-    * fills). A lost race re-lists and claims the next number; claims and
-    * version dirs both reserve their numbers, so a crashed claimant's
-    * number is simply skipped (never reused), like crashed version dirs
-    * always were. */
-  private def claimNextVersion(fs: org.apache.hadoop.fs.FileSystem,
-      edir: Path): Long = {
-    var attempts = 0
-    while (attempts < 256) {
-      attempts += 1
-      val used = fs.listStatus(edir).flatMap { st =>
-        val n = st.getPath.getName
-        parseIdx(n, "v").orElse(if (n.endsWith(".claim"))
-          parseIdx(n.stripSuffix(".claim"), "v") else None)
-      }
-      val next = used.maxOption.getOrElse(-1L) + 1
-      if (StoreMaint.createExclusive(fs, new Path(edir, s"v$next.claim"),
-          Array.emptyByteArray))
-        return next
-      // lost the claim: re-list and take the next number
-    }
-    throw new IllegalStateException(
-      s"could not claim a manifest version under $edir in 256 attempts")
-  }
-
-  /** Epoch rewrites record WHAT THEY CONSUMED in a `_rebase` marker file
-    * inside the new epoch dir ("baseEpoch:baseMaxVer"): an appender that
-    * observes the swap reads it to distinguish "my committed version was
-    * INCLUDED in the rewrite's base" (rows live on in the rewritten
-    * data — re-committing would DOUBLE them; the dname check alone can't
-    * see this because a re-cluster rewrites rows into new files) from
-    * "my version was missed" (the rollforward/ticket path). A rebuild
-    * ([[writeZOrdered]] over an existing store) consumed nothing —
-    * no marker — so a concurrent append re-commits itself, i.e.
-    * serializes AFTER the replace. */
-  private def writeRebaseMarker(fs: org.apache.hadoop.fs.FileSystem,
-      edir: Path, baseEpoch: Long, baseMaxVer: Long): Unit = {
-    val out = fs.create(new Path(edir, "_rebase"), true)
-    out.write(s"$baseEpoch:$baseMaxVer".getBytes("UTF-8"))
-    out.close()
-  }
-
-  private def readRebaseMarker(fs: org.apache.hadoop.fs.FileSystem,
-      edir: Path): Option[(Long, Long)] =
-    try {
-      val p = new Path(edir, "_rebase")
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val bytes = try org.apache.commons.io.IOUtils.toByteArray(in)
-        finally in.close()
-        new String(bytes, "UTF-8").split(':') match {
-          case Array(e, v) => Some((e.toLong, v.toLong))
-          case _ => None
-        }
-      }
-    } catch { case _: Exception => None } // torn/absent: not included
-
-  private def maxVerOf(snap: ZSnapshot): Long =
-    snap.vdirs.flatMap(p => parseIdx(p.getName, "v")).maxOption.getOrElse(-1L)
-
-  /** Did ANY later epoch's rewrite consume version `v` of epoch `e`?
-    * (The chain case: the epoch that included us may itself be
-    * superseded — its dir, and marker, persist until vacuum, and the
-    * vacuum window must exceed an append's duration anyway.) */
-  private def wasIncludedInRewrite(s: SparkSession, path: String,
-      e: Long, v: Long): Boolean = {
-    val mroot = manifestRoot(path)
-    val fs = StoreMaint.fsFor(s, mroot)
-    fs.listStatus(mroot).filter(_.isDirectory)
-      .flatMap(st => parseIdx(st.getPath.getName, "e").map(_ -> st.getPath))
-      .filter(_._1 > e)
-      .exists { case (_, p) => readRebaseMarker(fs, p).exists {
-        case (be, bv) => be == e && v <= bv } }
-  }
-
-  /** Exclusive-create the rebase ticket of a superseded epoch's version:
-    * exactly one of {the appender that committed it, the rewrite rolling
-    * the epoch forward, the recovery sweep} wins and re-commits those
-    * rows into the new epoch; the others walk away — the both-copy
-    * double-land is structurally impossible. The ticket RECORDS ITS
-    * CLAIMANT (`who`): [[recoverLostRollforwards]] may take over a dead
-    * "rewrite"/"recovery" claimant's ticket (it runs under the same lease
-    * those hold, so the claimant can't still be mid-rollforward), but
-    * never an "appender"'s — a live appender owns its own re-commit, and
-    * a crashed one never returned success, so its at-least-once caller
-    * retries the whole append (tag dedup keeps the retry exactly-once). */
-  private def claimRebaseTicket(fs: org.apache.hadoop.fs.FileSystem,
-      edir: Path, ver: Long, who: String): Boolean =
-    StoreMaint.createExclusive(fs, new Path(edir, s"v$ver.rolled"),
-      who.getBytes("UTF-8"))
-
-  /** The recorded claimant of an existing rebase ticket; None when the
-    * content is empty/unreadable (a torn write, or a pre-r11 ticket). */
-  private def ticketWho(fs: org.apache.hadoop.fs.FileSystem,
-      ticket: Path): Option[String] =
-    try {
-      val in = fs.open(ticket)
-      val bytes = try org.apache.commons.io.IOUtils.toByteArray(in)
-      finally in.close()
-      Some(new String(bytes, "UTF-8")).filter(_.nonEmpty)
-    } catch { case _: Exception => None }
-
-  /** The synthetic PROVENANCE tag every rebase re-commit carries (the
-    * appender's self-re-commit, a rewrite's rollforward, and the recovery
-    * sweep all stamp it): durable, manifest-carried evidence that version
-    * `v` of superseded epoch `e` has been rebased — what lets
-    * [[recoverLostRollforwards]] distinguish "already rolled forward"
-    * from "the claimant crashed before its rollforward landed" without
-    * trusting the ticket alone. Rides the DDL rows' tag slot and carries
-    * through every manifest rewrite like user batch tags. */
-  private def rebaseTag(e: Long, v: Long): String = s"__rebase:e$e:v$v"
-
-  private val RebaseTagRe = """__rebase:e(\d+):v(\d+)""".r
-  private def parseRebaseTag(t: String): Option[(Long, Long)] = t match {
-    case RebaseTagRe(e, v) => Some((e.toLong, v.toLong))
-    case _ => None
-  }
-
-  /** Lease-held epoch rewrites call this AFTER their new-epoch commit:
-    * versions that committed into `base`'s epoch after `base` was
-    * resolved are concurrent lock-free APPENDS the rewrite never saw —
-    * rebase each one into the current epoch by reference (its files are
-    * on disk and untouched; only its stat rows and tags re-commit), so
-    * an append racing a delete/merge/re-cluster/optimize is never lost:
-    * it serializes AFTER the rewrite, exactly Delta's append-vs-rewrite
-    * resolution. The `.rolled` ticket arbitrates against the appender's
-    * own re-commit path; between the epoch swap and this rollforward a
-    * late append is briefly invisible (the two-level log can't merge the
-    * two commits atomically) — the window is inside one maintenance
-    * call, and the STATE converges with no row lost or doubled
-    * (spec-pinned by racing real threads through the slow-rename FS). */
-  private def rollForwardLateAppends(s: SparkSession, path: String,
-      base: ZSnapshot, lease: Lease.Handle): Unit = {
-    val fs = StoreMaint.fsFor(s, base.epochDir)
-    val seen = base.vdirs.map(_.getName).toSet
-    val late = fs.listStatus(base.epochDir).filter(_.isDirectory)
-      .flatMap(st => parseIdx(st.getPath.getName, "v").map(_ -> st.getPath))
-      .filter { case (_, p) => !seen.contains(p.getName) && isCommitted(fs, p) }
-      .sortBy(_._1)
-    late.foreach { case (v, vdir) =>
-      if (claimRebaseTicket(fs, base.epochDir, v, "rewrite"))
-        rebaseVersionForward(s, path, base.epoch, v, vdir, lease)
-    }
-  }
-
-  /** Is superseded version (`srcEpoch`, `srcVer`) already re-committed
-    * into the given manifest? Two independent evidence planes, either
-    * sufficient: the [[rebaseTag]] provenance (carried through every
-    * later rewrite), or — for pre-provenance history — ANY of the
-    * version's own data files listed (file names are unique per batch
-    * dir, so presence proves the roll landed; a later DELETE may prune
-    * some, but it can never have listed a version that was never
-    * rolled). The r11 advisor's aging finding: without the file
-    * evidence, a pre-r11 rolled version with an empty ticket and no tag
-    * re-rolls after the grace window, doubling its manifest listings. */
-  private def versionSettledIn(s: SparkSession, man: DataFrame,
-      srcEpoch: Long, srcVer: Long, vFiles: Seq[String]): Boolean = {
-    val tagged = man.filter(col("c") === lit(DdlKey) &&
-        col("mx") === lit(rebaseTag(srcEpoch, srcVer)))
-      .limit(1).count() > 0
-    tagged || (vFiles.nonEmpty && {
-      import s.implicits._
-      man.filter(!col("c").isin(DdlKey, ColmapKey))
-        .join(vFiles.toDF("f"), Seq("f"), "leftsemi")
-        .limit(1).count() > 0
-    })
-  }
-
-  /** Re-commit one superseded-epoch committed version into the CURRENT
-    * epoch by reference (files untouched; stat rows, tags and evolved DDL
-    * re-commit), stamping the [[rebaseTag]] provenance — the shared body
-    * of a rewrite's rollforward, and of [[recoverLostRollforwards]].
-    *
-    * Double-commit guards (the r11 advisor's expired-lease window: a
-    * rewrite slower than the lease TTL, taken over mid-rollforward by a
-    * later maintenance op, must not let BOTH land the same version):
-    * the settled check re-runs on a FRESH manifest AFTER the version
-    * slot is claimed, and the commit aborts loudly unless the caller's
-    * lease is verifiably still held ([[Lease.Handle.stillHeld]] is false
-    * from [[Lease.ExpiryMarginMs]] before the TTL deadline — before any
-    * legitimate takeover can begin — and after any break). An abandoned
-    * claimed slot is just a skipped version number, like any crashed
-    * claimant's. */
-  private def rebaseVersionForward(s: SparkSession, path: String,
-      srcEpoch: Long, srcVer: Long, vdir: Path,
-      lease: Lease.Handle): Unit = {
-    val cur = requireSnapshot(s, path)
-    val rows = s.read.parquet(vdir.toString)
-    val tags = rows.filter(col("c") === lit(DdlKey) && col("mx").isNotNull)
-      .select(col("mx")).distinct().collect().map(_.getString(0)).toSeq
-    val vFiles = rows.filter(!col("c").isin(DdlKey, ColmapKey)).select(col("f"))
-      .distinct().collect().map(_.getString(0)).toSeq
-    // the late append may itself have evolved the schema: carry its
-    // recorded DDL through the add-only union, not just the rewrite's
-    val lateDdl = rows.filter(col("c") === lit(DdlKey))
-      .select(col("mn")).head().getString(0)
-    val (_, curSchema) = manifestAndSchema(s, cur)
-    val union = StoreMaint.unionSchemas(s"$path (z-store)",
-      Some(curSchema), StructType.fromDDL(lateDdl))
-    val ver = claimNextVersion(StoreMaint.fsFor(s, cur.epochDir),
-      cur.epochDir)
-    // settled re-check under the claimed slot: a takeover that landed
-    // this rollforward between our candidate scan and here shows up in
-    // the fresh manifest (tag or files) — abandon the slot, do not write
-    val cur2 = requireSnapshot(s, path)
-    if (cur2.epoch == cur.epoch &&
-        versionSettledIn(s, manifestAndSchema(s, cur2)._1,
-          srcEpoch, srcVer, vFiles)) return
-    if (!lease.stillHeld()) throw new IllegalStateException(
-      s"rollforward of e$srcEpoch/v$srcVer into $path aborted: the " +
-        "maintenance lease expired (or was broken) before the commit — " +
-        "a takeover may be rolling this version; the next lease-held op " +
-        "completes the recovery")
-    writeManifestVersion(s, cur.epochDir, ver, union.toDDL, Seq.empty,
-      tags :+ rebaseTag(srcEpoch, srcVer),
-      carried = Some(carriedStatsDf(s, rows, Seq.empty)),
-      op = "rollforward")
-  }
-
-  /** Grace before the recovery sweep trusts an EMPTY/torn rebase ticket
-    * to belong to a dead claimant (a pre-r11 ticket, or a crash between
-    * the exclusive create and the claimant-name write). Named claimants
-    * need no aging: "rewrite"/"recovery" held the lease the sweep now
-    * holds, "appender" is never taken over. */
-  private val RecoveryGraceMs: Long = 10L * 60L * 1000L
-
-  /** Recover rollforwards a crashed rewrite never completed — the r10
-    * advisor's silent-loss window: an appender whose post-commit epoch
-    * check passed has already returned success when a racing rewrite
-    * flips the epoch; if that rewrite dies after its new-epoch v0 commit
-    * but before [[rollForwardLateAppends]], the append's version lives
-    * only in the superseded epoch and, without this sweep, nothing would
-    * ever revisit it. Every lease-held maintenance op (and the vacuum,
-    * BEFORE it deletes anything) runs the sweep first, so "committed ⇒
-    * eventually visible" survives any single writer crash.
-    *
-    * For each superseded epoch named by some later epoch's `_rebase`
-    * watermark, each committed version ABOVE the watermark is a late
-    * append the consuming rewrite promised to roll forward. It is
-    * settled iff the [[rebaseTag]] provenance is in the current manifest
-    * (rolled by someone, carried through all later rewrites). Otherwise
-    * the ticket decides ownership: unclaimed → the sweep claims and
-    * rolls it; claimed by "rewrite"/"recovery" → the claimant held the
-    * lease the sweep now holds, so it is dead and the sweep rolls on its
-    * behalf (the provenance check above is what makes that re-roll
-    * impossible to double); claimed by an "appender" → left alone — a
-    * live appender is mid-re-commit, a dead one never returned success
-    * and its caller's retry lands the rows (tag-deduped); empty/unknown
-    * content → aged by [[RecoveryGraceMs]] before being treated as dead. */
-  private[graft] def recoverLostRollforwards(s: SparkSession,
-      path: String, lease: Lease.Handle): Unit =
-    currentSnapshot(s, path).foreach { cur =>
-      val mroot = manifestRoot(path)
-      val fs = StoreMaint.fsFor(s, mroot)
-      val edirs = fs.listStatus(mroot).filter(_.isDirectory)
-        .flatMap(st => parseIdx(st.getPath.getName, "e").map(_ -> st.getPath))
-        .toMap
-      // highest consumed watermark per superseded base epoch, over ALL
-      // later epochs' markers (the chain case: the epoch that consumed a
-      // base may itself be superseded)
-      val consumed = edirs.values.toSeq
-        .flatMap(p => readRebaseMarker(fs, p))
-        .groupBy(_._1).map { case (e, vs) => e -> vs.map(_._2).max }
-        .filter { case (e, _) => e < cur.epoch && edirs.contains(e) }
-      val candidates = consumed.toSeq.sortBy(_._1).flatMap { case (be, bv) =>
-        val bdir = edirs(be)
-        fs.listStatus(bdir).filter(_.isDirectory)
-          .flatMap(st => parseIdx(st.getPath.getName, "v")
-            .map(v => (be, bdir, v, st.getPath)))
-          .filter { case (_, _, v, p) => v > bv && isCommitted(fs, p) }
-          .sortBy(_._3)
-      }
-      if (candidates.nonEmpty) {
-        val (man, _) = manifestAndSchema(s, cur)
-        val settled = manifestTagsOf(s, cur)
-        candidates.foreach { case (be, bdir, v, vdir) =>
-          // settled evidence, either plane: the provenance tag, or ANY of
-          // the version's files listed in the current manifest — the
-          // latter is what keeps a PRE-provenance rollforward (empty
-          // ticket, no tag) from being re-rolled once its ticket ages
-          // past the grace window (the r11 advisor finding)
-          lazy val vFiles = s.read.parquet(vdir.toString)
-            .filter(!col("c").isin(DdlKey, ColmapKey)).select(col("f"))
-            .distinct().collect().map(_.getString(0)).toSeq
-          def filesListed = versionSettledIn(s, man, be, v, vFiles)
-          if (!settled.contains(rebaseTag(be, v)) && !filesListed) {
-            // the current manifest shows NO trace of an untagged rolled
-            // candidate — but "no trace" is also what a roll that LANDED
-            // and was then fully pruned by a later delete/compaction
-            // looks like (the r12 advisor's finding: re-rolling it would
-            // resurrect deleted rows). Before re-rolling, consult the
-            // still-on-disk INTERMEDIATE epochs' manifests for the roll
-            // (it landed there if it landed at all); a vacuumed gap in
-            // that chain makes the question unanswerable — refuse loudly
-            // and surface for manual recovery rather than guess. Only
-            // pre-provenance history can reach this branch: every roll
-            // since r11 stamps its tag, and tags carry through every
-            // manifest rewrite.
-            val laterEpochs = ((be + 1) until cur.epoch).map(e =>
-              e -> edirs.get(e))
-            def rolledIntoIntermediate = laterEpochs.flatMap(_._2)
-              .exists { edir =>
-                val ivdirs = fs.listStatus(edir).filter(_.isDirectory)
-                  .filter(st =>
-                    parseIdx(st.getPath.getName, "v").nonEmpty &&
-                      isCommitted(fs, st.getPath))
-                  .map(_.getPath.toString).toSeq
-                ivdirs.nonEmpty && versionSettledIn(s,
-                  s.read.parquet(ivdirs: _*), be, v, vFiles)
-              }
-            if (rolledIntoIntermediate) () // settled; a later rewrite pruned it
-            else if (laterEpochs.exists(_._2.isEmpty))
-              throw new IllegalStateException(
-                s"$path: superseded version e$be/v$v has no provenance " +
-                  "tag, none of its files are listed, and part of the " +
-                  "epoch chain that could prove whether it was ever " +
-                  "rolled forward has been vacuumed — re-rolling could " +
-                  "resurrect deleted rows, not rolling could lose an " +
-                  "append. Refusing; inspect the batch and either " +
-                  "re-append it or delete the stale version dir " +
-                  s"($vdir) to clear this.")
-            else {
-              val owns =
-                if (claimRebaseTicket(fs, bdir, v, "recovery")) true
-                else ticketWho(fs, new Path(bdir, s"v$v.rolled")) match {
-                  case Some("appender") => false
-                  case Some(_) => true // dead lease-holder: we hold it now
-                  case None => System.currentTimeMillis() - fs.getFileStatus(
-                      new Path(bdir, s"v$v.rolled")).getModificationTime >
-                    RecoveryGraceMs
-                }
-              if (owns) rebaseVersionForward(s, path, be, v, vdir, lease)
-            }
-          }
-        }
-      }
-    }
-
-  /** Next epoch number past EVERY existing epoch dir, committed or
-    * crashed — an uncommitted leftover is never reused. */
-  private def nextEpoch(s: SparkSession, path: String): Long = {
-    val mroot = manifestRoot(path)
-    val fs = StoreMaint.fsFor(s, mroot)
-    (if (!fs.exists(mroot)) Seq.empty[Long]
-     else fs.listStatus(mroot).filter(_.isDirectory).toSeq
-       .flatMap(st => parseIdx(st.getPath.getName, "e")))
-      .maxOption.getOrElse(-1L) + 1
-  }
-
-  private def commitNewEpoch(df: DataFrame, path: String, zcols: Seq[String],
-      numFiles: Int, statCols: Seq[String],
-      tags: Seq[String] = Seq.empty,
-      rebase: Option[(Long, Long)] = None,
-      op: String = "create", colmap: ColMap = IdentityColMap): Unit = {
+  /** Write `df` as a NEW epoch: the declared keys become store policy,
+    * the data lands first, then [[ZLog.commitNewEpoch]] commits the
+    * epoch's v0 manifest — the point that flips readers to it. */
+  private def writeNewEpoch(df: DataFrame, path: String,
+      zcols: Seq[String], numFiles: Int, statCols: Seq[String],
+      tags: Seq[String] = Seq.empty, op: String = "create",
+      colmap: ColMap = IdentityColMap): Unit = {
     val s = df.sparkSession
-    val mroot = manifestRoot(path)
-    recordZcols(s, path, zcols) // the declared keys become store policy
-    // data first, then the epoch's v0 manifest: v0/_SUCCESS is the commit
-    // point that flips readers to the new epoch.
+    recordZcols(s, path, zcols)
     val stats = zWrite(df, path, zcols, numFiles) match {
       case Some(dname) => harvestStats(s, path, dname,
         if (statCols.nonEmpty) statCols else zcols, df.schema)
       case None => Seq.empty // empty table: schema-only manifest
     }
-    // the epoch number allocates INSIDE the commit turnstile (r15): with
-    // rewrites optimistic, two committers may otherwise race the same
-    // e<N>. The _rebase marker (what base snapshot a REWRITE consumed)
-    // writes before the flip so an OCC appender never mistakes an
-    // included commit for a missed one.
-    StoreMaint.withNoAqe(s)(withCommitLock(s, path, s"commit-$op") { lease =>
-      val nextE = nextEpoch(s, path)
-      val edir = new Path(mroot, s"e$nextE")
-      rebase.foreach { case (e, v) =>
-        writeRebaseMarker(StoreMaint.fsFor(s, edir), edir, e, v) }
-      if (!lease.stillHeld()) throw new IllegalStateException(
-        s"$op on $path: the epoch-commit lock expired before the " +
-          "manifest flip — aborting; retry the statement")
-      writeManifestVersion(s, edir, 0L, df.schema.toDDL, stats, tags,
-        op = op,
-        colmap = if (colmap.isIdentity) None else Some(encodeColMap(colmap)))
-    })
+    commitNewEpoch(s, path, df.schema.toDDL, stats, tags, op, colmap)
   }
 
   /** Thrown when an OPTIMISTIC rewrite loses its race: between resolving
@@ -1346,208 +671,6 @@ object ZOrder {
     * ConcurrentDeleteReadException at the same point. */
   final class ConcurrentZRewriteException(msg: String)
     extends RuntimeException(msg)
-
-  /** The epoch-COMMIT critical section (r15): since rewrites became
-    * optimistic, the store `_LEASE` no longer serializes them — only the
-    * metadata commit itself (epoch-number allocation → rebase marker →
-    * change record → manifest v0 flip → late-append rollforward) runs
-    * under this dedicated short lock at `_zcommit/_LEASE`, sized in
-    * SECONDS (small single-task manifest jobs), while the expensive data
-    * work of delete/update/merge/optimize runs unlocked and concurrent.
-    * Contention is expected and brief, so acquisition RETRIES with
-    * backoff instead of refusing (the store lease's refuse-loudly
-    * contract is for whole-operation slots, not commit turnstiles);
-    * a crashed holder is broken by [[Lease]]'s TTL discipline. */
-  private def withCommitLock[T](s: SparkSession, path: String,
-      who: String)(body: Lease.Handle => T): T = {
-    val giveUp = System.currentTimeMillis() + CommitLockWaitMs
-    var backoff = 25L
-    while (true) {
-      // retry ONLY acquisition-time HeldException: a HeldException
-      // escaping the BODY (e.g. a future nested lease acquisition inside
-      // a commit step) must propagate loudly — silently re-running a
-      // body that already wrote its rebase marker / change record would
-      // re-apply partial commit work (r15 advisor)
-      try return Lease.withLeaseHandle(s,
-        new Path(path, "_zcommit").toString, who, CommitTtlMs) { h =>
-        try body(h)
-        catch { case e: Lease.HeldException => throw new CommitBodyHeld(e) }
-      }
-      catch {
-        case e: CommitBodyHeld => throw e.getCause
-        case _: Lease.HeldException =>
-          if (System.currentTimeMillis() > giveUp)
-            throw new IllegalStateException(
-              s"epoch-commit lock of $path not acquirable within " +
-                s"${CommitLockWaitMs / 1000}s — a committer is stuck " +
-                "(or crashed with most of its TTL ahead); see " +
-                s"$path/_zcommit/_LEASE")
-          Thread.sleep(backoff)
-          backoff = math.min(backoff * 2, 1000L)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Marker wrapping a [[Lease.HeldException]] thrown from INSIDE a
-    * commit body, so the acquisition retry loop can tell it from its own
-    * acquisition failures and re-throw instead of re-running the body. */
-  private final class CommitBodyHeld(cause: Lease.HeldException)
-    extends RuntimeException(cause)
-
-  /** How long a committer queues for the commit lock before erroring —
-    * generous (the lock holds for seconds; TTL breaks crashed holders). */
-  private val CommitLockWaitMs: Long = 15 * 60 * 1000L
-
-  /** The `_zcommit` lease TTL — the turnstile's documented
-    * seconds-scale critical section made REAL (r15 advisor: acquiring
-    * with the 10-minute store default meant a crashed committer stalled
-    * every commit for the full 10 minutes despite the queue's retry
-    * budget). 2 minutes dominates the slowest legitimate commit step
-    * (manifest v0 write + rollforward sweep, small single-task jobs)
-    * with the [[Lease]] expiry margin to spare, and bounds the
-    * crashed-holder stall to the same 2 minutes. */
-  private val CommitTtlMs: Long = 2 * 60 * 1000L
-
-  /** Run the crashed-rollforward recovery sweep in the commit slot —
-    * what every optimistic rewrite does FIRST (the store lease used to
-    * provide the slot; the sweep is a cheap metadata no-op when nothing
-    * crashed). */
-  private def recoverUnderCommitLock(s: SparkSession, path: String): Unit =
-    withCommitLock(s, path, "rollforward-recovery") { lease =>
-      recoverLostRollforwards(s, path, lease)
-    }
-
-  /** OPTIMISTIC epoch-rewrite commit (r15 — the multi-writer half of the
-    * lakehouse): the caller prepared its data work (new data dirs via
-    * [[zWrite]], stats, change rows) against `prepared` WITHOUT any
-    * store-wide lock; this helper commits it as the next epoch, REBASING
-    * across concurrent commits when possible:
-    *
-    *  - snapshot unchanged → commit directly (marker, change record,
-    *    manifest v0 with carried stats, late-append rollforward), all
-    *    inside the short [[withCommitLock]] turnstile;
-    *  - snapshot moved but every CONSUMED file (the files this rewrite
-    *    replaces) is still listed → the outputs are still valid (data
-    *    dirs are immutable): rebuild carried rows/tags/DDL-union against
-    *    the new snapshot and commit on top of it — two rewrites touching
-    *    DISJOINT file sets both land, in either order;
-    *  - a consumed file vanished → the race is lost; throw
-    *    [[ConcurrentZRewriteException]] (retry re-plans);
-    *  - `extraTags` already present in the new snapshot → this rewrite's
-    *    replayed twin landed first; return false (exactly-once).
-    *
-    * Appends racing the commit ride the existing rebase-watermark +
-    * rollforward machinery unchanged (they serialize AFTER the rewrite).
-    * A concurrent ADD-COLUMN evolution survives via the DDL union
-    * (type changes refuse loudly). `changes` rows must derive only from
-    * consumed files / caller-persisted inputs — the conflict check is
-    * what keeps them valid across a rebase. */
-  private def commitRewriteEpoch(s: SparkSession, path: String,
-      prepared: ZSnapshot, consumed: Seq[String], ddl: String,
-      newStats: Seq[(String, String, Option[String], Option[String], Boolean)],
-      extraTags: Seq[String], changes: => Option[DataFrame],
-      op: String,
-      remap: Option[(ColMap, StructType) => ColMap] = None): Boolean = {
-    import s.implicits._
-    var attempt = prepared
-    var rebased = false
-    // The change-record Spark job is the expensive half of a big DML's
-    // commit: stage it to a temp dir OUTSIDE the turnstile (it derives
-    // only from consumed files / caller-persisted inputs, so it stays
-    // valid across a rebase) and make the in-lock step a metadata-only
-    // rename — a large delta no longer serializes every other committer
-    // for its write (r15 advisor). Memoized by hand: a `lazy val` would
-    // re-run the job if forced for cleanup in the finally.
-    var stagedMemo: Option[Option[Path]] = None
-    def stagedChanges: Option[Path] = {
-      if (stagedMemo.isEmpty)
-        stagedMemo = Some(prf("commit.stageChanges")(
-          if (!changeFeedEnabled(s, path)) None
-          else changes.map(c => stageChangeRecord(s, path, c))))
-      stagedMemo.get
-    }
-    var stagedConsumed = false
-    try {
-    StoreMaint.withNoAqe(s) {
-    // metadata-plane commit: fixed tiny-stage manifest shapes; replan
-    // latency here extends the _zcommit turnstile hold and so caps
-    // concurrent-committer throughput (r16 optimization round)
-    while (true) {
-      val (attemptSchema, attemptCm, attemptTags) = manifestMeta(s, attempt)
-      val man0 = manifestDf(s, attempt)
-      // the column mapping CARRIES across every epoch rewrite (like
-      // tags); a rename/drop commit TRANSFORMS it — as a function of the
-      // attempt-time mapping, not a fixed value, so two concurrent
-      // mapping commits COMPOSE across the rebase instead of the second
-      // silently clobbering the first (the transform re-validates
-      // against the current mapping and refuses if its assumption broke)
-      val colmapOut = remap.map(_(attemptCm, attemptSchema))
-        .getOrElse(attemptCm)
-      val man = man0.filter(!col("c").isin(DdlKey, ColmapKey))
-      if (rebased) {
-        if (extraTags.exists(attemptTags.contains))
-          return false
-        if (consumed.nonEmpty) {
-          val missing = consumed.toDF("f")
-            .join(man.select(col("f")).distinct(), Seq("f"), "left_anti")
-            .limit(4).collect().map(_.getString(0))
-          if (missing.nonEmpty)
-            throw new ConcurrentZRewriteException(
-              s"$op on $path lost its optimistic race: a concurrent " +
-                "rewrite replaced file(s) this statement consumed " +
-                s"(e.g. ${missing.take(3).mkString(", ")}) between its " +
-                s"snapshot (e${prepared.epoch}) and commit time " +
-                s"(e${attempt.epoch}) — the prepared replacement " +
-                "describes rows that no longer exist; retry the statement")
-        }
-      }
-      // a concurrent rewrite may have EVOLVED the schema (merge add-only
-      // union): committing the base DDL would hide its column — union
-      val ddlOut = StoreMaint.unionSchemas(s"$path (z-store)",
-        Some(attemptSchema), StructType.fromDDL(ddl)).toDDL
-      val carried = carriedStatsDf(s, man, consumed)
-      val tags = attemptTags.toSeq.sorted ++ extraTags
-      val staged = stagedChanges // forced OUTSIDE the turnstile
-      val committed = prf("commit.turnstile")(
-        withCommitLock(s, path, s"commit-$op") { lease =>
-        val now = requireSnapshot(s, path)
-        if (now.epoch != attempt.epoch) { attempt = now; false }
-        else {
-          val nextE = nextEpoch(s, path)
-          val edir = new Path(manifestRoot(path), s"e$nextE")
-          writeRebaseMarker(StoreMaint.fsFor(s, edir), edir,
-            attempt.epoch, maxVerOf(attempt))
-          staged.foreach { t =>
-            commitStagedChangeRecord(s, path, nextE, t)
-            stagedConsumed = true
-          }
-          if (!lease.stillHeld()) throw new IllegalStateException(
-            s"$op on $path: the epoch-commit lock expired before the " +
-              "manifest flip — aborting (a breaker may be committing); " +
-              "retry the statement")
-          writeManifestVersion(s, edir, 0L, ddlOut, newStats, tags,
-            carried = Some(carried), op = op,
-            colmap = if (colmapOut.isIdentity) None
-              else Some(encodeColMap(colmapOut)))
-          rollForwardLateAppends(s, path, attempt, lease)
-          true
-        }
-      })
-      if (committed) return true
-      rebased = true
-    }
-    false
-    }
-    } finally {
-      // a lost race / replayed-twin exit leaves the staged record
-      // unconsumed — collect it (losers leave the store untouched)
-      if (!stagedConsumed) stagedMemo.flatten.foreach { t =>
-        val fs = StoreMaint.fsFor(s, t)
-        if (fs.exists(t)) { fs.delete(t, true); () }
-      }
-    }
-  }
 
   /** Write one z-clustered batch into a FRESH data dir; returns its name,
     * or None when the batch has no rows (the empty-append guard — no
@@ -1762,67 +885,6 @@ object ZOrder {
             }
         }.collect().toSeq
     } finally bc.destroy()
-  }
-
-  /** The DDL rows' otherwise-unused `mx` slot carries batch TAGS — the
-    * idempotence tokens [[appendZOrdered]] checks on replay (one row per
-    * tag; all carry the same ddl in `mn`, so the schema read is
-    * order-insensitive). No extra row kind, so every consumer's
-    * `c =!= DdlKey` filter keeps working unchanged. [[compactManifest]]
-    * and [[reclusterZOrdered]] CARRY the epoch's tags forward — a
-    * replayed append stays a no-op across manifest rewrites. */
-  /** `carried` is the CARRY-BY-REFERENCE half of a copy-on-write commit:
-    * stat/size/count rows of unaffected files, written manifest→manifest
-    * as part of this Spark job — the driver never materializes the
-    * O(table-files × stat-cols) row set (the r9 advisor watch item; at
-    * 1M files × 5 cols that collect was a multi-GB driver allocation per
-    * maintenance commit). Only the affected-file NAME list stays
-    * driver-side, bounded by what the rewrite reads anyway. */
-  private def writeManifestVersion(s: SparkSession, edir: Path, ver: Long,
-      ddl: String,
-      stats: Seq[(String, String, Option[String], Option[String], Boolean)],
-      tags: Seq[String] = Seq.empty, carried: Option[DataFrame] = None,
-      op: String = "unknown", colmap: Option[String] = None): Unit = {
-    import s.implicits._
-    // the operation AUDIT record ([[describeHistory]]): a `v<N>.op`
-    // sidecar beside the version dir, written BEFORE the version's own
-    // commit so every committed version carries one (a crash in between
-    // leaves an orphan sidecar for a version that never existed —
-    // harmless, history only reports committed coordinates)
-    locally {
-      val fs = StoreMaint.fsFor(s, edir)
-      val out = fs.create(new Path(edir, s"v$ver.op"), true)
-      try out.write(op.getBytes("UTF-8")) finally out.close()
-    }
-    val rows = stats.map { case (f, c, mn, mx, an) =>
-      (ver, f, c, mn, mx, an)
-    } ++ tags.distinct.map(t =>
-      (ver, "", DdlKey, Option(ddl), Option(t), false)) ++
-      colmap.map(m =>
-        (ver, "", ColmapKey, Option(m), None: Option[String], false)) :+
-      ((ver, "", DdlKey, Option(ddl), None: Option[String], false))
-    val newDf = rows.toDF("ver", "f", "c", "mn", "mx", "allnull")
-    val df = carried match {
-      case Some(c) => newDf.unionByName(c.select(lit(ver).as("ver"),
-        col("f"), col("c"), col("mn"), col("mx"), col("allnull")))
-      case None => newDf
-    }
-    df.coalesce(1).write.mode("overwrite")
-      .parquet(new Path(edir, s"v$ver").toString)
-  }
-
-  /** The manifest's stat/size/count rows for every file EXCEPT `drop`,
-    * as a DataFrame for [[writeManifestVersion]]'s `carried` input —
-    * the pruned-out half of a copy-on-write rewrite, re-pointed without
-    * a driver collect (an anti-join against the bounded affected-name
-    * list). */
-  private def carriedStatsDf(s: SparkSession, man: DataFrame,
-      drop: Seq[String]): DataFrame = {
-    import s.implicits._
-    val base = man.filter(!col("c").isin(DdlKey, ColmapKey))
-      .select(col("f"), col("c"), col("mn"), col("mx"), col("allnull"))
-    if (drop.isEmpty) base
-    else base.join(drop.toDF("f"), Seq("f"), "left_anti")
   }
 
   /** The distinct stat columns recorded anywhere in the snapshot's
@@ -2059,14 +1121,6 @@ object ZOrder {
   /** Cache-miss counter — the spec's deterministic "2nd read runs zero
     * manifest scans" detector. */
   private[graft] val scanPlanMisses = new java.util.concurrent.atomic.AtomicLong
-
-  /** The store's BIRTH identity for cache keying: the current epoch's v0
-    * `_SUCCESS` mtime. Two stores that ever lived at the same path can
-    * share (epoch, version) NAMES but never this instant. O(1) metadata. */
-  private def snapIdentity(s: SparkSession, snap: ZSnapshot): Long =
-    StoreMaint.fsFor(s, snap.epochDir)
-      .getFileStatus(new Path(new Path(snap.epochDir, "v0"), "_SUCCESS"))
-      .getModificationTime
 
   private[sources] def pruneFilesForScan(s: SparkSession, path: String,
       bounds: Seq[(String, Option[Any], Option[Any])],
@@ -2429,9 +1483,6 @@ object ZOrder {
 
   // ---- bloom point-predicate index (per-file sidecars) --------------------
 
-  private def bloomSidecar(path: String, colLower: String, rel: String) =
-    new Path(path, s"_zbloom/$colLower/$rel.bloom")
-
   /** Build per-file BLOOM sidecars for point predicates on a
     * NON-CLUSTERED column — the pruning plane min/max stats cannot give
     * (an unclustered column's recorded ranges overlap everywhere, so a
@@ -2472,13 +1523,7 @@ object ZOrder {
       // the fpp becomes COLUMN POLICY (r15): every later zWrite re-covers
       // its own fresh files at this fpp, so the index survives
       // appends/DML instead of decaying until a manual rebuild
-      locally {
-        val p = new Path(path, s"_zbloom/${f.name.toLowerCase}/_fpp")
-        val fs = StoreMaint.fsFor(s, p)
-        fs.mkdirs(p.getParent)
-        val out = fs.create(p, true)
-        try out.write(fpp.toString.getBytes("UTF-8")) finally out.close()
-      }
+      recordBloomFpp(s, path, f.name, fpp)
       writeBloomSidecars(s, path, Seq((f.name, fpp)),
         readSnapshotPhysOf(s, path, snap), math.max(maxRows, 1024L))
     }
@@ -2503,65 +1548,6 @@ object ZOrder {
         (st.getPath.getName, fpp)
       }.sortBy(_._1)
   }
-
-  /** ONE distributed bloom-sidecar pass over `frame` (rows must come
-    * only from files under the store root) covering EVERY given column
-    * at once: group by input file → one BloomFilterAggregate(xxhash64
-    * (col)) per column, each sized for `n` items at its recorded fpp;
-    * each executor partition writes its own `_zbloom/<col>/<rel>.bloom`
-    * files — no driver materialization of O(files × bloomBytes), and
-    * the scan reads only the bloom columns in a single pass (guide §2.3
-    * project-early / §6 — one read regardless of column count). Shared
-    * by the whole-snapshot [[buildBloomIndex]] and the per-batch
-    * re-cover every [[zWrite]] runs for recorded bloom columns. */
-  private def writeBloomSidecars(s: SparkSession, path: String,
-      cols: Seq[(String, Double)], frame: DataFrame, n: Long): Unit = {
-      val shim = org.apache.spark.sql.graftshim.PlanBridge
-      import org.apache.spark.sql.catalyst.expressions.Literal
-      // signed zeros need no normalization here: XxHash64 canonicalizes
-      // -0.0 to 0.0 (and NaN) before hashing, so stored -0.0 and a 0.0
-      // probe already collide — pinned in ZOrderSpec
-      val aggs = cols.map { case (colName, fpp) =>
-        val bits = math.ceil(
-          -n * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-        shim.column(
-          new org.apache.spark.sql.catalyst.expressions.aggregate
-            .BloomFilterAggregate(shim.expression(xxhash64(col(colName))),
-              Literal(n), Literal(bits)).toAggregateExpression())
-          .as(s"__bf_${colName.toLowerCase}")
-      }
-      val colLowers = cols.map(_._1.toLowerCase)
-      val target = path // stable closure reference
-      val overrides = GraftShardsSource.confOverrides(s)
-      // sidecars key by the file's path RELATIVE TO THE STORE ROOT (the
-      // manifest's `f` column, what readZPoint looks up) — resolved by
-      // stripping the qualified root prefix, never by pattern-searching
-      // for "/d-": a store path that itself contains "/d-" would key
-      // every sidecar wrongly and silently defeat the index (the r10
-      // advisor finding). A scanned file outside the root fails loudly.
-      val rootAbs = GraftShardsSource.fs(new Path(target),
-          GraftShardsSource.hadoopConf(overrides))
-        .makeQualified(new Path(target)).toUri.getPath
-      frame
-        .groupBy(input_file_name().as("__file"))
-        .agg(aggs.head, aggs.tail: _*)
-        .foreachPartition { (rows: Iterator[Row]) =>
-          val fs = GraftShardsSource.fs(new Path(target),
-            GraftShardsSource.hadoopConf(overrides))
-          rows.foreach { r =>
-            val abs = new Path(r.getString(0)).toUri.getPath
-            require(abs != null && abs.startsWith(rootAbs + "/"),
-              s"bloom build: scanned file ${r.getString(0)} is not under " +
-                s"the z-store root $rootAbs")
-            val rel = abs.substring(rootAbs.length + 1)
-            colLowers.zipWithIndex.foreach { case (cl, i) =>
-              val out = fs.create(bloomSidecar(target, cl, rel), true)
-              out.write(r.getAs[Array[Byte]](i + 1))
-              out.close()
-            }
-          }
-        }
-    }
 
   /** Prune a scan's surviving-file list by the BLOOM sidecars of its
     * pushed POINT equalities — [[readZPoint]]'s pruning plane wired into
@@ -3066,26 +2052,6 @@ object ZOrder {
       }.sorted
   }
 
-  /** Resolve a PAST committed snapshot — epoch e at version v = the state
-    * the store exposed after that commit. Refuses loudly on a
-    * never-committed or vacuumed coordinate (a silently-empty past would
-    * be the worst possible answer to an audit query). */
-  private def snapshotAt(s: SparkSession, path: String, epoch: Long,
-      version: Long): ZSnapshot = {
-    val edir = new Path(manifestRoot(path), s"e$epoch")
-    val fs = StoreMaint.fsFor(s, edir)
-    require(fs.exists(edir) && isCommitted(fs, new Path(edir, "v0")),
-      s"no committed epoch e$epoch under $path (vacuumed, or never " +
-        "committed) — see listVersions")
-    val vdirs = fs.listStatus(edir).filter(_.isDirectory)
-      .flatMap(st => parseIdx(st.getPath.getName, "v").map(_ -> st.getPath))
-      .filter { case (v, p) => v <= version && isCommitted(fs, p) }
-      .sortBy(_._1)
-    require(vdirs.exists(_._1 == version),
-      s"epoch e$epoch has no committed version v$version — see listVersions")
-    ZSnapshot(epoch, edir, vdirs.map(_._2).toSeq)
-  }
-
   /** Incremental change feed: the rows ADDED after committed coordinate
     * (`epoch`, `version`) — the z-store's CDF half. The store is
     * append-only within an epoch (inserts only), so the delta is exactly
@@ -3118,12 +2084,6 @@ object ZOrder {
   val CommitEpochCol = "_commit_epoch"
   val CommitVersionCol = "_commit_version"
 
-  private def changesDir(path: String, epoch: Long): Path =
-    new Path(new Path(path, "_zchanges"), s"e$epoch")
-
-  private def changeFeedFile(path: String): Path =
-    new Path(path, "_zschema/changefeed")
-
   /** Row-level change recording is a PER-STORE OPT-IN (Delta's
     * `enableChangeDataFeed` table property): recording costs one extra
     * pass over the changed rows per DML commit (pre/postimage splits, a
@@ -3134,64 +2094,7 @@ object ZOrder {
     * [[readChangeFeed]] refuses across it with the full-refresh message
     * (naming the op and the enablement switch) — loud, never wrong. */
   def setChangeFeedEnabled(s: SparkSession, path: String,
-      on: Boolean): Unit = {
-    val p = changeFeedFile(path)
-    val fs = StoreMaint.fsFor(s, p)
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
-    try out.write(on.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  private[sources] def changeFeedEnabled(s: SparkSession,
-      path: String): Boolean = {
-    val p = changeFeedFile(path)
-    val fs = StoreMaint.fsFor(s, p)
-    fs.exists(p) && {
-      val in = fs.open(p)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      body.trim.equalsIgnoreCase("true")
-    }
-  }
-
-  /** Record the ROW-LEVEL change set of a DML epoch rewrite — the store
-    * columns plus [[ChangeTypeCol]] (`insert` / `delete` /
-    * `update_preimage` / `update_postimage`), as parquet under
-    * `_zchanges/e<newEpoch>/`. Written AFTER the new epoch dir is
-    * reserved (the `_rebase` marker) and BEFORE its v0 commit: a crash
-    * in between leaves the epoch dir uncommitted — its number is never
-    * reused ([[nextEpoch]] counts crashed dirs) and readers only consult
-    * change records of COMMITTED epochs, so the orphan is invisible
-    * (and [[vacuumOrphans]] eventually collects it). The change rows are
-    * computed by the rewrite itself from data it already reads, so the
-    * record costs O(changed rows) extra I/O, never a second table scan —
-    * what lets [[readChangeFeed]] cross a DML epoch instead of refusing
-    * with full-refresh (the r13 verdict's top item; Delta's CDF
-    * contract). */
-  private def stageChangeRecord(s: SparkSession, path: String,
-      changes: DataFrame): Path = {
-    val tmp = new Path(new Path(path, "_ztmp"), "chg-" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12))
-    Sources.writeMicros(s) {
-      changes.write.mode("overwrite").parquet(tmp.toString)
-    }
-    tmp
-  }
-
-  /** Install a STAGED change record at its epoch coordinate — the
-    * in-turnstile half: one directory rename, so a big DML's change-set
-    * write never serializes other committers (r15 advisor; the Spark
-    * job ran in [[stageChangeRecord]] before the lock). */
-  private def commitStagedChangeRecord(s: SparkSession, path: String,
-      epoch: Long, staged: Path): Unit = {
-    val dst = changesDir(path, epoch)
-    val fs = StoreMaint.fsFor(s, dst)
-    fs.mkdirs(dst.getParent)
-    if (fs.exists(dst)) fs.delete(dst, true) // a crashed twin's leftover
-    require(fs.rename(staged, dst),
-      s"$path: could not install the staged change record " +
-        s"($staged -> $dst)")
-  }
+      on: Boolean): Unit = recordChangeFeed(s, path, on)
 
   /** The algebraic change set of a group-based copy-on-write rewrite
     * (SQL UPDATE / MERGE / DELETE through [[replaceScannedFiles]]): the
@@ -3633,13 +2536,6 @@ object ZOrder {
     eligible.max
   }
 
-  /** [[readSnapshotAt]] by wall-clock instant ([[versionAsOfTimestamp]]). */
-  def readSnapshotAsOf(s: SparkSession, path: String,
-      tsMillis: Long): DataFrame = {
-    val (e, v) = versionAsOfTimestamp(s, path, tsMillis)
-    readSnapshotAt(s, path, e, v)
-  }
-
   /** Collapse the current epoch's accumulated manifest versions into ONE
     * (a new epoch whose v0 carries the same stats rows, re-pointing the
     * SAME data files) — the Delta-checkpoint move: reader metadata stays
@@ -3649,26 +2545,7 @@ object ZOrder {
     * manifest (only — the data is still referenced) falls to
     * [[vacuumOrphans]]. */
   def compactManifest(s: SparkSession, path: String): Unit =
-    // metadata-only epoch swap: short enough to run WHOLLY inside the
-    // commit turnstile (no data work to overlap), which linearizes it
-    // against every optimistic commit
-    withCommitLock(s, path, "manifest-compact") { lease =>
-      recoverLostRollforwards(s, path, lease)
-      val snap = requireSnapshot(s, path)
-      val (man, schema, cmMc) = manifestSchemaMap(s, snap)
-      val edir = new Path(manifestRoot(path), s"e${nextEpoch(s, path)}")
-      writeRebaseMarker(StoreMaint.fsFor(s, edir), edir, snap.epoch,
-        maxVerOf(snap))
-      if (!lease.stillHeld()) throw new IllegalStateException(
-        s"manifest-compact on $path: commit lock expired before the " +
-          "flip — aborting; retry")
-      writeManifestVersion(s, edir, 0L,
-        schema.toDDL, Seq.empty, manifestTagsOf(s, snap).toSeq.sorted,
-        carried = Some(carriedStatsDf(s, man, Seq.empty)),
-        op = "manifest-compact",
-        colmap = if (cmMc.isIdentity) None else Some(encodeColMap(cmMc)))
-      rollForwardLateAppends(s, path, snap, lease)
-    }
+    ZLog.compactManifest(s, path)
 
   /** Copy-on-write range DELETE — the takedown/right-to-erasure pass a
     * 100 TB training-data store eventually serves: remove every row
@@ -4362,11 +3239,7 @@ object ZOrder {
           cur.renames.filterNot(_._1.equalsIgnoreCase(physNow)),
           cur.dropped :+ physNow)
       })
-    // retire the column's bloom policy: zWrite's self-heal would
-    // otherwise try to re-cover a column new batches no longer carry
-    val bdir = new Path(path, s"_zbloom/${phys.toLowerCase}")
-    val fs = StoreMaint.fsFor(s, bdir)
-    if (fs.exists(bdir)) { fs.delete(bdir, true); () }
+    retireBloomColumn(s, path, phys)
   }
 
   /** ADD CONSTRAINT … CHECK (expr) — validates EVERY existing row first
@@ -4405,16 +3278,7 @@ object ZOrder {
       require(existing == 0L,
         s"cannot add CHECK constraint $name: $existing existing row(s) " +
           s"violate ($sqlExpr)")
-      val cdir = new Path(path, "_zconstraints")
-      val fs = StoreMaint.fsFor(s, cdir)
-      fs.mkdirs(cdir)
-      val tmp = new Path(cdir, s".$name.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(sqlExpr.getBytes("UTF-8")) finally out.close()
-      require(fs.rename(tmp, new Path(cdir, name)) ||
-        { fs.delete(new Path(cdir, name), false)
-          fs.rename(tmp, new Path(cdir, name)) },
-        s"could not publish constraint $name")
+      publishConstraint(s, path, name, sqlExpr)
     }
   }
 
@@ -4425,8 +3289,7 @@ object ZOrder {
       // keeps a hostile name ('../…') from deleting outside the store
       s"constraint name $name must be [A-Za-z0-9_-]+")
     Lease.withLease(s, path, "zorder-drop-constraint") {
-      val fs = StoreMaint.fsFor(s, new Path(path, "_zconstraints"))
-      fs.delete(new Path(new Path(path, "_zconstraints"), name), false)
+      dropConstraint(s, path, name)
     }
   }
 
@@ -4586,8 +3449,7 @@ object ZOrder {
       recoverLostRollforwards(s, path, lease)
       val cur = requireSnapshot(s, path)
       val past = snapshotAt(s, path, epoch, version)
-      val (manP, schemaP, cmP) = manifestSchemaMap(s, past)
-      val (man0, _) = manifestAndSchema(s, cur)
+      val (manP, _) = manifestAndSchema(s, past)
       val files = manP.filter(!col("c").isin(DdlKey, ColmapKey)).select(col("f"))
         .distinct().collect().map(_.getString(0)).toSeq
       val overrides = GraftShardsSource.confOverrides(s)
@@ -4629,17 +3491,7 @@ object ZOrder {
           }
         }
       }
-      val edir = new Path(manifestRoot(path), s"e${nextEpoch(s, path)}")
-      writeRebaseMarker(StoreMaint.fsFor(s, edir), edir, cur.epoch,
-        maxVerOf(cur))
-      if (!lease.stillHeld()) throw new IllegalStateException(
-        s"restore on $path: commit lock expired before the flip — " +
-          "aborting; retry")
-      writeManifestVersion(s, edir, 0L, schemaP.toDDL, Seq.empty,
-        manifestTagsOf(s, cur).toSeq.sorted,
-        carried = Some(carriedStatsDf(s, manP, Seq.empty)), op = "restore",
-        colmap = if (cmP.isIdentity) None else Some(encodeColMap(cmP)))
-      rollForwardLateAppends(s, path, cur, lease)
+      commitCarriedEpoch(s, path, cur, past, "restore", lease)
     }
 
   /** Garbage-collect everything the current snapshot doesn't reference:
@@ -4663,2152 +3515,16 @@ object ZOrder {
     * Returns the removed root-relative names. */
   def vacuumOrphans(s: SparkSession, path: String,
       minAgeMs: Long = 0L): Seq[String] =
-    // physical deletes serialize against every commit (the turnstile):
-    // a vacuum can never race a commit's rollforward reads of a
-    // superseded epoch's version dirs
-    withCommitLock(s, path, "vacuum") { lease =>
-      // recover crashed rollforwards BEFORE deleting anything: a lost
-      // late append's data dir must re-enter the live set, not the
-      // vacuum set
-      recoverLostRollforwards(s, path, lease)
-      currentSnapshot(s, path) match {
-        case None => Seq.empty
-        case Some(snap) =>
-          val (man, _) = manifestAndSchema(s, snap)
-          val liveDirs = man.filter(!col("c").isin(DdlKey, ColmapKey))
-            .select(col("f")).distinct()
-            .collect().map(_.getString(0).split('/').head).toSet
-          val fs = StoreMaint.fsFor(s, new Path(path))
-          val cutoff = System.currentTimeMillis() - minAgeMs
-          // the supersession instant: when the current epoch's v0 became
-          // the committed snapshot, everything outside it became garbage
-          val supersededAt = fs.getFileStatus(
-            new Path(new Path(snap.epochDir, "v0"), "_SUCCESS"))
-            .getModificationTime
-          val removed = scala.collection.mutable.ArrayBuffer.empty[String]
-          def rm(p: Path, name: String, from: Long): Unit =
-            if (math.max(fs.getFileStatus(p).getModificationTime, from)
-                <= cutoff) {
-              fs.delete(p, true)
-              removed += name
-            }
-          fs.listStatus(new Path(path))
-            .filter(st => st.isDirectory && st.getPath.getName.startsWith("d-"))
-            .foreach { st =>
-              if (!liveDirs.contains(st.getPath.getName))
-                rm(st.getPath, st.getPath.getName, supersededAt)
-            }
-          fs.listStatus(manifestRoot(path)).filter(_.isDirectory)
-            .foreach { st =>
-              if (st.getPath.getName != snap.epochDir.getName)
-                rm(st.getPath, s"_zmanifest/${st.getPath.getName}",
-                  supersededAt)
-              else
-                fs.listStatus(st.getPath).foreach { v =>
-                  val n = v.getPath.getName
-                  if (v.isDirectory) {
-                    // never-committed version dirs were garbage from
-                    // birth: own mtime ages them (they supersede nothing)
-                    if (!isCommitted(fs, v.getPath))
-                      rm(v.getPath,
-                        s"_zmanifest/${st.getPath.getName}/$n", 0L)
-                  } else if (n.endsWith(".claim")) {
-                    // silent hygiene (not reported in `removed` — the
-                    // return value is about data/manifest dirs): a claim
-                    // whose version COMMITTED is redundant (the v-dir
-                    // itself reserves the number); an uncommitted claim
-                    // may belong to an in-flight OCC append, so it ages
-                    // by its own mtime — the number is never reused
-                    // under a live claimant
-                    val ver = parseIdx(n.stripSuffix(".claim"), "v")
-                    val committed = ver.exists(i =>
-                      isCommitted(fs, new Path(st.getPath, s"v$i")))
-                    if (committed ||
-                        fs.getFileStatus(v.getPath).getModificationTime
-                          <= cutoff)
-                      fs.delete(v.getPath, false)
-                  } else if (n.endsWith(".op")) {
-                    // an op record whose version never committed is the
-                    // orphan of a crashed commit: age by own mtime.
-                    // Committed versions KEEP theirs — they ARE the
-                    // history ([[describeHistory]])
-                    val ver = parseIdx(n.stripSuffix(".op"), "v")
-                    val committed = ver.exists(i =>
-                      isCommitted(fs, new Path(st.getPath, s"v$i")))
-                    if (!committed &&
-                        fs.getFileStatus(v.getPath).getModificationTime
-                          <= cutoff)
-                      fs.delete(v.getPath, false)
-                  }
-                }
-            }
-          // row-level change records: the CURRENT epoch's is live (the
-          // feed's most recent DML transition); superseded epochs' age
-          // from supersession like their manifests (a feed needing them
-          // refuses at base validation once the manifests go), and a
-          // record for a never-committed epoch is a crashed DML commit's
-          // orphan (garbage from birth: own mtime)
-          val zchanges = new Path(path, "_zchanges")
-          if (fs.exists(zchanges))
-            fs.listStatus(zchanges).filter(_.isDirectory).foreach { cd =>
-              val n = cd.getPath.getName
-              parseIdx(n, "e").foreach { e =>
-                if (e != snap.epoch) {
-                  val committed = isCommitted(fs,
-                    new Path(manifestRoot(path), s"e$e/v0"))
-                  rm(cd.getPath, s"_zchanges/$n",
-                    if (committed) supersededAt else 0L)
-                }
-              }
-            }
-          // crashed STAGING leftovers under _ztmp (r16): a change record
-          // staged outside the turnstile whose committer died before the
-          // install rename, or a row-level op's stage whose driver died
-          // before cleanup — garbage from birth, aged by own mtime (an
-          // in-flight stage is protected by minAgeMs exactly like an
-          // OCC append's pre-commit data dir)
-          val ztmp = new Path(path, "_ztmp")
-          if (fs.exists(ztmp))
-            fs.listStatus(ztmp).foreach { st =>
-              rm(st.getPath, s"_ztmp/${st.getPath.getName}", 0L)
-            }
-          // bloom sidecar dirs of data dirs the snapshot no longer lists
-          // (vacuumed/rewritten files): same supersession aging
-          val zbloom = new Path(path, "_zbloom")
-          if (fs.exists(zbloom))
-            fs.listStatus(zbloom).filter(_.isDirectory).foreach { cdir =>
-              fs.listStatus(cdir.getPath).filter(_.isDirectory)
-                .foreach { ddir =>
-                  if (!liveDirs.contains(ddir.getPath.getName))
-                    rm(ddir.getPath,
-                      s"_zbloom/${cdir.getPath.getName}/${ddir.getPath.getName}",
-                      supersededAt)
-                }
-            }
-          removed.sorted.toSeq
-      }
-    }
+    ZLog.vacuum(s, path, minAgeMs)
 
-  // ---- q123: exact-oracle query over the z-clustered layout ---------------
-
-  private val NumFiles = 32
-
-  /** Per-dataset-dir layout cache (the storeFor discipline): clustered
-    * once per JVM, range-read per pass — the deployment profile. */
-  private val stores = scala.collection.mutable.Map.empty[String, String]
-
-  private def storeFor(s: SparkSession, d: String): String =
-    synchronized {
-      stores.getOrElseUpdate(d, {
-        val dir = Files.createTempDirectory("graft-zorder").toString
-        val li = Tables.lineitem(s, d)
-        // build + one incremental batch + a manifest-only compaction: the
-        // oracle (the plain filter over the WHOLE table) then covers
-        // append visibility AND the compacted-epoch read path, not just
-        // the initial layout
-        writeZOrdered(li.filter(col("l_orderkey") % 10 =!= 9), dir,
-          Seq("l_partkey", "l_suppkey"), NumFiles)
-        appendZOrdered(li.filter(col("l_orderkey") % 10 === 9), dir,
-          Seq("l_partkey", "l_suppkey"), math.max(NumFiles / 10, 1))
-        compactManifest(s, dir)
-        dir
-      })
-    }
-
-  /** q133's store: the full table z-clustered, then a partkey band
-    * copy-on-write DELETED — the store state every q133 pass reads. */
-  private val delStores = scala.collection.mutable.Map.empty[String, String]
-
-  private def delStoreFor(s: SparkSession, d: String): String =
-    synchronized {
-      delStores.getOrElseUpdate(d, {
-        val dir = Files.createTempDirectory("graft-zdelete").toString
-        val li = Tables.lineitem(s, d)
-        writeZOrdered(li, dir, Seq("l_partkey", "l_suppkey"), NumFiles)
-        val b = li.agg(min(col("l_partkey")), max(col("l_partkey"))).head()
-        val (pmn, pmx) = (b.getLong(0), b.getLong(1))
-        deleteZRange(s, dir,
-          Seq(("l_partkey", pmn + (pmx - pmn) * 2 / 10,
-            pmn + (pmx - pmn) * 3 / 10)),
-          Seq("l_partkey", "l_suppkey"))
-        dir
-      })
-    }
-
-  /** q138's store: the documents table z-clustered, then one CDC-style
-    * merge applied — a band of "re-crawled" docs (n_chars grown by 1000)
-    * plus a slice of brand-new ids beyond the old max. */
-  private val mergeStores = scala.collection.mutable.Map.empty[String, String]
-
-  private def mergeStoreFor(s: SparkSession, d: String): String =
-    synchronized {
-      mergeStores.getOrElseUpdate(d, {
-        val dir = Files.createTempDirectory("graft-zmerge").toString
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), col("n_chars"))
-        writeZOrdered(docs, dir, Seq("doc_id", "n_chars"), 8)
-        val b = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
-        val (dmn, dmx) = (b.getLong(0), b.getLong(1))
-        val (lo, hi) = (dmn + (dmx - dmn) * 2 / 10, dmn + (dmx - dmn) * 3 / 10)
-        val upd = docs.filter(col("doc_id").between(lo, hi))
-          .withColumn("n_chars", col("n_chars") + lit(1000L))
-        val ins = docs.filter(col("doc_id") % 5 === 0)
-          .withColumn("doc_id", col("doc_id") + lit(dmx + 1))
-        mergeByKey(s, dir, upd.unionByName(ins), "doc_id",
-          Seq("doc_id", "n_chars"), 4)
-        dir
-      })
-    }
-
-  /** q136's store: a documents z-store with a build slice then one
-    * appended batch, history kept in ONE epoch (no compaction) so the
-    * change feed has a live base coordinate. */
-  private val cdfStores = scala.collection.mutable.Map.empty[String, String]
-
-  private def cdfStoreFor(s: SparkSession, d: String): String =
-    synchronized {
-      cdfStores.getOrElseUpdate(d, {
-        val dir = Files.createTempDirectory("graft-zcdf").toString
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), col("n_chars"))
-        writeZOrdered(docs.filter(col("doc_id") % 10 =!= 9), dir,
-          Seq("n_chars", "doc_id"), 8)
-        appendZOrdered(docs.filter(col("doc_id") % 10 === 9), dir,
-          Seq("n_chars", "doc_id"), 2)
-        dir
-      })
-    }
-
-  /** q137's materialized base view over q136's store: the per-lang
-    * aggregate at coordinate (e0, v0), persisted once — the artifact an
-    * incremental refresh starts from instead of re-scanning the base. */
-  private val viewStores = scala.collection.mutable.Map.empty[String, String]
-
-  private def viewStoreFor(s: SparkSession, d: String): String =
-    synchronized {
-      viewStores.getOrElseUpdate(d, {
-        val root = cdfStoreFor(s, d)
-        val vdir = Files.createTempDirectory("graft-zview").toString
-        readSnapshotAt(s, root, 0, 0)
-          .groupBy(col("lang"))
-          .agg(count(lit(1)).cast("long").as("n_docs"),
-            sum(col("n_chars")).cast("long").as("sum_chars"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$vdir/v0")
-        vdir
-      })
-    }
-
-  /** q140's store: documents in THREE committed versions of one epoch —
-    * build (v0) + two appends (v1, v2) sliced by doc_id mod 3, so the
-    * change-feed stream's version→rows mapping is pure SQL. */
-  private val zcdfStreamStores = scala.collection.mutable.Map.empty[String, String]
-
-  private def zcdfStreamStoreFor(s: SparkSession, d: String): String =
-    synchronized {
-      zcdfStreamStores.getOrElseUpdate(d, {
-        val dir = Files.createTempDirectory("graft-zcdfstream").toString
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), col("n_chars"))
-        writeZOrdered(docs.filter(col("doc_id") % 3 === 0), dir,
-          Seq("n_chars", "doc_id"), 4)
-        appendZOrdered(docs.filter(col("doc_id") % 3 === 1), dir,
-          Seq("n_chars", "doc_id"), 2)
-        appendZOrdered(docs.filter(col("doc_id") % 3 === 2), dir,
-          Seq("n_chars", "doc_id"), 2)
-        dir
-      })
-    }
-
-  /** Drop the store-pointer cache (cold-run probes). */
-  def clearCaches(): Unit = synchronized {
-    stores.clear(); delStores.clear(); cdfStores.clear(); viewStores.clear()
-    mergeStores.clear(); zcdfStreamStores.clear(); bloomStores.clear()
-    dmlCdfStores.clear(); spjCats.clear()
+  /** Drop the read caches (scan plans, row counts, bucket maps, prunable
+    * columns, manifest meta) — cold-run probes; the query stores are
+    * [[ZQueries.clearCaches]]'s. */
+  def clearCaches(): Unit = {
     scanPlanCache.synchronized { scanPlanCache.clear(); scanPlanWeight = 0L }
     rowCountsCache.synchronized { rowCountsCache.clear() }
     bucketMapCache.synchronized { bucketMapCache.clear() }
     prunableColsCache.clear()
     manifestMetaCache.clear()
   }
-
-  /** q123: selective two-column range read THROUGH the z-clustered layout —
-    * a 10%-band on `l_partkey` × a 10%-band on `l_suppkey` (bounds derived
-    * from the data, integer floor arithmetic both engines). Oracle = the
-    * plain filter over the source table, so a manifest that wrongly
-    * skipped a file, a broken residual filter, or a row lost in the
-    * re-layout all hash-fail. The pruning itself (both single-column
-    * bands open a fraction of the files; the linear baseline cannot) is
-    * pinned in ZOrderSpec — an oracle can't see I/O. */
-  val q123ZOrderRead: Q = Q(
-    "q123_zorder_read",
-    """WITH b AS (SELECT MIN(l_partkey) AS pmn, MAX(l_partkey) AS pmx,
-      |    MIN(l_suppkey) AS smn, MAX(l_suppkey) AS smx FROM lineitem)
-      |SELECT l.l_orderkey, l.l_linenumber, l.l_partkey, l.l_suppkey,
-      |  l.l_quantity
-      |FROM lineitem l, b
-      |WHERE l.l_partkey BETWEEN b.pmn + (b.pmx-b.pmn)*2//10
-      |                      AND b.pmn + (b.pmx-b.pmn)*3//10
-      |  AND l.l_suppkey BETWEEN b.smn + (b.smx-b.smn)*4//10
-      |                      AND b.smn + (b.smx-b.smn)*5//10
-      |ORDER BY l.l_orderkey, l.l_linenumber""".stripMargin,
-  ) { (s, d) =>
-    val dir = storeFor(s, d)
-    val b = Tables.lineitem(s, d).agg(
-      min(col("l_partkey")), max(col("l_partkey")),
-      min(col("l_suppkey")), max(col("l_suppkey"))).head()
-    val (pmn, pmx, smn, smx) =
-      (b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3))
-    readZRange(s, dir, Seq(
-        ("l_partkey", pmn + (pmx - pmn) * 2 / 10, pmn + (pmx - pmn) * 3 / 10),
-        ("l_suppkey", smn + (smx - smn) * 4 / 10, smn + (smx - smn) * 5 / 10)))
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-        col("l_suppkey"), col("l_quantity"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-  }
-
-  /** q139: metadata-only COUNT through the z-store ([[countZRange]]) —
-    * a half-table `l_partkey` band counted over q123's store (build +
-    * append + manifest compaction): interior files charge their recorded
-    * footer row counts to the manifest, boundary files scan with the
-    * residual filter. Oracle = the plain COUNT over the source table, so
-    * a manifest count drifting from the data (harvest bug, carried-row
-    * mishandling through the compaction) or an unsound coverage decision
-    * (nulls, boundary files) hash-fails. The no-open claim for covered
-    * files is pinned in ZOrderSpec (count survives a physically deleted
-    * covered file); an oracle can't see I/O. */
-  val q139ZOrderCount: Q = Q(
-    "q139_zorder_count",
-    """WITH b AS (SELECT MIN(l_partkey) AS pmn, MAX(l_partkey) AS pmx
-      |  FROM lineitem)
-      |SELECT CAST(COUNT(*) AS BIGINT) AS n FROM lineitem l, b
-      |WHERE l.l_partkey BETWEEN b.pmn
-      |                      AND b.pmn + (b.pmx-b.pmn)*5//10""".stripMargin,
-  ) { (s, d) =>
-    import s.implicits._
-    val dir = storeFor(s, d)
-    val b = Tables.lineitem(s, d).agg(
-      min(col("l_partkey")), max(col("l_partkey"))).head()
-    val (pmn, pmx) = (b.getLong(0), b.getLong(1))
-    Seq(countZRange(s, dir,
-      Seq(("l_partkey", pmn, pmn + (pmx - pmn) * 5 / 10)))).toDF("n")
-  }
-
-  /** q144: metadata-only MIN/MAX through the z-store ([[minMaxZRange]]) —
-    * the same half-table `l_partkey` band as q139, aggregating both the
-    * predicate column and the second cluster column: interior files
-    * charge their recorded footer extremes to the manifest, boundary
-    * files scan with the residual filter. Oracle = the plain MIN/MAX
-    * over the source table, so a stat drifting from the data (truncated
-    * or widened bound trusted, carried-row mishandling through the
-    * compaction) or an unsound coverage decision hash-fails. The no-open
-    * claim for charged files is pinned in ZOrderSpec (the aggregate
-    * survives a physically deleted charged file); an oracle can't see
-    * I/O. */
-  val q144ZOrderMinMax: Q = Q(
-    "q144_zorder_minmax",
-    """WITH b AS (SELECT MIN(l_partkey) AS pmn, MAX(l_partkey) AS pmx
-      |  FROM lineitem)
-      |SELECT CAST(MIN(l.l_suppkey) AS BIGINT) AS mn_l_suppkey,
-      |  CAST(MAX(l.l_suppkey) AS BIGINT) AS mx_l_suppkey,
-      |  CAST(MIN(l.l_partkey) AS BIGINT) AS mn_l_partkey,
-      |  CAST(MAX(l.l_partkey) AS BIGINT) AS mx_l_partkey
-      |FROM lineitem l, b
-      |WHERE l.l_partkey BETWEEN b.pmn
-      |                      AND b.pmn + (b.pmx-b.pmn)*5//10""".stripMargin,
-  ) { (s, d) =>
-    val dir = storeFor(s, d)
-    val b = Tables.lineitem(s, d).agg(
-      min(col("l_partkey")), max(col("l_partkey"))).head()
-    val (pmn, pmx) = (b.getLong(0), b.getLong(1))
-    minMaxZRange(s, dir, Seq("l_suppkey", "l_partkey"),
-      Seq(("l_partkey", pmn, pmn + (pmx - pmn) * 5 / 10)))
-  }
-
-  /** q145: the commit log surfaced as data ([[describeHistory]] —
-    * Delta's DESCRIBE HISTORY) — a deterministic lifecycle (create, two
-    * appends, a derived-band delete, a keyed merge, a manifest
-    * compaction) whose commit TOPOLOGY is the operator's observable
-    * output: appends land as versions of the creating epoch, every
-    * rewrite opens the next epoch at v0. Oracle = the expected history
-    * as a VALUES literal — exact in the q140 sense (coordinates are
-    * deterministic by construction), so drift in version allocation,
-    * epoch numbering, op recording, or the history read hash-fails.
-    * The op labels across rollforward/recluster and the orphan-sidecar
-    * vacuum are pinned in ZOrderSpec. */
-  val q145ZOrderHistory: Q = Q(
-    "q145_zorder_history",
-    """SELECT CAST(epoch AS BIGINT) AS epoch, CAST(ver AS BIGINT) AS ver,
-      |  op
-      |FROM (VALUES (0, 0, 'create'), (0, 1, 'append'), (0, 2, 'append'),
-      |             (1, 0, 'delete'), (2, 0, 'merge'),
-      |             (3, 0, 'manifest-compact')) AS t(epoch, ver, op)
-      |ORDER BY epoch, ver""".stripMargin,
-  ) { (s, d) =>
-    describeHistory(s, histStoreFor(s, d))
-  }
-
-  /** q145's store: the six-op lifecycle, built ONCE per dataset dir (the
-    * storeFor discipline — the operator under test is the metadata-plane
-    * [[describeHistory]], not the build; the lifecycle's commit topology
-    * is deterministic, so the cached store answers every pass). */
-  private val histStores = scala.collection.mutable.Map.empty[String, String]
-
-  private def histStoreFor(s: SparkSession, d: String): String =
-    synchronized {
-      histStores.getOrElseUpdate(d, {
-        val dir = Files.createTempDirectory("graft-zhist").toString
-        val t = Tables.documents(s, d).select(col("doc_id"),
-          col("n_chars").cast("long").as("len"))
-        writeZOrdered(t.filter(col("doc_id") % 3 === 0), dir,
-          Seq("len", "doc_id"), 4)
-        appendZOrdered(t.filter(col("doc_id") % 3 === 1), dir,
-          Seq("len", "doc_id"), 2)
-        appendZOrdered(t.filter(col("doc_id") % 3 === 2), dir,
-          Seq("len", "doc_id"), 2)
-        val b = t.agg(min(col("doc_id")), max(col("doc_id"))).head()
-        val (mn, mx) = (b.getLong(0), b.getLong(1))
-        deleteZRange(s, dir, Seq(("doc_id", mn, mn)), Seq("len", "doc_id"))
-        val src = t.filter(col("doc_id") === mn + 1)
-          .select(col("doc_id"), lit(1L).as("len"))
-          .union(t.filter(col("doc_id") === mn + 1)
-            .select((col("doc_id") + mx + 1L).as("doc_id"), col("len")))
-        mergeByKey(s, dir, src, "doc_id", Seq("len", "doc_id"))
-        compactManifest(s, dir)
-        dir
-      })
-    }
-
-  /** q142's store: documents with a synthetic high-cardinality
-    * NON-CLUSTERED key `uk = (doc_id * 2654435761) % 100003` (a Knuth
-    * multiplicative hash — pure integer arithmetic, so the oracle
-    * mirrors it exactly), z-clustered on (n_chars, doc_id) so uk ranges
-    * overlap in every file, bloom sidecars built on uk. */
-  private val bloomStores = scala.collection.mutable.Map.empty[String, String]
-
-  private def bloomStoreFor(s: SparkSession, d: String): String =
-    synchronized {
-      bloomStores.getOrElseUpdate(d, {
-        val dir = Files.createTempDirectory("graft-zbloom").toString
-        val t = Tables.documents(s, d).select(col("doc_id"),
-          ((col("doc_id") * lit(2654435761L)) % lit(100003L)).as("uk"),
-          col("n_chars"))
-        writeZOrdered(t, dir, Seq("n_chars", "doc_id"), 8)
-        buildBloomIndex(s, dir, "uk")
-        dir
-      })
-    }
-
-  /** q142: POINT LOOKUP on a non-clustered column through the bloom
-    * sidecar index ([[readZPoint]]) — probe value = the minimum doc's
-    * uk, derived by the same arithmetic both engines run. Oracle = the
-    * plain equality filter over the source table, so a bloom that
-    * wrongly excluded a matching file (the unsound direction), a broken
-    * residual filter, or a hash/probe mismatch all hash-fail. The
-    * files-opened ∝ matches claim is pinned in ZOrderSpec — an oracle
-    * can't see I/O. */
-  val q142ZOrderPoint: Q = Q(
-    "q142_zorder_point",
-    """WITH b AS (SELECT MIN(doc_id) AS dmn FROM documents)
-      |SELECT d.doc_id, (d.doc_id * 2654435761) % 100003 AS uk, d.n_chars
-      |FROM documents d, b
-      |WHERE (d.doc_id * 2654435761) % 100003
-      |      = (b.dmn * 2654435761) % 100003
-      |ORDER BY d.doc_id""".stripMargin,
-  ) { (s, d) =>
-    val dir = bloomStoreFor(s, d)
-    val dmn = Tables.documents(s, d).agg(min(col("doc_id"))).head().getLong(0)
-    readZPoint(s, dir, "uk", (dmn * 2654435761L) % 100003L)
-      .select(col("doc_id"), col("uk"), col("n_chars"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** q133: range DELETE through the z-store — build the full table
-    * z-clustered, copy-on-write delete a 10%-band on `l_partkey`
-    * ([[deleteZRange]]: stats-pruned rewrite, epoch-swap commit), then
-    * answer a `l_suppkey` band query through the post-delete snapshot.
-    * Oracle = the plain suppkey-band filter EXCLUDING the deleted
-    * partkey band, so a row surviving the delete, a row wrongly deleted
-    * (carried-file mishandling), or a file lost in the rewrite all
-    * hash-fail. The carry-by-reference I/O shape (unaffected files are
-    * re-pointed, not rewritten) is pinned in ZOrderSpec — an oracle
-    * can't see I/O. */
-  val q133ZOrderDelete: Q = Q(
-    "q133_zorder_delete",
-    """WITH b AS (SELECT MIN(l_partkey) AS pmn, MAX(l_partkey) AS pmx,
-      |    MIN(l_suppkey) AS smn, MAX(l_suppkey) AS smx FROM lineitem)
-      |SELECT l.l_orderkey, l.l_linenumber, l.l_partkey, l.l_suppkey,
-      |  l.l_quantity
-      |FROM lineitem l, b
-      |WHERE l.l_suppkey BETWEEN b.smn + (b.smx-b.smn)*4//10
-      |                      AND b.smn + (b.smx-b.smn)*5//10
-      |  AND NOT (l.l_partkey BETWEEN b.pmn + (b.pmx-b.pmn)*2//10
-      |                           AND b.pmn + (b.pmx-b.pmn)*3//10)
-      |ORDER BY l.l_orderkey, l.l_linenumber""".stripMargin,
-  ) { (s, d) =>
-    val dir = delStoreFor(s, d)
-    val b = Tables.lineitem(s, d).agg(
-      min(col("l_suppkey")), max(col("l_suppkey"))).head()
-    val (smn, smx) = (b.getLong(0), b.getLong(1))
-    readZRange(s, dir, Seq(
-        ("l_suppkey", smn + (smx - smn) * 4 / 10, smn + (smx - smn) * 5 / 10)))
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-        col("l_suppkey"), col("l_quantity"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-  }
-
-  /** q134: TIME TRAVEL — answer q123's partkey band at epoch 0 version 0,
-    * i.e. the store state BEFORE the incremental append (and before the
-    * manifest compaction that moved the current snapshot to a new epoch).
-    * Oracle = the band filter restricted to the build slice
-    * (`l_orderkey % 10 != 9`), so a travel read that leaks the appended
-    * batch, loses a build row, or resolves the wrong coordinate
-    * hash-fails. Shares q123's store (build → append → compactManifest),
-    * which is exactly what makes the coordinate meaningful. */
-  val q134ZOrderTimeTravel: Q = Q(
-    "q134_zorder_time_travel",
-    """WITH b AS (SELECT MIN(l_partkey) AS pmn, MAX(l_partkey) AS pmx
-      |  FROM lineitem)
-      |SELECT l.l_orderkey, l.l_linenumber, l.l_partkey, l.l_suppkey,
-      |  l.l_quantity
-      |FROM lineitem l, b
-      |WHERE l.l_orderkey % 10 != 9
-      |  AND l.l_partkey BETWEEN b.pmn + (b.pmx-b.pmn)*2//10
-      |                      AND b.pmn + (b.pmx-b.pmn)*3//10
-      |ORDER BY l.l_orderkey, l.l_linenumber""".stripMargin,
-  ) { (s, d) =>
-    val dir = storeFor(s, d)
-    val b = Tables.lineitem(s, d).agg(
-      min(col("l_partkey")), max(col("l_partkey"))).head()
-    val (pmn, pmx) = (b.getLong(0), b.getLong(1))
-    readZRangeAt(s, dir, 0, 0, Seq(
-        ("l_partkey", pmn + (pmx - pmn) * 2 / 10, pmn + (pmx - pmn) * 3 / 10)))
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-        col("l_suppkey"), col("l_quantity"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-  }
-
-  /** q136: CHANGE FEED — tail the rows a z-store append added after a
-    * committed base coordinate ([[readChangesSince]]): build slice at
-    * (e0, v0), one appended batch at v1, delta-since-(0,0) ≡ exactly the
-    * appended slice. Oracle = the plain filter to the appended slice, so
-    * a delta that leaks base rows (bogus-base validation), misses
-    * appended rows, or double-counts a file hash-fails. The refusal
-    * shapes (cross-epoch, bogus base) are pinned in ZOrderSpec. */
-  val q136ZOrderChangeFeed: Q = Q(
-    "q136_zorder_change_feed",
-    """SELECT doc_id, lang, n_chars FROM documents
-      |WHERE doc_id % 10 = 9 ORDER BY doc_id""".stripMargin,
-  ) { (s, d) =>
-    readChangesSince(s, cdfStoreFor(s, d), 0, 0)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** q137: INCREMENTAL VIEW MAINTENANCE over the change feed — what
-    * [[readChangesSince]] exists FOR: a per-lang aggregate view is
-    * materialized once at the base coordinate (e0, v0), and the refresh
-    * after the append is `view ⊎ agg(delta)` — the refresh plan reads the
-    * tiny view parquet plus O(delta files), NEVER the base data (pinned
-    * via `inputFiles` in ZOrderSpec with the full-re-agg planted
-    * positive; q100 is the keyed upsert-CDF sibling — this is the
-    * append-only fact-stream form, where the delta is inserts-only so
-    * the merge is a pure additive union). Oracle = the straight
-    * aggregate over the WHOLE table: a refresh that misses delta rows,
-    * double-counts, or drifts from the base view hash-fails. */
-  val q137ZOrderIvm: Q = Q(
-    "q137_zorder_ivm",
-    """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-      |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-      |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-  ) { (s, d) =>
-    val root = cdfStoreFor(s, d)
-    val base = s.read.parquet(s"${viewStoreFor(s, d)}/v0")
-    val delta = readChangesSince(s, root, 0, 0)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).cast("long").as("n_docs"),
-        sum(col("n_chars")).cast("long").as("sum_chars"))
-    base.unionByName(delta).groupBy(col("lang"))
-      .agg(sum(col("n_docs")).cast("long").as("n_docs"),
-        sum(col("sum_chars")).cast("long").as("sum_chars"))
-      .orderBy(col("lang"))
-  }
-
-  /** q138: keyed copy-on-write MERGE through the z-store — build the
-    * documents table z-clustered, apply ONE CDC-style merge
-    * ([[mergeByKey]]: a doc_id band of whole-row updates + a slice of
-    * beyond-max inserts, per-key stats-pruned rewrite, epoch-swap
-    * commit), then answer the full-table query through the post-merge
-    * snapshot. Oracle = unchanged ∪ updated ∪ inserted as plain SQL, so a
-    * lost update, a surviving stale row (carried-file mishandling), a
-    * dropped insert, or a row lost in the rewrite all hash-fail. The
-    * carry-by-reference I/O shape and the refusal/null edges are pinned
-    * in ZOrderSpec — an oracle can't see I/O. */
-  val q138ZOrderMerge: Q = Q(
-    "q138_zorder_merge",
-    """WITH b AS (SELECT MIN(doc_id) AS dmn, MAX(doc_id) AS dmx
-      |  FROM documents)
-      |SELECT d.doc_id, d.lang, d.n_chars FROM documents d, b
-      |WHERE NOT (d.doc_id BETWEEN b.dmn + (b.dmx-b.dmn)*2//10
-      |                        AND b.dmn + (b.dmx-b.dmn)*3//10)
-      |UNION ALL
-      |SELECT d.doc_id, d.lang, d.n_chars + 1000 AS n_chars
-      |FROM documents d, b
-      |WHERE d.doc_id BETWEEN b.dmn + (b.dmx-b.dmn)*2//10
-      |                   AND b.dmn + (b.dmx-b.dmn)*3//10
-      |UNION ALL
-      |SELECT d.doc_id + b.dmx + 1 AS doc_id, d.lang, d.n_chars
-      |FROM documents d, b
-      |WHERE d.doc_id % 5 = 0
-      |ORDER BY doc_id""".stripMargin,
-  ) { (s, d) =>
-    readSnapshot(s, mergeStoreFor(s, d))
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** q140: STREAMING change feed — tail the z-store's commit log with the
-    * graft-zcdf DSv2 source ([[ZcdfStream]]): three committed versions
-    * (build + two appends, sliced by doc_id mod 3) consumed at
-    * maxVersionsPerTrigger=1, each row stamped with its `_ver` commit
-    * coordinate. Oracle: version ≡ doc_id % 3 by construction, so a
-    * stream that re-emits a version, misses one, drops rows inside a
-    * version, or mislabels coordinates hash-fails. Restart-mid-epoch
-    * resume and the cross-epoch full-refresh refusal are pinned in
-    * StreamingSpec — a bounded run can't show them. */
-  val q140ZcdfStream: Q = Q(
-    "q140_zcdf_stream",
-    """SELECT CAST(doc_id % 3 AS BIGINT) AS ver, doc_id, lang, n_chars
-      |FROM documents ORDER BY ver, doc_id""".stripMargin,
-  ) { (s, d) =>
-    val dir = zcdfStreamStoreFor(s, d)
-    val out = Files.createTempDirectory("graft-zcdfout").toString
-    val q = s.readStream.format("graft-zcdf")
-      .option("startingVersion", "earliest")
-      .option("maxVersionsPerTrigger", "1")
-      .load(dir)
-      .writeStream.format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.parquet(s"$out/data")
-      .select(col("_ver").as("ver"), col("doc_id"), col("lang"),
-        col("n_chars"))
-      .orderBy(col("ver"), col("doc_id"))
-  }
-
-  // ---- q132: continuous z-store ingest (exactly-once) ---------------------
-
-  /** One z-ingest micro-batch: derive the clustering keys, append the
-    * batch under its TAG, then answer the STANDING band query through the
-    * store — the q117 append-then-answer shape for the fifth persisted
-    * store. Run exactly-once by [[StoreMaint.applyOnce]]; the
-    * marker-missed window (crash after the version commit, before the
-    * marker) is closed by the batch TAG riding the manifest version —
-    * the z-store's rows aren't functional in a key, so duplicate-tolerant
-    * reads can't absorb a re-append the way the other four stores do;
-    * the tag makes the re-append itself a no-op. */
-  private[graft] def ingestBatch(s: SparkSession, root: String,
-      df: DataFrame, id: Long, lo: Long, hi: Long,
-      rowCap: Long = 4096L): Unit =
-    StoreMaint.applyOnce(s, root, id, StoreMaint.batchPartitions(s, rowCap)) {
-      val store = s"$root/store"
-      appendZOrdered(
-        df.select(col("doc_id"),
-          length(col("text")).cast("long").as("k1"),
-          pmod(col("doc_id"), lit(997L)).as("k2")),
-        store, Seq("k1", "k2"), 2, tag = Some(s"b$id"))
-      readZRange(s, store, Seq(("k1", lo, hi)))
-        .select(col("doc_id"), col("k1"), col("k2"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/out/batch=$id")
-    }
-
-  /** q132: CONTINUOUS z-store ingest — documents arrive over the
-    * graft-shards stream (explicit doc_id-mod routing) in two
-    * rate-limited micro-batches; each derives clustering keys
-    * (k1 = text length, k2 = doc_id mod 997 — both engine-mirrorable),
-    * z-appends itself to the store (which starts EMPTY), and answers the
-    * standing k1-band query through the manifest-pruned read, so batch
-    * b's rows are the store state after batches ≤ b. EXACT oracle by the
-    * q108/q117 recipe: batch membership is rank-in-shard div limit in
-    * SQL, the band bounds derive from the full corpus, and the per-batch
-    * answer is the plain filter over member docs — a double-appended
-    * batch (broken tag/marker), a lost batch, a wrongly-pruned file, or
-    * a broken residual filter all hash-fail. Completes the symmetry:
-    * all FIVE persisted stores have exactly-once streaming ingest. */
-  val q132ZOrderStreamIngest: Q = Q(
-    "q132_zorder_stream_ingest",
-    s"""WITH b0 AS (SELECT MIN(LENGTH(text)) AS mn, MAX(LENGTH(text)) AS mx
-       |  FROM documents),
-       |${StoreMaint.batchedCte("documents", "doc_id")},
-       |bs AS (SELECT DISTINCT batch FROM batched),
-       |member AS (
-       |  SELECT bs.batch, bt.doc_id FROM bs JOIN batched bt ON bt.batch <= bs.batch)
-       |SELECT m.batch, d.doc_id, LENGTH(d.text) AS k1, d.doc_id % 997 AS k2
-       |FROM member m JOIN documents d USING (doc_id), b0
-       |WHERE LENGTH(d.text) BETWEEN b0.mn + (b0.mx - b0.mn) * 3 // 10
-       |                         AND b0.mn + (b0.mx - b0.mn) * 7 // 10
-       |ORDER BY m.batch, d.doc_id""".stripMargin,
-  ) { (s, d) =>
-    val (docs, rowCap) = StoreMaint.shardStream(s,
-      GraftShards.documentsShards(s, d), GraftShards.DocWire)
-    // the standing band derives from the full corpus — a constant of the
-    // deployment, mirrored by the oracle's b0 CTE
-    val b = Tables.documents(s, d)
-      .agg(min(length(col("text"))), max(length(col("text")))).head()
-    val (mn, mx) = (b.getInt(0).toLong, b.getInt(1).toLong)
-    val (lo, hi) = (mn + (mx - mn) * 3 / 10, mn + (mx - mn) * 7 / 10)
-    val root = Files.createTempDirectory("graft-zorder-ingest").toString
-    StoreMaint.run(s, docs, root)(ingestBatch(s, root, _, _, lo, hi, rowCap))
-      .select(col("batch"), col("doc_id"), col("k1"), col("k2"))
-      .orderBy(col("batch"), col("doc_id"))
-  }
-
-  // ---- q143: CONTINUOUS IVM over the change-feed stream -------------------
-
-  /** One streaming-IVM micro-batch: fold the change-feed delta into the
-    * materialized view — `view(v) = view(v-1) ⊎ agg(delta(v))`, the
-    * q137 refresh as a CONTINUOUS loop. The view is versioned by the
-    * COMMIT COORDINATE it covers (not the Spark batch id), so a
-    * replayed batch recomputes v from the same v-1 + the same delta and
-    * overwrites the same dir — deterministic content makes the replay a
-    * no-op even without the marker; the marker still short-circuits it.
-    * The refresh plan reads the previous view (rows ≤ #langs) plus the
-    * batch's own delta rows — structurally never the base store (the
-    * delta arrives FROM the source; nothing here can touch base files). */
-  private[graft] def ivmBatch(s: SparkSession, root: String,
-      df: DataFrame, id: Long): Unit =
-    // literal pin kept: admission here is maxVersionsPerTrigger (no row
-    // cap exists to derive from) and the fold reduces to <= #langs rows
-    // regardless of delta volume — a deployment with huge deltas raises
-    // spark.sql.shuffle.partitions around the stream instead
-    StoreMaint.applyOnce(s, root, id, 4) {
-      import s.implicits._
-      // fold PER VERSION, resolving the previous state from what EXISTS:
-      // committed version numbers are not contiguous (claimNextVersion
-      // skips a crashed claimant's number) and maxVersionsPerTrigger>1
-      // puts several commits in one micro-batch — `view/v(ver-1)` may
-      // be a nonexistent path, or the batch may span versions (the r10
-      // advisor finding). The previous view is the highest existing
-      // `view/v*` BELOW the batch's first version; each version's delta
-      // then folds in commit order, every covered state still keyed by
-      // its own commit coordinate (replay-deterministic as before).
-      // ONE aggregate-collect serves the emptiness probe, the version
-      // list AND every version's delta (was a distinct-collect + one
-      // groupBy job per version): the fold's input is ≤ #versions×#langs
-      // rows, and slicing groupBy(ver, lang) per version is the same
-      // count/sum algebra as the former per-version groupBy(lang) (r17;
-      // guide §1.2 fewer passes). The view states stay COLLECTED rows —
-      // the per-version fold writes LocalRelations.
-      val deltaRows = df.groupBy(col(ZcdfStream.VerCol).as("__v"), col("lang"))
-        .agg(count(lit(1)).cast("long").as("n_docs"),
-          sum(col("n_chars")).cast("long").as("sum_chars"))
-        .collect()
-        .map(r => (r.getLong(0), (r.getString(1), r.getLong(2), r.getLong(3))))
-      val vers = deltaRows.map(_._1).distinct.sorted
-      if (vers.nonEmpty) {
-        val viewDir = new Path(s"$root/view")
-        val fs = StoreMaint.fsFor(s, viewDir)
-        val prevVer: Option[Long] =
-          if (!fs.exists(viewDir)) None
-          else fs.listStatus(viewDir).filter(_.isDirectory)
-            .flatMap(st => parseIdx(st.getPath.getName, "v"))
-            .filter(_ < vers.head).maxOption
-        var prev: Seq[(String, Long, Long)] = prevVer match {
-          case Some(pv) => s.read.parquet(s"$root/view/v$pv")
-            .select(col("lang"), col("n_docs"), col("sum_chars")).collect()
-            .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-          case None => Seq.empty
-        }
-        def viewDf(rows: Seq[(String, Long, Long)]): DataFrame =
-          rows.toDF("lang", "n_docs", "sum_chars")
-        val states = vers.map { ver =>
-          val delta = deltaRows.filter(_._1 == ver).map(_._2).toSeq
-          val merged = (prev ++ delta).groupBy(_._1).map { case (lang, xs) =>
-            (lang, xs.map(_._2).sum, xs.map(_._3).sum)
-          }.toSeq.sortBy(_._1)
-          viewDf(merged).coalesce(1).write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(s"$root/view/v$ver")
-          prev = merged
-          merged.map { case (lang, n, sc) => (ver, lang, n, sc) }
-        }
-        states.toSeq.flatten
-          .toDF("ver", "lang", "n_docs", "sum_chars").coalesce(1).write
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$root/out/batch=$id")
-      }
-    }
-
-  /** q143: CONTINUOUS incremental view maintenance — the composition the
-    * graft-zcdf source exists for, and the streaming completion of
-    * q137's batch refresh: the per-lang aggregate view is maintained by
-    * tailing the z-store's commit log version-per-trigger and folding
-    * each delta into the previous view state (`view ⊎ agg(delta)` — the
-    * Delta "CDF → aggregate view" pattern). Output is every view STATE
-    * keyed by the commit coordinate it covers, so the oracle replays the
-    * cumulative aggregates per version in SQL (version ≡ doc_id % 3 by
-    * the store's construction) — a missed delta, a double-fold, or a
-    * state keyed to the wrong coordinate all hash-fail. Exactly-once is
-    * the marker + coordinate-keyed deterministic view write;
-    * StreamingSpec pins checkpoint-restart resume (views re-derived for
-    * NEW versions only). */
-  val q143ZcdfIvm: Q = Q(
-    "q143_zcdf_ivm",
-    """WITH vs AS (SELECT 0 AS ver UNION ALL SELECT 1 UNION ALL SELECT 2)
-      |SELECT CAST(v.ver AS BIGINT) AS ver, d.lang,
-      |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-      |  CAST(SUM(d.n_chars) AS BIGINT) AS sum_chars
-      |FROM vs v JOIN documents d ON d.doc_id % 3 <= v.ver
-      |GROUP BY v.ver, d.lang
-      |ORDER BY ver, d.lang""".stripMargin,
-  ) { (s, d) =>
-    val dir = zcdfStreamStoreFor(s, d)
-    val root = Files.createTempDirectory("graft-zcdfivm").toString
-    val deltas = s.readStream.format("graft-zcdf")
-      .option("startingVersion", "earliest")
-      .option("maxVersionsPerTrigger", "1")
-      .load(dir)
-    StoreMaint.run(s, deltas, root)(ivmBatch(s, root, _, _))
-      .select(col("ver"), col("lang"), col("n_docs"), col("sum_chars"))
-      .orderBy(col("ver"), col("lang"))
-  }
-
-  // ---- q141: CDC-apply streaming MERGE loop (exactly-once) ----------------
-
-  /** One CDC-apply micro-batch — Delta's "merge in foreachBatch" pattern:
-    * reduce the batch to its LAST row per key (a CDC batch can carry two
-    * versions of one key; replaying them as separate merges would be
-    * order-dependent — the within-batch argmax is the standard dedupe),
-    * apply it as a keyed copy-on-write [[mergeByKey]] under the batch
-    * TAG, then dump the post-merge snapshot. Run exactly-once by
-    * [[StoreMaint.applyOnce]]; the marker-missed window is closed by the
-    * tag riding the merge's own epoch commit (a replayed tagged merge
-    * no-ops), as in q132. */
-  private[graft] def mergeIngestBatch(s: SparkSession, root: String,
-      df: DataFrame, id: Long, rowCap: Long = 4096L): Unit =
-    StoreMaint.applyOnce(s, root, id, StoreMaint.batchPartitions(s, rowCap)) {
-      import org.apache.spark.sql.expressions.Window
-      val store = s"$root/store"
-      val w = Window.partitionBy(col("doc_id"))
-        .orderBy(col("version").desc, col("doc_id"))
-      val latest = df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      // no pre-flight emptiness probe: mergeByKey's own source aggregate
-      // already returns MergeResult(0, 0) without committing on an empty
-      // batch — the probe was one redundant job per micro-batch (r16)
-      prf("q141.mergeByKey")(
-        mergeByKey(s, store, latest, "doc_id", Seq("doc_id", "n_chars"), 2,
-          tag = Some(s"b$id")))
-      prf("q141.snapshotDump")(readSnapshot(s, store)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/out/batch=$id"))
-    }
-
-  /** q141: CONTINUOUS CDC apply — a keyed change stream (two waves:
-    * doc_id%7 re-crawls at +1000 chars as version 0, doc_id%5 at +5000
-    * as version 1, overlapping at %35 to exercise last-writer-wins)
-    * arrives over graft-shards in two rate-limited micro-batches and is
-    * applied to a base z-store via [[mergeByKey]] in foreachBatch — the
-    * sixth exactly-once ingest loop, completing Delta's
-    * merge-in-foreachBatch shape on the z-store. EXACT oracle by the
-    * q132 recipe: micro-batch membership is rank-in-shard div limit in
-    * SQL, and each batch's dump is the full post-merge snapshot, i.e.
-    * per doc the LAST change with batch ≤ b else the base row — a lost
-    * update, a double-applied batch, stale-row survival, or broken
-    * within-batch LWW all hash-fail. */
-  val q141ZOrderCdcMerge: Q = Q(
-    "q141_zorder_cdc_merge",
-    s"""WITH cdc AS (
-       |  SELECT doc_id, 0 AS version, n_chars + 1000 AS nc
-       |  FROM documents WHERE doc_id % 7 = 0
-       |  UNION ALL
-       |  SELECT doc_id, 1 AS version, n_chars + 5000 AS nc
-       |  FROM documents WHERE doc_id % 5 = 0),
-       |${StoreMaint.batchedCte("cdc", "doc_id", "version, doc_id", Seq("version", "nc"))},
-       |bs AS (SELECT DISTINCT batch FROM batched),
-       |applied AS (
-       |  SELECT bs.batch, bt.doc_id, bt.nc,
-       |    ROW_NUMBER() OVER (PARTITION BY bs.batch, bt.doc_id
-       |      ORDER BY bt.version DESC) AS rn
-       |  FROM bs JOIN batched bt ON bt.batch <= bs.batch)
-       |SELECT b.batch, d.doc_id, d.lang,
-       |  COALESCE(a.nc, d.n_chars) AS n_chars
-       |FROM bs b CROSS JOIN documents d
-       |LEFT JOIN (SELECT batch, doc_id, nc FROM applied WHERE rn = 1) a
-       |  ON a.batch = b.batch AND a.doc_id = d.doc_id
-       |ORDER BY b.batch, d.doc_id""".stripMargin,
-  ) { (s, d) =>
-    import org.apache.spark.sql.types.LongType
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val cdc = docs.filter(col("doc_id") % 7 === 0)
-      .select(col("doc_id"), col("lang"),
-        (col("n_chars") + 1000L).as("n_chars"), lit(0L).as("version"))
-      .unionByName(docs.filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), col("lang"),
-          (col("n_chars") + 5000L).as("n_chars"), lit(1L).as("version")))
-    val root = Files.createTempDirectory("graft-zcdcmerge").toString
-    // the base store the stream merges into
-    prf("q141.baseStore")(
-      writeZOrdered(docs, s"$root/store", Seq("doc_id", "n_chars"), 4))
-    // the CDC stream: doc-routed shards, seq ordered by (version, doc_id)
-    val shardDir = s"$root/shards"
-    prf("q141.shardWrite")(
-      GraftShards.writeShardedBy(cdc, shardDir, GraftShards.NumShards,
-        pmod(col("doc_id"), lit(GraftShards.NumShards.toLong)),
-        Seq(col("version"), col("doc_id"))))
-    // metadata-only: the chunk names of the layout just written above
-    // carry the per-shard record count (GraftShards.maxShardCount)
-    val cdcWire = StructType(Seq(
-      StructField("doc_id", LongType), StructField("lang", StringType),
-      StructField("n_chars", LongType), StructField("version", LongType)))
-    val (changes, rowCap) = prf("q141.maxShardCnt")(
-      StoreMaint.shardStream(s, shardDir, cdcWire))
-    prf("q141.streamWall")(
-      StoreMaint.run(s, changes, root)(mergeIngestBatch(s, root, _, _, rowCap)))
-      .select(col("batch"), col("doc_id"), col("lang"), col("n_chars"))
-      .orderBy(col("batch"), col("doc_id"))
-  }
-
-  // ---- q146: RESTORE to a past snapshot ------------------------------------
-
-  /** q146's store: documents z-clustered, then an (errant) band delete,
-    * then a RESTORE to the pre-delete coordinate — the rollback-a-bad-
-    * maintenance-op lifecycle every lakehouse eventually runs. */
-  private val restoreStores = scala.collection.mutable.Map.empty[String, String]
-
-  private def restoreStoreFor(s: SparkSession, d: String): String =
-    synchronized {
-      restoreStores.getOrElseUpdate(d, {
-        val dir = Files.createTempDirectory("graft-zrestore").toString
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), col("n_chars"))
-        writeZOrdered(docs, dir, Seq("doc_id", "n_chars"), 4) // (e0, v0)
-        val b = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
-        val (mn, mx) = (b.getLong(0), b.getLong(1))
-        val n = deleteZRange(s, dir,
-          Seq(("doc_id", mn + (mx - mn) * 2 / 10, mn + (mx - mn) * 3 / 10)),
-          Seq("doc_id", "n_chars"))
-        require(n > 0, "q146 store: the errant delete deleted nothing")
-        restoreTo(s, dir, 0, 0)
-        dir
-      })
-    }
-
-  /** q146: RESTORE — roll the store back to the coordinate before a bad
-    * range delete ([[restoreTo]]): zero data I/O (the new epoch re-points
-    * the original files by reference — spec-pinned), audit trail intact.
-    * Oracle = the PLAIN full table: a restore that leaks the delete,
-    * drops a row, re-points a wrong file, or resolves the wrong
-    * coordinate hash-fails. The refusal shapes (vacuumed files, bogus
-    * coordinates) are pinned in ZOrderSpec. */
-  val q146ZOrderRestore: Q = Q(
-    "q146_zorder_restore",
-    "SELECT doc_id, lang, n_chars FROM documents ORDER BY doc_id",
-  ) { (s, d) =>
-    readSnapshot(s, restoreStoreFor(s, d))
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .orderBy(col("doc_id"))
-  }
-
-  // ---- q147: copy-on-write predicate UPDATE --------------------------------
-
-  /** q147's store: documents z-clustered, then a band UPDATE (re-tag the
-    * language, bump the char count) — the in-place-correction pass
-    * (PII re-tagging, quality re-scores) a training-data store serves. */
-  private val updStores = scala.collection.mutable.Map.empty[String, String]
-
-  private def updStoreFor(s: SparkSession, d: String): String =
-    synchronized {
-      updStores.getOrElseUpdate(d, {
-        val dir = Files.createTempDirectory("graft-zupdate").toString
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), col("n_chars"))
-        writeZOrdered(docs, dir, Seq("doc_id", "n_chars"), 4)
-        val b = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
-        val (mn, mx) = (b.getLong(0), b.getLong(1))
-        val n = updateZRange(s, dir,
-          Seq(("doc_id", mn + (mx - mn) * 2 / 10, mn + (mx - mn) * 3 / 10)),
-          Map("lang" -> "'upd'", "n_chars" -> "n_chars + 1000"),
-          Seq("doc_id", "n_chars"))
-        require(n > 0, "q147 store: the band update updated nothing")
-        dir
-      })
-    }
-
-  /** q147: predicate UPDATE — rewrite a doc_id band's lang/n_chars
-    * copy-on-write ([[updateZRange]]): stats prune the rewrite to the
-    * band's files (carry-by-reference spec-pinned), SET expressions see
-    * the pre-update row. Oracle = the equivalent CASE projection over
-    * the plain table: an update that touches rows outside the band,
-    * misses rows inside it, or mangles an untouched column hash-fails. */
-  val q147ZOrderUpdate: Q = Q(
-    "q147_zorder_update",
-    """WITH b AS (SELECT MIN(doc_id) AS mn, MAX(doc_id) AS mx
-      |  FROM documents)
-      |SELECT d.doc_id,
-      |  CASE WHEN d.doc_id BETWEEN b.mn + (b.mx-b.mn)*2//10
-      |                         AND b.mn + (b.mx-b.mn)*3//10
-      |    THEN 'upd' ELSE d.lang END AS lang,
-      |  CASE WHEN d.doc_id BETWEEN b.mn + (b.mx-b.mn)*2//10
-      |                         AND b.mn + (b.mx-b.mn)*3//10
-      |    THEN d.n_chars + 1000 ELSE d.n_chars END AS n_chars
-      |FROM documents d, b ORDER BY d.doc_id""".stripMargin,
-  ) { (s, d) =>
-    readSnapshot(s, updStoreFor(s, d))
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .orderBy(col("doc_id"))
-  }
-
-  // ---- q148: the z-store as a plain Spark TABLE (DSv2 batch) ---------------
-
-  /** q148: q123's band query through the graft-z DSv2 TABLE
-    * ([[ZBatch]]) — `spark.read.format("graft-z")` + ordinary `.filter`,
-    * with the manifest skipping riding the pushed filters instead of the
-    * explicit [[readZRange]] API: the "store is a table" completion of
-    * the read surface (what lets any SQL consumer query the store).
-    * Shares q123's store (build + append + manifest compaction) and
-    * oracle, so a wire-decode bug, a filter lost in pushdown, or an
-    * unsound prune all hash-fail; the files-planned-∝-band claim is
-    * pinned in ZOrderSpec (an oracle can't see I/O). */
-  val q148ZBatchTable: Q = Q(
-    "q148_zorder_table",
-    """WITH b AS (SELECT MIN(l_partkey) AS pmn, MAX(l_partkey) AS pmx,
-      |    MIN(l_suppkey) AS smn, MAX(l_suppkey) AS smx FROM lineitem)
-      |SELECT l.l_orderkey, l.l_linenumber, l.l_partkey, l.l_suppkey,
-      |  l.l_quantity
-      |FROM lineitem l, b
-      |WHERE l.l_partkey BETWEEN b.pmn + (b.pmx-b.pmn)*2//10
-      |                      AND b.pmn + (b.pmx-b.pmn)*3//10
-      |  AND l.l_suppkey BETWEEN b.smn + (b.smx-b.smn)*4//10
-      |                      AND b.smn + (b.smx-b.smn)*5//10
-      |ORDER BY l.l_orderkey, l.l_linenumber""".stripMargin,
-  ) { (s, d) =>
-    val dir = storeFor(s, d)
-    val b = Tables.lineitem(s, d).agg(
-      min(col("l_partkey")), max(col("l_partkey")),
-      min(col("l_suppkey")), max(col("l_suppkey"))).head()
-    val (pmn, pmx, smn, smx) =
-      (b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3))
-    s.read.format("graft-z").load(dir)
-      .filter(col("l_partkey").between(
-        pmn + (pmx - pmn) * 2 / 10, pmn + (pmx - pmn) * 3 / 10) &&
-        col("l_suppkey").between(
-          smn + (smx - smn) * 4 / 10, smn + (smx - smn) * 5 / 10))
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-        col("l_suppkey"), col("l_quantity"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-  }
-
-  // ---- q149: CHECK constraints gate every write -----------------------------
-
-  /** q149's store: documents behind two CHECK constraints; a violating
-    * batch is refused WHOLESALE (nothing lands), the compliant batch
-    * lands — the ingestion-contract lifecycle (Delta's ADD CONSTRAINT +
-    * enforced writes). */
-  private val consStores = scala.collection.mutable.Map.empty[String, String]
-
-  private def consStoreFor(s: SparkSession, d: String): String =
-    synchronized {
-      consStores.getOrElseUpdate(d, {
-        val dir = Files.createTempDirectory("graft-zcons").toString
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), col("n_chars"))
-        writeZOrdered(docs.filter(col("doc_id") % 10 =!= 9), dir,
-          Seq("doc_id", "n_chars"), 4)
-        addCheckConstraint(s, dir, "chars_nonneg", "n_chars >= 0")
-        addCheckConstraint(s, dir, "doc_id_nonneg", "doc_id >= 0")
-        val bad = docs.filter(col("doc_id") % 10 === 9)
-          .withColumn("n_chars", -col("n_chars") - 1)
-        val refused =
-          try { appendZOrdered(bad, dir, Seq("doc_id", "n_chars"), 1); false }
-          catch { case e: IllegalArgumentException =>
-            e.getMessage.contains("chars_nonneg") }
-        require(refused, "q149 store: the violating batch was not refused")
-        appendZOrdered(docs.filter(col("doc_id") % 10 === 9), dir,
-          Seq("doc_id", "n_chars"), 1)
-        dir
-      })
-    }
-
-  /** q149: CHECK constraints — the write-path ingestion gate (Delta's
-    * table constraints): declared expressions validated against every
-    * incoming batch inside [[zWrite]]'s existing bounds pass (no extra
-    * scan), one violation refusing the whole batch before a byte lands.
-    * The lifecycle appends a VIOLATING batch (refused — its rows must
-    * not appear) then the compliant one; oracle = the plain full table,
-    * so a partially-landed refused batch or a lost compliant batch
-    * hash-fails. Refusal shapes, SQL UNKNOWN-passes semantics,
-    * unvalidatable-batch refusal, add-time validation, drop, and
-    * restore-vs-constraint interplay are pinned in ZOrderSpec. */
-  val q149ZOrderConstraints: Q = Q(
-    "q149_zorder_constraints",
-    "SELECT doc_id, lang, n_chars FROM documents ORDER BY doc_id",
-  ) { (s, d) =>
-    readSnapshot(s, consStoreFor(s, d))
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .orderBy(col("doc_id"))
-  }
-
-  // ---- q150: DataFrame-API round trip through the graft-z table ------------
-
-  /** q150's store: the build slice lands programmatically, the rest
-    * arrives through the PUBLIC TABLE WRITE surface
-    * (`df.write.format("graft-z").mode("append")`) under an
-    * exactly-once tag — replayed immediately to prove the tag dedups
-    * through the API path too. */
-  private val apiStores = scala.collection.mutable.Map.empty[String, String]
-
-  private def apiStoreFor(s: SparkSession, d: String): String =
-    synchronized {
-      apiStores.getOrElseUpdate(d, {
-        val dir = Files.createTempDirectory("graft-zapi").toString
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), col("n_chars"))
-        writeZOrdered(docs.filter(col("doc_id") % 10 =!= 9), dir,
-          Seq("doc_id", "n_chars"), 4)
-        def apiAppend(): Unit = docs.filter(col("doc_id") % 10 === 9)
-          .write.format("graft-z")
-          .option("zcols", "doc_id,n_chars")
-          .option("numFiles", "1")
-          .option("tag", "api-b1")
-          .mode("append").save(dir)
-        apiAppend()
-        apiAppend() // at-least-once redelivery: the tag makes it a no-op
-        dir
-      })
-    }
-
-  /** q150: the full DataFrame-API round trip — rows written through
-    * `df.write.format("graft-z")` (the V1-insert bridge onto the
-    * tag-deduped OCC append) and read back through
-    * `spark.read.format("graft-z")` with an ordinary band filter doing
-    * manifest skipping; the lifecycle REPLAYS the API append to prove
-    * exactly-once holds through the public surface. Oracle = the plain
-    * band filter over the full table (a lost or doubled API batch
-    * hash-fails because the band straddles both slices). */
-  val q150ZBatchWrite: Q = Q(
-    "q150_zorder_table_write",
-    """WITH b AS (SELECT MIN(doc_id) AS mn, MAX(doc_id) AS mx
-      |  FROM documents)
-      |SELECT d.doc_id, d.lang, d.n_chars FROM documents d, b
-      |WHERE d.doc_id BETWEEN b.mn + (b.mx-b.mn)*1//10
-      |                   AND b.mn + (b.mx-b.mn)*4//10
-      |ORDER BY d.doc_id""".stripMargin,
-  ) { (s, d) =>
-    val dir = apiStoreFor(s, d)
-    val b = Tables.documents(s, d)
-      .agg(min(col("doc_id")), max(col("doc_id"))).head()
-    val (mn, mx) = (b.getLong(0), b.getLong(1))
-    s.read.format("graft-z").load(dir)
-      .filter(col("doc_id").between(
-        mn + (mx - mn) * 1 / 10, mn + (mx - mn) * 4 / 10))
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .orderBy(col("doc_id"))
-  }
-
-  // ---- q151: CREATE-on-write — the store born through the table surface ----
-
-  /** q151's store: NEVER touched by the programmatic API — created by
-    * `df.write.format("graft-z").option("zcols", …).mode("append")` on a
-    * fresh directory (the bootstrap append under an exactly-once tag,
-    * replayed immediately to prove create-time dedup), then grown by a
-    * second tagged API append. */
-  private val createStores = scala.collection.mutable.Map.empty[String, String]
-
-  private def createStoreFor(s: SparkSession, d: String): String =
-    synchronized {
-      createStores.getOrElseUpdate(d, {
-        val dir =
-          Files.createTempDirectory("graft-zcreateq").toString + "/store"
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), col("n_chars"))
-        def put(slice: DataFrame, tag: String): Unit =
-          slice.write.format("graft-z")
-            .option("zcols", "doc_id,n_chars")
-            .option("numFiles", "4")
-            .option("tag", tag)
-            .mode("append").save(dir)
-        put(docs.filter(col("doc_id") % 10 =!= 9), "create-b0") // CREATES
-        put(docs.filter(col("doc_id") % 10 =!= 9), "create-b0") // replay no-op
-        put(docs.filter(col("doc_id") % 10 === 9), "create-b1")
-        dir
-      })
-    }
-
-  /** q151: CREATE-on-write through the table surface (the r11 verdict's
-    * top missing item — the first thing a SQL-surface user does with a
-    * table format is create a table with it): a fresh directory becomes
-    * a z-store purely via `df.write.format("graft-z")`, exactly-once
-    * under create-time replay, then serves ordinary pruned reads.
-    * Oracle = the plain full table, so a doubled create batch, a lost
-    * append, or a mis-clustered decode all hash-fail; the
-    * refusal shapes (read of a missing store, write without zcols) are
-    * pinned in ZOrderSpec. */
-  val q151ZBatchCreate: Q = Q(
-    "q151_zorder_table_create",
-    "SELECT doc_id, lang, n_chars FROM documents ORDER BY doc_id",
-  ) { (s, d) =>
-    // read back through the TABLE surface too: the whole q151 lifecycle
-    // never touches the programmatic API
-    s.read.format("graft-z").load(createStoreFor(s, d))
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .orderBy(col("doc_id"))
-  }
-
-  // ---- q152: streaming ingest through the NATIVE graft-z sink --------------
-
-  /** q152's store: q132's stream (documents over graft-shards, explicit
-    * routing, two rate-limited micro-batches) written through
-    * `writeStream.format("graft-z")` — the NATIVE sink, no foreachBatch
-    * loop — then the whole bounded stream REPLAYED from a fresh
-    * checkpoint under the same `tagPrefix` to prove the sink's
-    * cross-checkpoint exactly-once through the public surface. */
-  private val sinkStores = scala.collection.mutable.Map.empty[String, String]
-
-  private def sinkStoreFor(s: SparkSession, d: String): String =
-    synchronized {
-      sinkStores.getOrElseUpdate(d, {
-        val root = Files.createTempDirectory("graft-zsinkq").toString
-        val store = s"$root/store"
-        val (docs, _) = StoreMaint.shardStream(s,
-          GraftShards.documentsShards(s, d), GraftShards.DocWire)
-        def run(ckpt: String): Unit = {
-          val q = docs
-            .select(col("doc_id"),
-              length(col("text")).cast("long").as("k1"),
-              pmod(col("doc_id"), lit(997L)).as("k2"))
-            .writeStream.format("graft-z")
-            .option("zcols", "k1,k2").option("numFiles", "2")
-            .option("tagPrefix", "q152")
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start(store)
-          q.awaitTermination()
-        }
-        run(s"$root/ckpt1")
-        run(s"$root/ckpt2") // full from-scratch replay: tags dedupe
-        root
-      })
-    }
-
-  /** q152: continuous ingest through the NATIVE streaming sink — q132's
-    * pipeline with `writeStream.format("graft-z")` in place of the
-    * foreachBatch loop (the r11 verdict's item 4: the table surface's
-    * streaming symmetry). Each micro-batch is one tagged OCC append; the
-    * lifecycle replays the whole bounded stream from a FRESH checkpoint
-    * under the same tagPrefix, so a doubled batch hash-fails against the
-    * exact oracle (the standing k1-band over the final store, whose
-    * counts double on any re-land). Checkpoint-restart and refusal
-    * shapes are pinned in ZOrderSpec. */
-  val q152ZStreamSink: Q = Q(
-    "q152_zorder_stream_sink",
-    """WITH b0 AS (SELECT MIN(LENGTH(text)) AS mn, MAX(LENGTH(text)) AS mx
-      |  FROM documents)
-      |SELECT d.doc_id, LENGTH(d.text) AS k1, d.doc_id % 997 AS k2
-      |FROM documents d, b0
-      |WHERE LENGTH(d.text) BETWEEN b0.mn + (b0.mx - b0.mn) * 3 // 10
-      |                         AND b0.mn + (b0.mx - b0.mn) * 7 // 10
-      |ORDER BY d.doc_id""".stripMargin,
-  ) { (s, d) =>
-    val root = sinkStoreFor(s, d)
-    val b = Tables.documents(s, d)
-      .agg(min(length(col("text"))), max(length(col("text")))).head()
-    val (mn, mx) = (b.getInt(0).toLong, b.getInt(1).toLong)
-    s.read.format("graft-z").load(s"$root/store")
-      .filter(col("k1").between(
-        mn + (mx - mn) * 3 / 10, mn + (mx - mn) * 7 / 10))
-      .select(col("doc_id"), col("k1"), col("k2"))
-      .orderBy(col("doc_id"))
-  }
-
-  // ---- q153: metadata-answered aggregates through the TABLE surface --------
-
-  /** q153: ungrouped COUNT(*)/MIN/MAX through `spark.read.format
-    * ("graft-z")` — the q139/q144 metadata plane wired into the DSv2
-    * scan as a COMPLETE aggregate pushdown ([[ZBatchAggScan]]), so any
-    * SQL consumer's `SELECT COUNT(*) …` opens no data files (Delta's
-    * stats-answered fast path). Shares q123's store (build + appends +
-    * manifest compaction); exact oracle = the same aggregates over the
-    * source table, so a count row lost/doubled in any manifest rewrite,
-    * or a stats bound that isn't an attained value, hash-fails. The
-    * files-never-opened claim is pinned in ZOrderSpec by physically
-    * deleting a data file (an oracle can't see I/O). */
-  val q153ZBatchAgg: Q = Q(
-    "q153_zorder_table_agg",
-    """SELECT COUNT(*) AS n,
-      |  MIN(l_partkey) AS mn_pk, MAX(l_partkey) AS mx_pk,
-      |  MIN(l_suppkey) AS mn_sk, MAX(l_suppkey) AS mx_sk
-      |FROM lineitem""".stripMargin,
-  ) { (s, d) =>
-    s.read.format("graft-z").load(storeFor(s, d))
-      .agg(count(lit(1)).as("n"),
-        min(col("l_partkey")).as("mn_pk"), max(col("l_partkey")).as("mx_pk"),
-        min(col("l_suppkey")).as("mn_sk"), max(col("l_suppkey")).as("mx_sk"))
-  }
-
-  // ---- q154: the full SQL DML lifecycle (UPDATE / MERGE INTO / DELETE) -----
-
-  /** q154's store: built and mutated ENTIRELY in SQL through the
-    * catalog — CREATE TABLE, INSERT INTO, a banded UPDATE, a MERGE INTO
-    * with matched updates + not-matched inserts, and an OR-shaped DELETE
-    * (the shape the exact-band conversion refuses, exercising the
-    * group-based copy-on-write row-level operation end to end). Returns
-    * (catalogName, storeDir). */
-  private val sqlDmlStores =
-    scala.collection.mutable.Map.empty[String, (String, String)]
-
-  private def sqlDmlStoreFor(s: SparkSession, d: String): (String, String) =
-    synchronized {
-      sqlDmlStores.getOrElseUpdate(d, {
-        val root = Files.createTempDirectory("graft-zsqldml").toString
-        // one catalog NAME per sf dir: Spark caches catalog instances by
-        // name, so a name may never be re-rooted within a session
-        val cat = s"graftq154c${math.abs(d.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.ZCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), col("n_chars"))
-        docs.createOrReplaceTempView("q154_base")
-        s.sql(s"CREATE NAMESPACE $cat.lake")
-        s.sql(s"""CREATE TABLE $cat.lake.docs
-          (doc_id BIGINT, lang STRING, n_chars BIGINT)
-          PARTITIONED BY (doc_id, n_chars)""")
-        s.sql(s"INSERT INTO $cat.lake.docs SELECT * FROM q154_base")
-        // banded UPDATE (bounds folded driver-side, q147's band)
-        val b = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
-        val (mn, mx) = (b.getLong(0), b.getLong(1))
-        val (lo, hi) = (mn + (mx - mn) * 2 / 10, mn + (mx - mn) * 3 / 10)
-        s.sql(s"""UPDATE $cat.lake.docs
-          SET lang = 'upd', n_chars = n_chars + 1000
-          WHERE doc_id BETWEEN $lo AND $hi""")
-        // MERGE: every %10==7 doc re-scores (from its PRE-update chars,
-        // the source is the base table); every %100==3 doc inserts a
-        // 'new' twin at doc_id + 10^9
-        s.sql("""SELECT doc_id, 'mrg' AS lang, n_chars * 2 AS n_chars
-          FROM q154_base WHERE doc_id % 10 = 7
-          UNION ALL
-          SELECT doc_id + 1000000000 AS doc_id, 'new' AS lang,
-            42L AS n_chars
-          FROM q154_base WHERE doc_id % 100 = 3""")
-          .createOrReplaceTempView("q154_src")
-        s.sql(s"""MERGE INTO $cat.lake.docs t USING q154_src u
-          ON t.doc_id = u.doc_id
-          WHEN MATCHED THEN UPDATE SET lang = u.lang, n_chars = u.n_chars
-          WHEN NOT MATCHED THEN INSERT (doc_id, lang, n_chars)
-            VALUES (u.doc_id, u.lang, u.n_chars)""")
-        // an OR/modulo DELETE: not expressible as closed bands, so it
-        // exercises the group-based row-level path (not deleteWhere)
-        s.sql(s"""DELETE FROM $cat.lake.docs
-          WHERE lang = 'new' AND doc_id % 2 = 1""")
-        (cat, s"$root/lake/docs")
-      })
-    }
-
-  /** q154: SQL row-level DML end to end — `UPDATE`, `MERGE INTO` (matched
-    * update + not-matched insert) and a non-band `DELETE` driven through
-    * the catalog in pure SQL (Spark 4's `SupportsRowLevelOperations`
-    * group-based protocol → [[ZRowLevelOperation]]), then the final
-    * state read back through the same table. Oracle = the identical DML
-    * algebra over the plain table (CASE for the update, LEFT JOIN +
-    * anti-semijoin for the merge, a NOT filter for the delete): a row
-    * updated outside the band, a merge that drops/doubles a row, a
-    * delete that over- or under-shoots — any of it hash-fails. */
-  val q154ZOrderSqlDml: Q = Q(
-    "q154_zorder_sql_dml",
-    """WITH b AS (SELECT MIN(doc_id) AS mn, MAX(doc_id) AS mx
-      |    FROM documents),
-      |  upd AS (
-      |    SELECT d.doc_id,
-      |      CASE WHEN d.doc_id BETWEEN b.mn + (b.mx-b.mn)*2//10
-      |                             AND b.mn + (b.mx-b.mn)*3//10
-      |        THEN 'upd' ELSE d.lang END AS lang,
-      |      CASE WHEN d.doc_id BETWEEN b.mn + (b.mx-b.mn)*2//10
-      |                             AND b.mn + (b.mx-b.mn)*3//10
-      |        THEN d.n_chars + 1000 ELSE d.n_chars END AS n_chars
-      |    FROM documents d, b),
-      |  src AS (
-      |    SELECT doc_id, 'mrg' AS lang, n_chars * 2 AS n_chars
-      |    FROM documents WHERE doc_id % 10 = 7
-      |    UNION ALL
-      |    SELECT doc_id + 1000000000 AS doc_id, 'new' AS lang,
-      |      42 AS n_chars
-      |    FROM documents WHERE doc_id % 100 = 3),
-      |  merged AS (
-      |    SELECT u.doc_id, COALESCE(s.lang, u.lang) AS lang,
-      |      COALESCE(s.n_chars, u.n_chars) AS n_chars
-      |    FROM upd u LEFT JOIN src s ON u.doc_id = s.doc_id
-      |    UNION ALL
-      |    SELECT s.doc_id, s.lang, s.n_chars FROM src s
-      |    WHERE s.doc_id NOT IN (SELECT doc_id FROM upd))
-      |SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
-      |FROM merged
-      |WHERE NOT (lang = 'new' AND doc_id % 2 = 1)
-      |ORDER BY doc_id""".stripMargin,
-  ) { (s, d) =>
-    val (cat, _) = sqlDmlStoreFor(s, d)
-    s.sql(s"""SELECT doc_id, lang, n_chars FROM $cat.lake.docs
-      ORDER BY doc_id""")
-  }
-
-  /** q155: STREAMING read of the catalog table —
-    * `spark.readStream.table("<cat>.lake.docs")` tails q154's post-DML
-    * store through the TABLE surface (the r12 verdict's item 4: no
-    * format("graft-zcdf")+path switch), projecting the zcdf wire's
-    * commit coordinates away so the stream's schema IS the table's.
-    * A bounded AvailableNow run over the settled store must reproduce
-    * the exact final state — oracle = q154's (the stream's current
-    * epoch v0 carries the whole post-DML table). Incremental tailing
-    * and the epoch-rewrite refusal through the table name are pinned in
-    * ZOrderSpec (an oracle can't see offsets). */
-  val q155ZTableStream: Q = Q(
-    "q155_zorder_table_stream",
-    """WITH b AS (SELECT MIN(doc_id) AS mn, MAX(doc_id) AS mx
-      |    FROM documents),
-      |  upd AS (
-      |    SELECT d.doc_id,
-      |      CASE WHEN d.doc_id BETWEEN b.mn + (b.mx-b.mn)*2//10
-      |                             AND b.mn + (b.mx-b.mn)*3//10
-      |        THEN 'upd' ELSE d.lang END AS lang,
-      |      CASE WHEN d.doc_id BETWEEN b.mn + (b.mx-b.mn)*2//10
-      |                             AND b.mn + (b.mx-b.mn)*3//10
-      |        THEN d.n_chars + 1000 ELSE d.n_chars END AS n_chars
-      |    FROM documents d, b),
-      |  src AS (
-      |    SELECT doc_id, 'mrg' AS lang, n_chars * 2 AS n_chars
-      |    FROM documents WHERE doc_id % 10 = 7
-      |    UNION ALL
-      |    SELECT doc_id + 1000000000 AS doc_id, 'new' AS lang,
-      |      42 AS n_chars
-      |    FROM documents WHERE doc_id % 100 = 3),
-      |  merged AS (
-      |    SELECT u.doc_id, COALESCE(s.lang, u.lang) AS lang,
-      |      COALESCE(s.n_chars, u.n_chars) AS n_chars
-      |    FROM upd u LEFT JOIN src s ON u.doc_id = s.doc_id
-      |    UNION ALL
-      |    SELECT s.doc_id, s.lang, s.n_chars FROM src s
-      |    WHERE s.doc_id NOT IN (SELECT doc_id FROM upd))
-      |SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
-      |FROM merged
-      |WHERE NOT (lang = 'new' AND doc_id % 2 = 1)
-      |ORDER BY doc_id""".stripMargin,
-  ) { (s, d) =>
-    val (cat, _) = sqlDmlStoreFor(s, d)
-    val out = Files.createTempDirectory("graft-ztblstream").toString
-    val q = s.readStream.table(s"$cat.lake.docs")
-      .writeStream.format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.parquet(s"$out/data")
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .orderBy(col("doc_id"))
-  }
-
-  // ---- q156: streaming write through the TABLE (writeStream.toTable) -------
-
-  /** q156's table: q152's bounded stream written through
-    * `writeStream…toTable("<cat>.lake.sunk")` — the DSv2 StreamingWrite
-    * twin of the path-based sink ([[ZStreamingWrite]]): per-task parquet
-    * staging + ONE tagged OCC append per epoch, clustering keys resolved
-    * from the TABLE's recorded policy (no zcols option anywhere). The
-    * whole stream then REPLAYS from a fresh checkpoint under the same
-    * tagPrefix to prove cross-checkpoint exactly-once through the
-    * table-name surface. */
-  private val toTableStores = scala.collection.mutable.Map.empty[String, String]
-
-  private def toTableStoreFor(s: SparkSession, d: String): String =
-    synchronized {
-      toTableStores.getOrElseUpdate(d, {
-        val root = Files.createTempDirectory("graft-ztotableq").toString
-        val cat = "graftq156c" + math.abs(d.hashCode).toString
-        s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.ZCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE NAMESPACE $cat.lake")
-        s.sql(s"""CREATE TABLE $cat.lake.sunk
-          (doc_id BIGINT, k1 BIGINT, k2 BIGINT) PARTITIONED BY (k1, k2)""")
-        val (docs, _) = StoreMaint.shardStream(s,
-          GraftShards.documentsShards(s, d), GraftShards.DocWire)
-        def run(ckpt: String): Unit = {
-          val q = docs
-            .select(col("doc_id"),
-              length(col("text")).cast("long").as("k1"),
-              pmod(col("doc_id"), lit(997L)).as("k2"))
-            .writeStream
-            .option("tagPrefix", "q156").option("numFiles", "2")
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .toTable(s"$cat.lake.sunk")
-          q.awaitTermination()
-        }
-        run(s"$root/ckpt1")
-        run(s"$root/ckpt2") // full from-scratch replay: tags dedupe
-        cat
-      })
-    }
-
-  /** q156: continuous ingest through `writeStream.toTable` — the
-    * table-name twin of q152 (one table, ALL verbs including the
-    * streaming write): the DSv2 StreamingWrite stages per task and the
-    * driver commits one tagged lock-free append per epoch; the
-    * clustering comes from the table's RECORDED policy, the replay from
-    * a fresh checkpoint proves tag-deduped exactly-once, and the read
-    * back is plain SQL through the same table name (a doubled epoch or
-    * a mis-clustered append hash-fails against the band oracle).
-    * Restart, staging hygiene and output-mode refusal are pinned in
-    * ZOrderSpec. */
-  val q156ZTableStreamWrite: Q = Q(
-    "q156_zorder_table_stream_write",
-    """WITH b0 AS (SELECT MIN(LENGTH(text)) AS mn, MAX(LENGTH(text)) AS mx
-      |  FROM documents)
-      |SELECT d.doc_id, LENGTH(d.text) AS k1, d.doc_id % 997 AS k2
-      |FROM documents d, b0
-      |WHERE LENGTH(d.text) BETWEEN b0.mn + (b0.mx - b0.mn) * 4 // 10
-      |                         AND b0.mn + (b0.mx - b0.mn) * 8 // 10
-      |ORDER BY d.doc_id""".stripMargin,
-  ) { (s, d) =>
-    val cat = toTableStoreFor(s, d)
-    val b = Tables.documents(s, d)
-      .agg(min(length(col("text"))), max(length(col("text")))).head()
-    val (mn, mx) = (b.getInt(0).toLong, b.getInt(1).toLong)
-    s.sql(s"""SELECT doc_id, k1, k2 FROM $cat.lake.sunk
-      WHERE k1 BETWEEN ${mn + (mx - mn) * 4 / 10}
-                   AND ${mn + (mx - mn) * 8 / 10}
-      ORDER BY doc_id""")
-  }
-
-  // ---- q157: batch CHANGE FEED through the table surface -------------------
-
-  /** q157: q136's change feed driven through the TABLE surface —
-    * `spark.read.format("graft-z").option("changesSinceEpoch", …)
-    * .option("changesSinceVersion", …)` (Delta's `readChangeFeed` as a
-    * read option, working identically through the catalog table name):
-    * the scan plans exactly the delta's files
-    * ([[changeFilesSized]]) under the table's own schema. Shares q136's
-    * store and oracle — a delta that leaks base rows, misses appended
-    * rows, or double-counts a file hash-fails; the refusal shapes
-    * (epoch swap, bogus base, travel/changes combination) are pinned in
-    * ZBatchPlanSpec. */
-  val q157ZTableChanges: Q = Q(
-    "q157_zorder_table_changes",
-    """SELECT doc_id, lang, n_chars FROM documents
-      |WHERE doc_id % 10 = 9 ORDER BY doc_id""".stripMargin,
-  ) { (s, d) =>
-    s.read.format("graft-z")
-      .option("changesSinceEpoch", "0").option("changesSinceVersion", "0")
-      .load(cdfStoreFor(s, d))
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .orderBy(col("doc_id"))
-  }
-
-  // ---- q158: conditional overwrite (replaceWhere) through the table --------
-
-  /** q158's table: documents behind the catalog, then the [20%, 30%]
-    * doc_id band REPLACED in one atomic commit by a corrected slice
-    * (`df.writeTo(t).overwrite(cond)` → [[overwriteZRange]]) that keeps
-    * only even doc_ids, re-scored — a replacement that both deletes and
-    * transforms, so delete-only or update-only bugs can't pass. */
-  private val replStores =
-    scala.collection.mutable.Map.empty[String, (String, String)]
-
-  private def replStoreFor(s: SparkSession, d: String): (String, String) =
-    synchronized {
-      replStores.getOrElseUpdate(d, {
-        val root = Files.createTempDirectory("graft-zreplw").toString
-        // one catalog NAME per sf dir (Spark caches catalogs by name)
-        val cat = s"graftq158c${math.abs(d.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.ZCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), col("n_chars"))
-        s.sql(s"CREATE NAMESPACE $cat.lake")
-        s.sql(s"""CREATE TABLE $cat.lake.docs
-          (doc_id BIGINT, lang STRING, n_chars BIGINT)
-          PARTITIONED BY (doc_id, n_chars)""")
-        docs.writeTo(s"$cat.lake.docs").append()
-        val b = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
-        val (mn, mx) = (b.getLong(0), b.getLong(1))
-        val (lo, hi) = (mn + (mx - mn) * 2 / 10, mn + (mx - mn) * 3 / 10)
-        val corrected = docs
-          .filter(col("doc_id").between(lo, hi) && col("doc_id") % 2 === 0)
-          .withColumn("lang", lit("rw"))
-          .withColumn("n_chars", col("n_chars") + 5000)
-        corrected.writeTo(s"$cat.lake.docs")
-          .overwrite(col("doc_id") >= lo && col("doc_id") <= hi)
-        (cat, s"$root/lake/docs")
-      })
-    }
-
-  /** q158: `replaceWhere` — the idempotent-backfill verb (Delta's
-    * conditional `INSERT OVERWRITE`): one atomic epoch commit deletes
-    * the band and lands the corrected slice in its place
-    * ([[overwriteZRange]] via `SupportsOverwrite` on the table's write
-    * builder). Oracle = outside-the-band ∪ the corrected slice: a
-    * non-atomic delete+append pair that lost either half, a replacement
-    * leaking outside the band, or a surviving stale band row all
-    * hash-fail. Atomicity, the outside-band refusal, staging hygiene
-    * and the no-store create path are pinned in ZBatchPlanSpec. */
-  val q158ZTableReplaceWhere: Q = Q(
-    "q158_zorder_replace_where",
-    """WITH b AS (SELECT MIN(doc_id) AS mn, MAX(doc_id) AS mx
-      |  FROM documents)
-      |SELECT d.doc_id, d.lang, d.n_chars FROM documents d, b
-      |WHERE d.doc_id < b.mn + (b.mx-b.mn)*2//10
-      |   OR d.doc_id > b.mn + (b.mx-b.mn)*3//10
-      |UNION ALL
-      |SELECT d.doc_id, 'rw' AS lang, d.n_chars + 5000 AS n_chars
-      |FROM documents d, b
-      |WHERE d.doc_id BETWEEN b.mn + (b.mx-b.mn)*2//10
-      |                   AND b.mn + (b.mx-b.mn)*3//10
-      |  AND d.doc_id % 2 = 0
-      |ORDER BY doc_id""".stripMargin,
-  ) { (s, d) =>
-    val (cat, _) = replStoreFor(s, d)
-    s.sql(s"SELECT doc_id, lang, n_chars FROM $cat.lake.docs " +
-      "ORDER BY doc_id")
-  }
-
-  // ---- q159: join-driven dynamic file pruning (DSv2 runtime filtering) -----
-
-  /** q159: a selective dim join against the z-table — Spark's dynamic
-    * partition pruning over the DSv2 scan (`SupportsRuntimeV2Filtering`
-    * → [[pruneFilesForValueSet]]): the dim side's distinct join keys
-    * reach the scan at runtime and drop every fact file whose recorded
-    * l_partkey range (and bloom, where present) provably holds none of
-    * them — the 100 TB star-join shape where the static plan can't
-    * prune (the filter is on the OTHER table). The new reported
-    * statistics ([[fileRowCounts]]) are what let Catalyst broadcast the
-    * dim. Oracle = the plain join; files-planned shrinkage and the
-    * deleted-file no-open proof are pinned in ZBatchPlanSpec. */
-  val q159ZTableRuntimePrune: Q = Q(
-    "q159_zorder_runtime_prune",
-    """SELECT p.p_partkey,
-      |  CAST(COUNT(*) AS BIGINT) AS n_items,
-      |  CAST(SUM(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-      |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-      |WHERE p.p_partkey % 97 = 0
-      |GROUP BY p.p_partkey ORDER BY p.p_partkey""".stripMargin,
-  ) { (s, d) =>
-    val dim = Tables.part(s, d).filter(col("p_partkey") % 97 === 0)
-      .select(col("p_partkey"))
-    val fact = s.read.format("graft-z").load(storeFor(s, d))
-    fact.join(dim, fact("l_partkey") === dim("p_partkey"))
-      .groupBy(col("p_partkey"))
-      .agg(count(lit(1)).as("n_items"),
-        sum(col("l_quantity").cast("long")).as("sum_qty"))
-      .orderBy(col("p_partkey"))
-  }
-
-  /** q160's store: documents built (e0 v0) + one append (e0 v1), then a
-    * band UPDATE (e1) and a CDC MERGE (band of whole-row updates +
-    * beyond-max inserts, e2) — three row-delta commits the change feed
-    * must cross. Bands are DISJOINT (update 2-3/10, merge 5-6/10 of the
-    * id range) so the oracle's pre/postimages are pure functions of the
-    * base table. */
-  private val dmlCdfStores =
-    scala.collection.mutable.Map.empty[String, (String, String)]
-
-  private def dmlCdfStoreFor(s: SparkSession, d: String): String =
-    dmlCdfCatStoreFor(s, d)._2
-
-  /** (catalog name, store dir) of the q160/q162/q164 store. */
-  private def dmlCdfCatStoreFor(s: SparkSession,
-      d: String): (String, String) =
-    synchronized {
-      dmlCdfStores.getOrElseUpdate(d, {
-        // the store lives catalog-shaped so the LAST epoch can be a SQL
-        // UPDATE through the group-based row-level op (r15: its change
-        // set pairs keyed pre/postimages on the hidden row identity —
-        // exactly what the extended oracle hash-checks)
-        val root = Files.createTempDirectory("graft-zdmlcdf").toString
-        val cat = s"graftq160c${math.abs(root.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.ZCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE NAMESPACE $cat.lake")
-        val dir = s"$root/lake/docs"
-        setChangeFeedEnabled(s, dir, on = true) // the Delta CDF opt-in
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), col("n_chars"))
-        writeZOrdered(docs.filter(col("doc_id") % 10 =!= 9), dir,
-          Seq("n_chars", "doc_id"), 8)
-        appendZOrdered(docs.filter(col("doc_id") % 10 === 9), dir,
-          Seq("n_chars", "doc_id"), 2)
-        val b = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
-        val (dmn, dmx) = (b.getLong(0), b.getLong(1))
-        updateZRange(s, dir,
-          Seq(("doc_id", dmn + (dmx - dmn) * 2 / 10,
-            dmn + (dmx - dmn) * 3 / 10)),
-          Map("n_chars" -> "n_chars + 1000"), Seq("n_chars", "doc_id"))
-        val (mlo, mhi) =
-          (dmn + (dmx - dmn) * 5 / 10, dmn + (dmx - dmn) * 6 / 10)
-        val upd = docs.filter(col("doc_id").between(mlo, mhi))
-          .withColumn("n_chars", col("n_chars") + lit(7L))
-        val ins = docs.filter(col("doc_id") % 7 === 0)
-          .withColumn("doc_id", col("doc_id") + lit(dmx + 1))
-        mergeByKey(s, dir, upd.unionByName(ins), "doc_id",
-          Seq("n_chars", "doc_id"), 4)
-        // epoch 4: SQL UPDATE on a band disjoint from every prior one
-        // (and below the merge's inserted ids) — keyed pre/postimages
-        val (slo, shi) =
-          (dmn + (dmx - dmn) * 7 / 10, dmn + (dmx - dmn) * 8 / 10)
-        s.sql(s"""UPDATE $cat.lake.docs SET n_chars = n_chars - 3
-          WHERE doc_id BETWEEN $slo AND $shi""")
-        (cat, dir)
-      })
-    }
-
-  /** q160: ROW-LEVEL CHANGE FEED ACROSS DML — the r13 verdict's top
-    * item: [[readChangeFeed]] spans an append, a band UPDATE and a CDC
-    * MERGE as Delta-style `_change_type` rows (insert /
-    * update_preimage / update_postimage) instead of refusing
-    * full-refresh at the first epoch rewrite. Oracle = the ALGEBRAIC
-    * change set as pure SQL over the base table (the bands are disjoint
-    * functions of the id range), so a missed delta, a phantom change, a
-    * pre/postimage with the wrong values, or a change attributed to the
-    * wrong commit coordinate all hash-fail. The refusal contract for
-    * no-row-delta rewrites (optimize/recluster), the raced-append
-    * exactly-once interplay, and the IVM consumption across a DML
-    * commit are pinned in ZOrderSpec/StreamingSpec. */
-  val q160ZOrderDmlCdf: Q = Q(
-    "q160_zorder_dml_cdf",
-    """WITH b AS (SELECT MIN(doc_id) AS dmn, MAX(doc_id) AS dmx
-      |  FROM documents),
-      |d AS (SELECT doc_id, lang, n_chars FROM documents)
-      |SELECT * FROM (
-      |  SELECT doc_id, lang, n_chars, 'insert' AS change_type,
-      |    CAST(0 AS BIGINT) AS commit_epoch,
-      |    CAST(1 AS BIGINT) AS commit_version
-      |  FROM d WHERE doc_id % 10 = 9
-      |  UNION ALL
-      |  SELECT doc_id, lang, n_chars, 'update_preimage', 1, 0
-      |  FROM d, b WHERE doc_id BETWEEN b.dmn + (b.dmx-b.dmn)*2//10
-      |                             AND b.dmn + (b.dmx-b.dmn)*3//10
-      |  UNION ALL
-      |  SELECT doc_id, lang, n_chars + 1000, 'update_postimage', 1, 0
-      |  FROM d, b WHERE doc_id BETWEEN b.dmn + (b.dmx-b.dmn)*2//10
-      |                             AND b.dmn + (b.dmx-b.dmn)*3//10
-      |  UNION ALL
-      |  SELECT doc_id, lang, n_chars, 'update_preimage', 2, 0
-      |  FROM d, b WHERE doc_id BETWEEN b.dmn + (b.dmx-b.dmn)*5//10
-      |                             AND b.dmn + (b.dmx-b.dmn)*6//10
-      |  UNION ALL
-      |  SELECT doc_id, lang, n_chars + 7, 'update_postimage', 2, 0
-      |  FROM d, b WHERE doc_id BETWEEN b.dmn + (b.dmx-b.dmn)*5//10
-      |                             AND b.dmn + (b.dmx-b.dmn)*6//10
-      |  UNION ALL
-      |  SELECT doc_id + b.dmx + 1, lang, n_chars, 'insert', 2, 0
-      |  FROM d, b WHERE doc_id % 7 = 0
-      |  UNION ALL
-      |  SELECT doc_id, lang, n_chars, 'update_preimage', 3, 0
-      |  FROM d, b WHERE doc_id BETWEEN b.dmn + (b.dmx-b.dmn)*7//10
-      |                             AND b.dmn + (b.dmx-b.dmn)*8//10
-      |  UNION ALL
-      |  SELECT doc_id, lang, n_chars - 3, 'update_postimage', 3, 0
-      |  FROM d, b WHERE doc_id BETWEEN b.dmn + (b.dmx-b.dmn)*7//10
-      |                             AND b.dmn + (b.dmx-b.dmn)*8//10
-      |)
-      |ORDER BY commit_epoch, commit_version, change_type, doc_id""".stripMargin,
-  ) { (s, d) =>
-    readChangeFeed(s, dmlCdfStoreFor(s, d), 0, 0)
-      .select(col("doc_id"), col("lang"), col("n_chars"),
-        col(ChangeTypeCol).as("change_type"),
-        col(CommitEpochCol).as("commit_epoch"),
-        col(CommitVersionCol).as("commit_version"))
-      .orderBy(col("commit_epoch"), col("commit_version"),
-        col("change_type"), col("doc_id"))
-  }
-
-  /** q161's catalog: lineitem and orders as z-tables BUCKETED the same
-    * way — `PARTITIONED BY (bucket(16, orderkey))` — with lineitem
-    * landed in two appends (multi-file buckets). One catalog per
-    * dataset dir; names are path-keyed because Spark caches catalog
-    * instances by name (the q154 discipline). */
-  private val spjCats = scala.collection.mutable.Map.empty[String, String]
-
-  private def spjCatalogFor(s: SparkSession, d: String): String =
-    synchronized {
-      spjCats.getOrElseUpdate(d, {
-        val root = Files.createTempDirectory("graft-zspj").toString
-        val cat = "graftq161c" + math.abs(d.hashCode).toString
-        s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.ZCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.root", root)
-        s.sql(s"CREATE NAMESPACE $cat.lake")
-        s.sql(s"""CREATE TABLE $cat.lake.li (k BIGINT, qty BIGINT)
-          PARTITIONED BY (bucket(16, k))""")
-        s.sql(s"""CREATE TABLE $cat.lake.ord (k BIGINT, ck BIGINT)
-          PARTITIONED BY (bucket(16, k))""")
-        val li = Tables.lineitem(s, d).select(
-          col("l_orderkey").as("k"),
-          col("l_quantity").cast("long").as("qty"))
-        li.filter(col("k") % 4 =!= 0).writeTo(s"$cat.lake.li").append()
-        li.filter(col("k") % 4 === 0).writeTo(s"$cat.lake.li").append()
-        Tables.orders(s, d).select(col("o_orderkey").as("k"),
-            col("o_custkey").as("ck"))
-          .writeTo(s"$cat.lake.ord").append()
-        cat
-      })
-    }
-
-  /** q161: STORAGE-PARTITIONED JOIN — the r13 verdict's item 2: two
-    * z-tables bucketed on the same key (`bucket(16, orderkey)`; rows
-    * route by pmod at write time, per-file bucket ids ride the
-    * manifest) join fact-to-fact with ZERO exchange — the scan reports
-    * `KeyGroupedPartitioning` from the recorded layout and Spark's
-    * planner aligns the two sides bucket-by-bucket (Iceberg's SPJ).
-    * At 100 TB this is the single biggest avoidable shuffle in a
-    * star/fact-fact schema: co-clustered tables never move. The merge
-    * hint forces the sort-merge path (a broadcast would also avoid the
-    * shuffle, but for the wrong reason at demo scale); the
-    * no-exchange plan and the planted-shuffle positive are pinned in
-    * ZBatchPlanSpec. Oracle = the plain join, so a row misrouted to
-    * the wrong bucket (the silent SPJ failure mode) hash-fails. */
-  val q161ZTableSpjJoin: Q = Q(
-    "q161_ztable_spj_join",
-    """SELECT o.o_custkey AS ck, CAST(COUNT(*) AS BIGINT) AS n_items,
-      |  CAST(SUM(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-      |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-      |GROUP BY 1 ORDER BY 1""".stripMargin,
-  ) { (s, d) =>
-    val cat = spjCatalogFor(s, d)
-    // idempotent under the entrypoints' standing default (session
-    // builders set it); kept because the frame is LAZY — confs read at
-    // action time, so a save/restore here would un-set it before the
-    // join ever runs — and a foreign session should still get the
-    // exchange-free plan
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.table(s"$cat.lake.li").hint("merge")
-      .join(s.table(s"$cat.lake.ord"), "k")
-      .groupBy(col("ck"))
-      .agg(count(lit(1)).cast("long").as("n_items"),
-        sum(col("qty")).cast("long").as("sum_qty"))
-      .orderBy(col("ck"))
-  }
-
-  /** q162: STREAMING row-level CDF — q160's change feed consumed as a
-    * STREAM (`.readStream.format("graft-zcdf").option("changeFeed",
-    * "true")`, Delta's streaming readChangeFeed): offsets walk the same
-    * feed-coordinate chain ([[feedSteps]]) one coordinate per trigger
-    * (`maxVersionsPerTrigger=1` — a DML transition counts as one), so
-    * the stream CROSSES the UPDATE and MERGE epochs instead of dying
-    * with full-refresh, delivering `_change_type` rows whose union over
-    * the bounded run equals the batch feed exactly. Oracle = q160's
-    * algebraic change set (batch boundaries don't change content; the
-    * wire's `_epoch`/`_ver` ARE the commit coordinates). Restart
-    * resume, per-trigger batching and the no-record refusal are pinned
-    * in StreamingSpec. */
-  val q162ZcdfStreamDml: Q = Q(
-    "q162_zcdf_stream_dml",
-    """WITH b AS (SELECT MIN(doc_id) AS dmn, MAX(doc_id) AS dmx
-      |  FROM documents),
-      |d AS (SELECT doc_id, lang, n_chars FROM documents)
-      |SELECT * FROM (
-      |  SELECT doc_id, lang, n_chars, 'insert' AS change_type,
-      |    CAST(0 AS BIGINT) AS commit_epoch,
-      |    CAST(1 AS BIGINT) AS commit_version
-      |  FROM d WHERE doc_id % 10 = 9
-      |  UNION ALL
-      |  SELECT doc_id, lang, n_chars, 'insert', 0, 0 FROM d
-      |  WHERE doc_id % 10 != 9
-      |  UNION ALL
-      |  SELECT doc_id, lang, n_chars, 'update_preimage', 1, 0
-      |  FROM d, b WHERE doc_id BETWEEN b.dmn + (b.dmx-b.dmn)*2//10
-      |                             AND b.dmn + (b.dmx-b.dmn)*3//10
-      |  UNION ALL
-      |  SELECT doc_id, lang, n_chars + 1000, 'update_postimage', 1, 0
-      |  FROM d, b WHERE doc_id BETWEEN b.dmn + (b.dmx-b.dmn)*2//10
-      |                             AND b.dmn + (b.dmx-b.dmn)*3//10
-      |  UNION ALL
-      |  SELECT doc_id, lang, n_chars, 'update_preimage', 2, 0
-      |  FROM d, b WHERE doc_id BETWEEN b.dmn + (b.dmx-b.dmn)*5//10
-      |                             AND b.dmn + (b.dmx-b.dmn)*6//10
-      |  UNION ALL
-      |  SELECT doc_id, lang, n_chars + 7, 'update_postimage', 2, 0
-      |  FROM d, b WHERE doc_id BETWEEN b.dmn + (b.dmx-b.dmn)*5//10
-      |                             AND b.dmn + (b.dmx-b.dmn)*6//10
-      |  UNION ALL
-      |  SELECT doc_id + b.dmx + 1, lang, n_chars, 'insert', 2, 0
-      |  FROM d, b WHERE doc_id % 7 = 0
-      |  UNION ALL
-      |  SELECT doc_id, lang, n_chars, 'update_preimage', 3, 0
-      |  FROM d, b WHERE doc_id BETWEEN b.dmn + (b.dmx-b.dmn)*7//10
-      |                             AND b.dmn + (b.dmx-b.dmn)*8//10
-      |  UNION ALL
-      |  SELECT doc_id, lang, n_chars - 3, 'update_postimage', 3, 0
-      |  FROM d, b WHERE doc_id BETWEEN b.dmn + (b.dmx-b.dmn)*7//10
-      |                             AND b.dmn + (b.dmx-b.dmn)*8//10
-      |)
-      |ORDER BY commit_epoch, commit_version, change_type, doc_id""".stripMargin,
-  ) { (s, d) =>
-    val dir = dmlCdfStoreFor(s, d)
-    val out = Files.createTempDirectory("graft-zcdfdml").toString
-    val q = s.readStream.format("graft-zcdf")
-      .option("changeFeed", "true")
-      .option("startingVersion", "earliest")
-      .option("maxVersionsPerTrigger", "1")
-      .load(dir)
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        df.write.mode("overwrite").parquet(s"$out/batch=$id")
-        ()
-      }
-      .option("checkpointLocation", s"$out/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.parquet(s"$out/batch=*")
-      .select(col("doc_id"), col("lang"), col("n_chars"),
-        col(ZcdfStream.ChangeCol).as("change_type"),
-        col(ZcdfStream.EpochCol).as("commit_epoch"),
-        col(ZcdfStream.VerCol).as("commit_version"))
-      .orderBy(col("commit_epoch"), col("commit_version"),
-        col("change_type"), col("doc_id"))
-  }
-
-  /** q164: the CHANGES METADATA TABLE through the catalog NAME (r15 —
-    * the r14 verdict's item 4, Iceberg's metadata-table shape):
-    * `spark.readStream.table("graftz.ns.t.changes")` tails the
-    * row-level change feed across DML epochs with `_change_type` +
-    * commit coordinates — the schema the BASE table's stream cannot
-    * carry lives on its own analyzer-resolved table, so no format+path
-    * incantation is needed. Same wire, offsets and checkpoint-resume as
-    * q162 (the oracle is q162's, reused verbatim — batch membership
-    * never changes content); the batch form (`SELECT * FROM
-    * graftz.ns.t.changes`) and resume-across-new-DML are spec-pinned in
-    * StreamingSpec/SqlSurfaceSpec. */
-  val q164ZChangesTable: Q = Q(
-    "q164_zchanges_table",
-    // content-identical to q162's algebra: the same store, the same
-    // feed, consumed through the table name instead of format+path
-    // (q162 is declared ABOVE — the object-init-order rule)
-    q162ZcdfStreamDml.oracle.get,
-  ) { (s, d) =>
-    val (cat, _) = dmlCdfCatStoreFor(s, d)
-    val out = Files.createTempDirectory("graft-zchtbl").toString
-    val q = s.readStream
-      .option("startingVersion", "earliest")
-      .option("maxVersionsPerTrigger", "2")
-      .table(s"$cat.lake.docs.changes")
-      .writeStream
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        df.write.mode("overwrite").parquet(s"$out/batch=$id")
-        ()
-      }
-      .option("checkpointLocation", s"$out/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.parquet(s"$out/batch=*")
-      .select(col("doc_id"), col("lang"), col("n_chars"),
-        col(ZcdfStream.ChangeCol).as("change_type"),
-        col(ZcdfStream.EpochCol).as("commit_epoch"),
-        col(ZcdfStream.VerCol).as("commit_version"))
-      .orderBy(col("commit_epoch"), col("commit_version"),
-        col("change_type"), col("doc_id"))
-  }
-
-  /** q163's store: documents z-clustered, then TWO disjoint-band DML
-    * statements run CONCURRENTLY (real threads, a start latch) — an
-    * UPDATE over the low 20% of the id space racing a DELETE over the
-    * 60-80% band. Under the r15 optimistic-commit protocol BOTH land in
-    * either order: the loser of the epoch race rebases its prepared
-    * rewrite onto the winner's snapshot (disjoint consumed files), so
-    * no interleaving changes the final state — which is what makes an
-    * EXACT oracle possible for a concurrency test. A conflict (shared
-    * file) would throw [[ConcurrentZRewriteException]] and fail the
-    * query loudly; band geometry (16+ range files, bands 4 file-widths
-    * apart) keeps the sets disjoint. */
-  private val occStores = scala.collection.mutable.Map.empty[String, String]
-
-  private def occStoreFor(s: SparkSession, d: String): String =
-    synchronized {
-      occStores.getOrElseUpdate(d, {
-        val dir = Files.createTempDirectory("graft-zocc-dml").toString
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), col("n_chars"))
-        writeZOrdered(docs, dir, Seq("doc_id"), 16)
-        val b = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
-        val (mn, mx) = (b.getLong(0), b.getLong(1))
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        val gate = new java.util.concurrent.CountDownLatch(1)
-        val fUpd = pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = { gate.await()
-            updateZRange(s, dir,
-              Seq(("doc_id", mn, mn + (mx - mn) * 2 / 10)),
-              Map("n_chars" -> "n_chars + 100000"), Seq("doc_id")) }
-        })
-        val fDel = pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = { gate.await()
-            deleteZRange(s, dir,
-              Seq(("doc_id", mn + (mx - mn) * 6 / 10,
-                mn + (mx - mn) * 8 / 10)), Seq("doc_id")) }
-        })
-        gate.countDown()
-        val (nUpd, nDel) = (fUpd.get(), fDel.get())
-        pool.shutdown()
-        require(nUpd > 0 && nDel > 0,
-          s"q163 store build: both racing statements must land " +
-            s"(updated=$nUpd deleted=$nDel)")
-        dir
-      })
-    }
-
-  /** q163: CONCURRENT DISJOINT DML — the r14 verdict's top item made
-    * oracle-checkable: an UPDATE and a DELETE on disjoint bands race
-    * from two threads with NO store-wide lock (data work fully
-    * concurrent; only the epoch-commit turnstile serializes, and the
-    * second committer REBASES onto the first's epoch). The final table
-    * is interleaving-independent, so the oracle is the plain algebraic
-    * composition — a lost update, resurrected row, double-applied
-    * delete, or clobbered epoch hash-fails. */
-  val q163ZOrderOccDml: Q = Q(
-    "q163_zorder_occ_dml",
-    """WITH b AS (SELECT MIN(doc_id) AS mn, MAX(doc_id) AS mx
-      |  FROM documents)
-      |SELECT d.doc_id, d.lang,
-      |  CASE WHEN d.doc_id <= b.mn + (b.mx-b.mn)*2//10
-      |       THEN d.n_chars + 100000 ELSE d.n_chars END AS n_chars
-      |FROM documents d, b
-      |WHERE NOT (d.doc_id BETWEEN b.mn + (b.mx-b.mn)*6//10
-      |                        AND b.mn + (b.mx-b.mn)*8//10)
-      |ORDER BY d.doc_id""".stripMargin,
-  ) { (s, d) =>
-    val dir = occStoreFor(s, d)
-    readSnapshot(s, dir)
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** q165's store: documents z-clustered on doc_id, then the FULL
-    * column-mapping lifecycle — RENAME the clustering key (doc_id→id)
-    * and a data column (n_chars→chars), DROP source, UPDATE and APPEND
-    * through the new names. Every data file written before the renames
-    * is untouched (metadata-only commits); the final read filters on
-    * the NEW name and prunes via the ORIGINAL physical stats. */
-  private val colmapStores = scala.collection.mutable.Map.empty[String, String]
-
-  private def colmapStoreFor(s: SparkSession, d: String): String =
-    synchronized {
-      colmapStores.getOrElseUpdate(d, {
-        val dir = Files.createTempDirectory("graft-zcolmap-q").toString
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-        writeZOrdered(docs, dir, Seq("doc_id"), 8)
-        val before = listDataFiles(s, dir)
-        renameColumn(s, dir, "n_chars", "chars")
-        renameColumn(s, dir, "doc_id", "id")
-        dropColumn(s, dir, "source")
-        require(listDataFiles(s, dir) == before,
-          "q165 store build: a rename/drop touched a data file — the " +
-            "metadata-only contract broke")
-        val mn = docs.agg(min(col("doc_id"))).head().getLong(0)
-        val nUpd = updateZRange(s, dir, Seq(("id", mn, mn + 49L)),
-          Map("chars" -> "chars + 1000"), Seq("id"))
-        require(nUpd > 0, s"q165 store build: update landed $nUpd rows")
-        appendZOrdered(Tables.documents(s, d)
-          .filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 1000000L).as("id"), col("lang"),
-            col("n_chars").as("chars")),
-          dir, Seq("id"), 1)
-        dir
-      })
-    }
-
-  /** q165: COLUMN MAPPING — `ALTER TABLE RENAME/DROP COLUMN` as
-    * metadata-only commits (Delta's column mapping): stable physical
-    * names stay on every file, stat row and bloom sidecar; the logical
-    * surface (schemas, predicates, SET expressions, appends) speaks the
-    * new names. The exact oracle reproduces the lifecycle algebraically
-    * over the raw table — a broken translation plane (stale name, lost
-    * column, mis-pruned file, resurrected dropped column) hash-fails. */
-  val q165ZOrderColumnMap: Q = Q(
-    "q165_zorder_column_map",
-    """WITH b AS (SELECT MIN(doc_id) AS mn FROM documents),
-      |base AS (
-      |  SELECT d.doc_id AS id, d.lang,
-      |    CASE WHEN d.doc_id <= b.mn + 49 THEN d.n_chars + 1000
-      |         ELSE d.n_chars END AS chars
-      |  FROM documents d, b),
-      |appended AS (
-      |  SELECT doc_id + 1000000 AS id, lang, n_chars AS chars
-      |  FROM documents WHERE doc_id % 10 = 0)
-      |SELECT id, lang, chars FROM base
-      |UNION ALL SELECT id, lang, chars FROM appended
-      |ORDER BY id""".stripMargin,
-  ) { (s, d) =>
-    val dir = colmapStoreFor(s, d)
-    readZRange(s, dir, Seq(("id", 0L, 2000000L)))
-      .select(col("id"), col("lang"), col("chars"))
-      .orderBy(col("id"))
-  }
-
-  /** q166's store: documents with an INT and a FLOAT column, then TYPE
-    * WIDENING both ways it can arrive — an explicit `widenColumn`
-    * (ALTER COLUMN TYPE) on the int column, and an APPEND whose batch
-    * already carries the wider types (the union promotes). The appended
-    * values exceed Int range, so a fake widening (decode truncation)
-    * cannot pass the hash check; old INT32/FLOAT files widen at decode. */
-  private val widenStores = scala.collection.mutable.Map.empty[String, String]
-
-  private def widenStoreFor(s: SparkSession, d: String): String =
-    synchronized {
-      widenStores.getOrElseUpdate(d, {
-        val dir = Files.createTempDirectory("graft-zwiden-q").toString
-        val docs = Tables.documents(s, d)
-        writeZOrdered(docs.select(col("doc_id"),
-          col("n_chars").cast("int").as("nc"),
-          col("n_chars").cast("float").as("fsc")), dir, Seq("doc_id"), 4)
-        widenColumn(s, dir, "nc", org.apache.spark.sql.types.LongType)
-        appendZOrdered(docs.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"),
-            (col("n_chars") + 3000000000L).as("nc"),
-            (col("n_chars") * 1.5).as("fsc")), dir, Seq("doc_id"), 1)
-        dir
-      })
-    }
-
-  /** q166: TYPE WIDENING — INT→BIGINT / FLOAT→DOUBLE as metadata-only
-    * evolution (Delta 3.x / Iceberg parity): the recorded schema
-    * promotes; files written before the promotion keep INT32/FLOAT
-    * physical pages and widen at decode. Beyond-Int-range appended
-    * values and exact float→double promotion make the oracle
-    * truncation-sensitive. */
-  val q166ZOrderTypeWidening: Q = Q(
-    "q166_zorder_type_widening",
-    """WITH base AS (
-      |  SELECT doc_id AS id,
-      |    CAST(CAST(n_chars AS INTEGER) AS BIGINT) AS nc,
-      |    CAST(CAST(n_chars AS FLOAT) AS DOUBLE) AS fsc
-      |  FROM documents),
-      |appended AS (
-      |  SELECT doc_id + 1000000 AS id, n_chars + 3000000000 AS nc,
-      |    n_chars * 1.5 AS fsc
-      |  FROM documents WHERE doc_id % 10 = 0)
-      |SELECT id, nc, fsc FROM base
-      |UNION ALL SELECT id, nc, fsc FROM appended
-      |ORDER BY id""".stripMargin,
-  ) { (s, d) =>
-    val dir = widenStoreFor(s, d)
-    readSnapshot(s, dir)
-      .select(col("doc_id").as("id"), col("nc"), col("fsc"))
-      .orderBy(col("id"))
-  }
-
-  val all: Seq[Q] = Seq(q123ZOrderRead, q132ZOrderStreamIngest,
-    q133ZOrderDelete, q134ZOrderTimeTravel, q136ZOrderChangeFeed,
-    q137ZOrderIvm, q138ZOrderMerge, q139ZOrderCount, q140ZcdfStream,
-    q141ZOrderCdcMerge, q142ZOrderPoint, q143ZcdfIvm, q144ZOrderMinMax,
-    q145ZOrderHistory, q146ZOrderRestore, q147ZOrderUpdate,
-    q148ZBatchTable, q149ZOrderConstraints, q150ZBatchWrite,
-    q151ZBatchCreate, q152ZStreamSink, q153ZBatchAgg, q154ZOrderSqlDml,
-    q155ZTableStream, q156ZTableStreamWrite, q157ZTableChanges,
-    q158ZTableReplaceWhere, q159ZTableRuntimePrune, q160ZOrderDmlCdf,
-    q161ZTableSpjJoin, q162ZcdfStreamDml, q163ZOrderOccDml,
-    q164ZChangesTable, q165ZOrderColumnMap, q166ZOrderTypeWidening)
 }

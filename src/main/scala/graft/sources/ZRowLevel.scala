@@ -37,7 +37,7 @@ class ZRowLevelOperation(path: String, cmd: RowLevelOperation.Command)
   /** Set by the scan at plan time; consumed by the write's commit:
     * (scanned snapshot, affected files, recorded schema). */
   @volatile private[sources] var planned
-      : Option[(ZOrder.ZSnapshot, Seq[String], StructType)] = None
+      : Option[(ZLog.ZSnapshot, Seq[String], StructType)] = None
 
   /** Flipped by the write's commit the instant it reads [[planned]] —
     * after that, the replacement target is FIXED, and any further

@@ -21,8 +21,8 @@ class SourcesSpec extends SparkSpec {
   test("JSON roundtrip with explicit schema (R1/R5 document form)") {
     val nation = Tables.nation(spark, sfDir)
     val path = tmp("graft-json")
-    Sources.writeJson(nation, path)
-    val back = Sources.readJson(spark, path, nation.schema)
+    nation.write.mode("overwrite").json(path)
+    val back = spark.read.schema(nation.schema).json(path)
     assert(rows(back) == rows(nation))
   }
 
@@ -30,8 +30,8 @@ class SourcesSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir)
       .select($"doc_id", $"text", $"lang")
     val path = tmp("graft-json-docs")
-    Sources.writeJson(docs, path)
-    val back = Sources.readJson(spark, path, docs.schema)
+    docs.write.mode("overwrite").json(path)
+    val back = spark.read.schema(docs.schema).json(path)
     assert(rows(back) == rows(docs))
   }
 
@@ -45,7 +45,12 @@ class SourcesSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.StringType)))
-    val df = Sources.readJsonPermissive(spark, dir.toString, schema).cache()
+    val df = spark.read
+      .schema(schema.add("_corrupt_record",
+        org.apache.spark.sql.types.StringType))
+      .option("mode", "PERMISSIVE")
+      .option("columnNameOfCorruptRecord", "_corrupt_record")
+      .json(dir.toString).cache()
     val good = df.filter($"_corrupt_record".isNull)
       .select($"id", $"v").as[(Long, String)].collect().toSet
     val bad = df.filter($"_corrupt_record".isNotNull)
@@ -58,8 +63,9 @@ class SourcesSpec extends SparkSpec {
   test("CSV roundtrip with explicit schema + header") {
     val region = Tables.region(spark, sfDir)
     val path = tmp("graft-csv")
-    Sources.writeCsv(region, path)
-    val back = Sources.readCsv(spark, path, region.schema)
+    region.write.mode("overwrite").option("header", "true").csv(path)
+    val back = spark.read.schema(region.schema)
+      .option("header", "true").csv(path)
     assert(rows(back) == rows(region))
   }
 
@@ -67,8 +73,8 @@ class SourcesSpec extends SparkSpec {
     val lineitem = Tables.lineitem(spark, sfDir)
       .select($"l_orderkey", $"l_quantity", $"l_discount")
     val path = tmp("graft-orc")
-    Sources.writeOrc(lineitem, path)
-    val back = Sources.readOrc(spark, path)
+    lineitem.write.mode("overwrite").orc(path)
+    val back = spark.read.orc(path)
     assert(rows(back) == rows(lineitem))
     // the scan-side scale levers must survive the format swap: the filter
     // reaches the ORC reader as a search argument and the projection
@@ -91,10 +97,10 @@ class SourcesSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir)
       .select($"doc_id", $"lang", $"n_chars", $"text")
     val path = tmp("graft-xml")
-    Sources.writeXml(docs, path, rowTag = "doc")
+    docs.write.mode("overwrite").option("rowTag", "doc").xml(path)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id BIGINT, lang STRING, n_chars BIGINT, text STRING")
-    val back = Sources.readXml(spark, path, schema, rowTag = "doc")
+    val back = spark.read.schema(schema).option("rowTag", "doc").xml(path)
       .select($"doc_id", $"lang", $"n_chars", $"text")
     assert(rows(back) == rows(docs))
     // no pushdown promises for XML: it is read-once-then-go-columnar;
@@ -106,7 +112,7 @@ class SourcesSpec extends SparkSpec {
   test("partitioned parquet write prunes to one partition directory") {
     val events = Tables.events(spark, sfDir)
     val path = tmp("graft-part")
-    Sources.writePartitioned(events, path, "event_type")
+    events.write.mode("overwrite").partitionBy("event_type").parquet(path)
     val pruned = spark.read.parquet(path).filter($"event_type" === "purchase")
     assert(pruned.count() ==
       events.filter($"event_type" === "purchase").count())
@@ -131,7 +137,8 @@ class SourcesSpec extends SparkSpec {
       java.nio.file.Files.write(java.nio.file.Paths.get(dir, name),
         bytes.getBytes("UTF-8"))
     }
-    val imgs = Sources.readBinaryFiles(spark, dir, "*.img")
+    val imgs = spark.read.format("binaryFile")
+      .option("pathGlobFilter", "*.img").load(dir)
       .select($"path", $"length", $"content")
       .collect()
       .map(r => new java.io.File(new java.net.URI(r.getString(0)).getPath).getName ->
@@ -145,7 +152,8 @@ class SourcesSpec extends SparkSpec {
   test("range-sharded export: disjoint sorted shards, globally ordered in file order") {
     val docs = Tables.documents(spark, sfDir).select($"doc_id", $"n_chars")
     val path = tmp("graft-shards")
-    Sources.writeRangeSharded(docs, path, "doc_id", numShards = 4)
+    docs.repartitionByRange(4, $"doc_id").sortWithinPartitions("doc_id")
+      .write.mode("overwrite").option("maxRecordsPerFile", 0L).parquet(path)
     val files = new java.io.File(path).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.toString).sorted
     assert(files.length == 4, s"expected 4 shard files, got ${files.length}")

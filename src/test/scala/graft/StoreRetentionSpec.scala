@@ -126,7 +126,7 @@ class StoreRetentionSpec extends SparkSpec {
   test("z-store ingest loop: sweep bounds metadata; marker-missed replay absorbed by the tag; out-of-window refuses") {
     val root = Files.createTempDirectory("graft-ret-z").toString
     for (id <- 0L until 6L)
-      graft.sources.ZOrder.ingestBatch(spark, root, docBatch(id), id,
+      graft.sources.ZQueries.ingestBatch(spark, root, docBatch(id), id,
         0L, 1000L)
     val (wm, _) = StoreMaint.retentionSweep(spark, root, keepLast = 2)
     assert(wm == 4L)
@@ -134,7 +134,7 @@ class StoreRetentionSpec extends SparkSpec {
     def dataDirs(): Int = store.listFiles().count(_.getName.startsWith("d-"))
     val pre = dataDirs()
     // in-window replay: the marker skips the batch wholesale
-    graft.sources.ZOrder.ingestBatch(spark, root, docBatch(5L), 5L,
+    graft.sources.ZQueries.ingestBatch(spark, root, docBatch(5L), 5L,
       0L, 1000L)
     assert(dataDirs() == pre, "in-window replay re-appended")
     // marker-missed window (crash after the manifest commit, before the
@@ -142,13 +142,13 @@ class StoreRetentionSpec extends SparkSpec {
     // re-append — the fifth store's two-layer exactly-once
     new java.io.File(root, "applied/5").delete()
     new java.io.File(root, "applied/.5.crc").delete()
-    graft.sources.ZOrder.ingestBatch(spark, root, docBatch(5L), 5L,
+    graft.sources.ZQueries.ingestBatch(spark, root, docBatch(5L), 5L,
       0L, 1000L)
     assert(dataDirs() == pre,
       "tag failed to absorb a marker-missed z-append replay")
     // out-of-window replay refuses before touching the store
     intercept[IllegalStateException] {
-      graft.sources.ZOrder.ingestBatch(spark, root, docBatch(1L), 1L,
+      graft.sources.ZQueries.ingestBatch(spark, root, docBatch(1L), 1L,
         0L, 1000L)
     }
     assert(dataDirs() == pre)

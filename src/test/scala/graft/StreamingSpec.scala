@@ -1322,7 +1322,7 @@ class StreamingSpec extends SparkSpec {
   test("q141 merge-ingest batch replay: marker skip and tag no-op keep the store exact") {
     import java.nio.file.Files
     import org.apache.spark.sql.functions.{concat, lit}
-    import graft.sources.ZOrder
+    import graft.sources.{ZOrder, ZQueries}
     val root = Files.createTempDirectory("graft-zcdc-replay").toString
     val docs = spark.range(50).select(col("id").as("doc_id"),
       concat(lit("l"), col("id") % 3).as("lang"), (col("id") * 10).as("n_chars"))
@@ -1330,16 +1330,16 @@ class StreamingSpec extends SparkSpec {
     val batch = spark.range(0, 50, 7).select(col("id").as("doc_id"),
       concat(lit("l"), col("id") % 3).as("lang"),
       (col("id") * 10 + 1000).as("n_chars"), lit(0L).as("version"))
-    ZOrder.mergeIngestBatch(spark, root, batch, 0L)
+    ZQueries.mergeIngestBatch(spark, root, batch, 0L)
     val snap1 = ZOrder.readSnapshot(spark, s"$root/store")
       .orderBy(col("doc_id")).collect().toSeq
     // replay with the marker present: wholesale skip
-    ZOrder.mergeIngestBatch(spark, root, batch, 0L)
+    ZQueries.mergeIngestBatch(spark, root, batch, 0L)
     // marker lost, tag present (the crash-between window): merge no-ops
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$root/applied/0"), true)
-    ZOrder.mergeIngestBatch(spark, root, batch, 0L)
+    ZQueries.mergeIngestBatch(spark, root, batch, 0L)
     val snap2 = ZOrder.readSnapshot(spark, s"$root/store")
       .orderBy(col("doc_id")).collect().toSeq
     assert(snap1 == snap2, "replayed batch mutated the store")
@@ -1350,7 +1350,7 @@ class StreamingSpec extends SparkSpec {
   test("zcdf streaming IVM: restart folds only NEW versions; view states stay coordinate-exact") {
     import java.nio.file.Files
     import org.apache.spark.sql.functions.{concat, count, lit, sum => fsum}
-    import graft.sources.ZOrder
+    import graft.sources.{ZOrder, ZQueries}
     val store = Files.createTempDirectory("graft-zivm-store").toString
     val root = Files.createTempDirectory("graft-zivm-root").toString
     def slice(a: Long, b: Long) = spark.range(a, b).select(
@@ -1364,7 +1364,7 @@ class StreamingSpec extends SparkSpec {
         .load(store)
         .writeStream
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
-          ZOrder.ivmBatch(spark, root, df, id)
+          ZQueries.ivmBatch(spark, root, df, id)
           ()
         }
         .option("checkpointLocation", s"$root/ckpt")

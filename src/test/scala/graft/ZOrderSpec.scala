@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
-import graft.sources.ZOrder
+import graft.sources.{ZLog, ZOrder, ZQueries}
 
 /** A FileSystem that records every `listStatus` target: the detector
   * behind the z-store read-path contract "the data directories are never
@@ -1952,7 +1952,7 @@ class ZOrderSpec extends SparkSpec {
     // empty change set — existence is the walk's contract)
     new java.io.File(dir, "_zchanges/e1").mkdirs()
     graft.sources.Lease.withLeaseHandle(spark, dir, "spec") { h =>
-      ZOrder.recoverLostRollforwards(spark, dir, h)
+      ZLog.recoverLostRollforwards(spark, dir, h)
     }
     assert(ZOrder.readSnapshot(spark, dir).count() == 1100,
       "recovery should have rolled the late append into e1")
@@ -2116,7 +2116,7 @@ class ZOrderSpec extends SparkSpec {
     // batch 0 spans versions 0 and 2 — version 1's claimant crashed, so
     // the number was skipped and view/v1 will never exist (the r10
     // advisor finding: view/v(ver-1) is not a resolvable path)
-    ZOrder.ivmBatch(spark, root,
+    ZQueries.ivmBatch(spark, root,
       mk(("en", 10L, 0L), ("fr", 5L, 0L), ("en", 7L, 2L)), 0L)
     assert(new java.io.File(root, "view/v0").exists())
     assert(!new java.io.File(root, "view/v1").exists())
@@ -2127,7 +2127,7 @@ class ZOrderSpec extends SparkSpec {
     assert(v2 == Map("en" -> 2L, "fr" -> 1L), v2.toString)
     // batch 1 carries version 5 only: the previous state resolves to the
     // HIGHEST existing view below it (v2), not the nonexistent v4
-    ZOrder.ivmBatch(spark, root, mk(("fr", 3L, 5L)), 1L)
+    ZQueries.ivmBatch(spark, root, mk(("fr", 3L, 5L)), 1L)
     val v5 = spark.read.parquet(s"$root/view/v5")
       .orderBy(col("lang")).as[(String, Long, Long)].collect().toSeq
     assert(v5 == Seq(("en", 2L, 17L), ("fr", 2L, 8L)), v5.toString)
@@ -2136,7 +2136,7 @@ class ZOrderSpec extends SparkSpec {
       .select(col("ver")).distinct().as[Long].collect().sorted.toSeq
     assert(outVers == Seq(0L, 2L, 5L))
     // replayed batch: the marker short-circuits it
-    ZOrder.ivmBatch(spark, root, mk(("en", 999L, 0L)), 0L)
+    ZQueries.ivmBatch(spark, root, mk(("en", 999L, 0L)), 0L)
     assert(spark.read.parquet(s"$root/view/v0")
       .filter(col("lang") === "en").head().getAs[Long]("sum_chars") == 10L)
   }
@@ -2327,7 +2327,7 @@ class ZOrderSpec extends SparkSpec {
     val (dir, _) = lostAppendStore() // e1 rebase=(0,0); v1 lives in e0
     new java.io.File(dir, "_zchanges/e1").mkdirs()
     graft.sources.Lease.withLeaseHandle(spark, dir, "spec") { h =>
-      ZOrder.recoverLostRollforwards(spark, dir, h)
+      ZLog.recoverLostRollforwards(spark, dir, h)
     }
     assert(ZOrder.readSnapshot(spark, dir).count() == 1100)
     // SECOND swap: a rewrite of e1 that resolved its base BEFORE the
@@ -2344,7 +2344,7 @@ class ZOrderSpec extends SparkSpec {
     assert(ZOrder.readSnapshot(spark, dir).count() == 1000,
       "surgery failed: the second swap should hide the rolled copy")
     graft.sources.Lease.withLeaseHandle(spark, dir, "spec") { h =>
-      ZOrder.recoverLostRollforwards(spark, dir, h)
+      ZLog.recoverLostRollforwards(spark, dir, h)
     }
     assert(ZOrder.readSnapshot(spark, dir).count() == 1100,
       "recovery should have rolled the copy into e2")

@@ -308,7 +308,7 @@ class ZBatchPlanSpec extends SparkSpec {
     // a store that gains the bucketing policy AFTER unbucketed history
     ZOrder.writeZOrdered(spark.range(1000)
       .select(col("id").as("k"), (col("id") * 2).as("v")), dir, Seq("k"), 4)
-    ZOrder.recordBucketing(spark, dir, "k", 8)
+    ZLog.recordBucketing(spark, dir, "k", 8)
     ZOrder.appendZOrdered(spark.range(1000, 1200)
       .select(col("id").as("k"), (col("id") * 2).as("v")), dir, Seq("k"), 4)
     val prevBucketing = spark.conf.getOption(V2Bucketing)
@@ -335,7 +335,7 @@ class ZBatchPlanSpec extends SparkSpec {
       // a fully-bucketed store DOES group — and stops when the key is
       // projected away, when the conf is off, and on a LIMIT scan
       val dir2 = Files.createTempDirectory("graft-spjfall2").toString
-      ZOrder.recordBucketing(spark, dir2, "k", 4)
+      ZLog.recordBucketing(spark, dir2, "k", 4)
       ZOrder.writeZOrdered(spark.range(100)
         .select(col("id").as("k"), (col("id") * 2).as("v")),
         dir2, Seq("k"), 4)
